@@ -13,7 +13,7 @@ A from-scratch re-expression of the capabilities of
   deterministic tokenizer — :mod:`deces_dataprep_spark.functions.analyze`;
 * the inverted index ES builds implicitly, built explicitly with
   DataFrame shuffles (SPIMI per partition, salted repartition, sort-merge,
-  delta-gap + varint block compression) — :mod:`deces_dataprep_spark.index`;
+  128-doc array blocks with block-max bounds) — :mod:`deces_dataprep_spark.index`;
 * BM25 (k1=1.2, b=0.75, Lucene idf) top-k via block-max WAND,
   rank-identical to a plain Spark-SQL oracle —
   :mod:`deces_dataprep_spark.index.wand`;

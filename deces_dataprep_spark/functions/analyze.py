@@ -122,6 +122,15 @@ def tokens_col(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(_JAVA_TOKEN_RX), 0)
 
 
+def token_count_col(col: Column | str) -> Column:
+    """``size(tokens_col(col))`` in one regex pass with no array
+    materialized. It counts over the LOWERED text, as ``tokens_col``
+    does: lowering can change the count (U+0130 İ lowers to i + U+0307,
+    a mark that splits the word)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_count(F.lower(c), F.lit(_JAVA_TOKEN_RX))
+
+
 def norm_keyword_col(col: Column | str) -> Column:
     """Native keyword normalizer (ASCII-exact)."""
     c = F.col(col) if isinstance(col, str) else col

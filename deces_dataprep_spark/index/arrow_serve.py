@@ -8,8 +8,9 @@ parquet files directly — exactly how an ES data node reads its local
 segments — with the same pruning the Spark path gets:
 
 * ``term IN (...)`` is evaluated against parquet row-group statistics
-  (the build sorts postings by term within each file, so each term
-  touches ~1 row group per file);
+  (the build writes postings sorted by (shard, term, block_id) within
+  each file, in row groups of ``builder.POSTINGS_ROW_GROUP_BYTES``, so
+  a term touches ~1 row group per file);
 * the hive ``shard=`` path component is parsed into a column for free.
 
 The reader is handed the snapshot manifest's FILE LIST (not the live
@@ -22,15 +23,46 @@ from __future__ import annotations
 import numpy as np
 
 
+def block_columns(t) -> dict:
+    """Posting-block rows (a pyarrow Table with a ``shard`` column) as
+    the column dict the serving kernels read, sorted (shard, term,
+    block_id). ``doc_gaps``/``tfs`` stay Arrow list arrays — sliceable
+    per term and decoded zero-copy by ``codec.decode_blocks_concat``."""
+    t = t.sort_by([("shard", "ascending"), ("term", "ascending"),
+                   ("block_id", "ascending")])
+
+    def num(name):
+        return t[name].to_numpy()
+
+    return {
+        "shard": num("shard"),
+        "term": t["term"].to_pylist(),
+        "block_id": num("block_id"),
+        "n_docs": num("n_docs"),
+        "first_doc": num("first_doc"),
+        "last_doc": num("last_doc"),
+        "doc_gaps": t["doc_gaps"].combine_chunks(),
+        "tfs": t["tfs"].combine_chunks(),
+        "block_max_tfnorm": num("block_max_tfnorm"),
+    }
+
+
 class ArrowIndexReader:
     """Driver/serving-node reader over a committed snapshot's files."""
 
     def __init__(self, files: dict[str, list[str]]):
         import pyarrow.dataset as ds
 
+        from deces_dataprep_spark.index.codec import require_array_layout
+
         self._ds = ds
         self._post = ds.dataset(files["postings"], format="parquet",
                                 partitioning="hive")
+        if "doc_gaps" in self._post.schema.names:
+            require_array_layout(
+                str(self._post.schema.field("doc_gaps").type),
+                "postings " + (files["postings"][0] if files["postings"]
+                               else "(no files)"))
         self._dict = ds.dataset(files["dictionary"], format="parquet")
         self._norms = ds.dataset(files["norms"], format="parquet")
         self._stats = ds.dataset(files["stats"], format="parquet")
@@ -120,9 +152,8 @@ class ArrowIndexReader:
             self._rg_cache = entries
         return self._rg_cache
 
-    def postings(self, terms: list[str]):
-        """Block rows for the terms, sorted (shard, term, block_id);
-        returned as a dict of numpy/py lists keyed by column. Reads only
+    def postings(self, terms: list[str]) -> dict:
+        """Block rows for the terms as :func:`block_columns`. Reads only
         the row groups whose term range matches (see _rg_index)."""
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -139,26 +170,11 @@ class ArrowIndexReader:
                 tabs.append(t.append_column(
                     "shard", pa.array([shard] * t.num_rows, pa.int32())))
         if not tabs:
-            empty = np.empty(0, "int64")
-            return {"shard": empty, "term": [], "block_id": empty,
-                    "n_docs": empty, "first_doc": empty, "last_doc": empty,
-                    "doc_gaps": [], "tfs": [],
-                    "block_max_tfnorm": np.empty(0, "float64")}
-        t = pa.concat_tables(tabs)
-        t = t.sort_by([("shard", "ascending"), ("term", "ascending"),
-                       ("block_id", "ascending")])
-        return {
-            "shard": t["shard"].to_numpy(zero_copy_only=False),
-            "term": t["term"].to_pylist(),
-            "block_id": t["block_id"].to_numpy(zero_copy_only=False),
-            "n_docs": t["n_docs"].to_numpy(zero_copy_only=False),
-            "first_doc": t["first_doc"].to_numpy(zero_copy_only=False),
-            "last_doc": t["last_doc"].to_numpy(zero_copy_only=False),
-            "doc_gaps": t["doc_gaps"].to_pylist(),
-            "tfs": t["tfs"].to_pylist(),
-            "block_max_tfnorm": t["block_max_tfnorm"].to_numpy(
-                zero_copy_only=False),
-        }
+            empty = self._post.schema.empty_table()
+            if "shard" not in empty.column_names:
+                empty = empty.append_column("shard", pa.array([], pa.int32()))
+            tabs = [empty]
+        return block_columns(pa.concat_tables(tabs))
 
     def shard_norms(self, shard: int) -> tuple[np.ndarray, np.ndarray]:
         """(sorted doc_id uint64, aligned doc_len float64) for a shard."""

@@ -22,16 +22,17 @@ Architecture — designed for 10^12-doc scale, tested on local[32]:
    which materialized per-bucket arrays (GC-heavy) and needed a second
    shuffle plus a dictionary join.
 
-3. **Streaming numpy encoder.** ``mapInPandas`` consumes the sorted
-   columnar stream: consecutive equal doc_ids within a (shard, term)
-   run collapse to tf (so no separate tf aggregation shuffle), blocks
-   are emitted incrementally as 128 postings accumulate (constant
-   memory per group, whatever the term's df), and each block stores
-   ``block_max_tfnorm = max(tf / (tf + k1(1-b+b·dl/avgdl)))`` — the
-   tf-norm part of BM25. idf is a per-term constant, so factoring it
-   out of the stored bound removes the global-df join from the build
-   entirely; the query side multiplies the bound by idf(df) from the
-   dictionary.
+3. **JVM block pack, no Python node.** The tf fold is a hash aggregate
+   that reuses the posting exchange; a ``row_number`` window buckets
+   each (shard, term) run into 128-doc blocks, and one block-bounded
+   ``collect_list`` aggregate packs each block into ``doc_gaps``/``tfs``
+   arrays (see :mod:`~deces_dataprep_spark.index.codec`). The same
+   aggregate computes ``n_docs``, ``first_doc``, ``last_doc``,
+   ``sum_tf`` and ``block_max_tfnorm = max(tf / (tf +
+   k1(1-b+b·dl/avgdl)))`` — the tf-norm part of BM25. idf is a
+   per-term constant, so factoring it out of the stored bound removes
+   the global-df join from the build entirely; the query side
+   multiplies the bound by idf(df) from the dictionary.
 
 4. **Dictionary from block metadata.** Each block carries ``n_docs``
    and ``sum_tf``, so ``dictionary(term, df, cf)`` is a cheap
@@ -41,8 +42,9 @@ Architecture — designed for 10^12-doc scale, tested on local[32]:
 
 Output tables (written by :mod:`deces_dataprep_spark.snapshots`):
   postings(shard, term, block_id, n_docs, first_doc, last_doc,
-           doc_gaps binary, tfs binary, block_max_tfnorm double,
-           sum_tf long)
+           doc_gaps array<bigint>, tfs array<int>,
+           block_max_tfnorm double, sum_tf long), sorted by
+           (shard, term, block_id) within each file
   dictionary(term, df, cf)
   norms(shard, doc_id, doc_len)
   stats(n_docs, avgdl)
@@ -50,25 +52,31 @@ Output tables (written by :mod:`deces_dataprep_spark.snapshots`):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deces_dataprep_spark.functions.analyze import tokens_col
 from deces_dataprep_spark.index import bm25
-from deces_dataprep_spark.index.codec import BLOCK_SIZE, encode_postings_columnar
+from deces_dataprep_spark.index.codec import BLOCK_SIZE
 
-# block_id is long: salted builds offset it by salt * blocks_per_salt,
-# which exceeds int32 once the doc-id space is web-scale.
+# One row per block (codec module docstring): ``doc_gaps`` holds each
+# doc's offset from ``first_doc`` and ``tfs`` the aligned term
+# frequencies. block_id is long: salted builds offset it by
+# salt * blocks_per_salt, which exceeds int32 once the doc-id space is
+# web-scale.
 POSTINGS_SCHEMA = (
     "shard int, term string, block_id long, n_docs int, first_doc long, "
-    "last_doc long, doc_gaps binary, tfs binary, block_max_tfnorm double, "
-    "sum_tf long"
+    "last_doc long, doc_gaps array<bigint>, tfs array<int>, "
+    "block_max_tfnorm double, sum_tf long"
 )
+
+#: target Parquet row-group size of every postings file. Files are
+#: written sorted by (shard, term, block_id), so a row group covers a
+#: narrow term range and a one-term lookup reads about one row group
+#: per file (the serving reader prunes on the footer's term min/max).
+POSTINGS_ROW_GROUP_BYTES = 256 << 10
 
 
 @dataclass
@@ -119,8 +127,8 @@ def term_frequencies(docs: DataFrame, n_shards: int, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """(shard, term, doc_id, tf, dl) — one shuffle, partial-agg, codegen.
 
-    Not on the index-build hot path anymore (the encoder folds tf from
-    the sorted stream); kept as the oracle-checkable tf operator."""
+    Not on the index-build hot path (the build folds tf inside its
+    posting exchange); kept as the oracle-checkable tf operator."""
     toks = docs_with_tokens(docs, text_col, id_col)
     # explode_outer + post-filter, NOT explode: plain explode generates an
     # implicit size(tokens)>0 pre-filter that Catalyst pushes below the
@@ -144,107 +152,6 @@ def dictionary_from_postings(postings: DataFrame) -> DataFrame:
     )
 
 
-class _StreamEncoder:
-    """Streaming block encoder over the sorted (shard, term, doc_id, dl)
-    columnar stream. Carries one open (shard, term) group across Arrow
-    batches; collapses duplicate doc_ids to tf; emits full blocks
-    eagerly (constant memory regardless of a term's df)."""
-
-    def __init__(self, n_docs: int, avgdl: float, block_size: int,
-                 k1: float = bm25.K1, b: float = bm25.B):
-        self.avgdl = avgdl
-        self.block_size = block_size
-        self.k1 = k1
-        self.b = b
-        self.cur: tuple[int, str] | None = None
-        # pending aggregated postings of the open group
-        self.p_ids = np.empty(0, np.uint64)
-        self.p_tfs = np.empty(0, np.uint64)
-        self.p_dls = np.empty(0, np.float64)
-        self.next_block = 0
-        self.prev_last = 0
-        self.out: dict[str, list] = {k: [] for k in (
-            "shard", "term", "block_id", "n_docs", "first_doc", "last_doc",
-            "doc_gaps", "tfs", "block_max_tfnorm", "sum_tf")}
-        self.out_rows = 0
-
-    def _tfnorm(self, tfs: np.ndarray, dls: np.ndarray) -> np.ndarray:
-        t = tfs.astype(np.float64)
-        return t / (t + self.k1 * (1.0 - self.b + self.b * dls / self.avgdl))
-
-    def _emit(self, n: int) -> None:
-        """Encode the first ``n`` pending postings into blocks (vectorized)."""
-        if n == 0:
-            return
-        ids, tfs, dls = self.p_ids[:n], self.p_tfs[:n], self.p_dls[:n]
-        shard, term = self.cur[0], self.cur[1]
-        cols = encode_postings_columnar(ids, tfs, self._tfnorm(tfs, dls),
-                                        self.block_size, self.prev_last,
-                                        self.next_block)
-        k = len(cols["block_id"])
-        if k:
-            o = self.out
-            o["shard"].extend([shard] * k)
-            o["term"].extend([term] * k)
-            o["block_id"].extend(cols["block_id"].tolist())
-            o["n_docs"].extend(cols["n_docs"].tolist())
-            o["first_doc"].extend(cols["first_doc"].tolist())
-            o["last_doc"].extend(cols["last_doc"].tolist())
-            o["doc_gaps"].extend(cols["doc_gaps"])
-            o["tfs"].extend(cols["tfs"])
-            o["block_max_tfnorm"].extend(cols["block_max_score"].tolist())
-            o["sum_tf"].extend(cols["sum_tf"].tolist())
-            self.out_rows += k
-            self.next_block = int(cols["block_id"][-1]) + 1
-            self.prev_last = int(cols["last_doc"][-1])
-        self.p_ids = self.p_ids[n:]
-        self.p_tfs = self.p_tfs[n:]
-        self.p_dls = self.p_dls[n:]
-
-    def _emit_full_blocks(self) -> None:
-        # hold the last pending doc back: its tf may still grow in the
-        # next batch (a doc_id run can span batch boundaries)
-        avail = self.p_ids.size - 1
-        n_full = (avail // self.block_size) * self.block_size
-        self._emit(n_full)
-
-    def close_group(self) -> None:
-        self._emit(self.p_ids.size)
-        self.cur = None
-        self.next_block = 0
-        self.prev_last = 0
-
-    def feed_segment(self, key: tuple, ids: np.ndarray,
-                     tfs: np.ndarray, dls: np.ndarray,
-                     first_block: int = 0) -> None:
-        """One contiguous run of a single group (``(shard, term)`` or
-        ``(shard, term, salt)``): aggregated (unique doc_ids, tf counts,
-        dls), sorted by doc_id. ``first_block`` offsets the group's
-        block_ids (salted builds give each salt range its own id range
-        so block_id order == doc order across the whole term)."""
-        if self.cur is not None and key != self.cur:
-            self.close_group()
-        if self.cur is None:
-            self.cur = key
-            self.next_block = first_block
-        if self.p_ids.size and ids.size and ids[0] == self.p_ids[-1]:
-            # doc run split across batches: merge boundary counts
-            self.p_tfs[-1] += tfs[0]
-            ids, tfs, dls = ids[1:], tfs[1:], dls[1:]
-        self.p_ids = np.concatenate([self.p_ids, ids])
-        self.p_tfs = np.concatenate([self.p_tfs, tfs])
-        self.p_dls = np.concatenate([self.p_dls, dls])
-        self._emit_full_blocks()
-
-    def drain(self) -> pd.DataFrame | None:
-        if not self.out_rows:
-            return None
-        df = pd.DataFrame(self.out)
-        self.out = {k: [] for k in self.out}
-        self.out_rows = 0
-        return df
-
-
 @dataclass
 class SaltSpec:
     """df-skew salting parameters, derived from the corpus:
@@ -262,12 +169,16 @@ class SaltSpec:
     blocks_per_salt: int
     hot: frozenset | None  # None = salt every term (narrow use)
 
-    def salts_np(self, docs: np.ndarray, terms: pd.Series) -> np.ndarray:
-        s = ((docs - np.uint64(self.min_id)) // np.uint64(self.width)) \
-            .astype(np.int64)
-        if self.hot is not None:
-            s = np.where(terms.isin(self.hot).to_numpy(), s, 0)
-        return s
+    def column(self):
+        """The salt of each posting row: its doc-id range for hot terms,
+        0 otherwise. Exact integer division (``div``), not float ``/`` +
+        cast: double rounding near a range boundary would split one
+        (shard, term, salt) group across two ranges."""
+        salt = F.expr(f"(doc_id - {self.min_id}L) div {self.width}L")
+        if self.hot is None:
+            return salt
+        return F.when(F.col("term").isin(sorted(self.hot)), salt) \
+            .otherwise(F.lit(0))
 
 
 def make_salt_spec(min_id: int, max_id: int, n_ranges: int, n_docs: int,
@@ -281,83 +192,19 @@ def make_salt_spec(min_id: int, max_id: int, n_ranges: int, n_docs: int,
     )
 
 
-def _encode_batches(batches: Iterator[pd.DataFrame], n_docs: int, avgdl: float,
-                    block_size: int,
-                    salt: SaltSpec | None = None) -> Iterator[pd.DataFrame]:
-    """Streaming encode of the sorted columnar stream; see
-    :class:`SaltSpec` for the optional hot-term salting. The salt is
-    recomputed from doc_id here (nothing extra rides the shuffle).
-
-    Accepts either the raw per-occurrence stream (one row per token
-    occurrence; duplicate doc runs are collapsed to tf here) or the
-    tf-folded stream (a ``tf`` column, one row per unique (term, doc) —
-    the round-6 default plan: the fold happens JVM-side in the
-    aggregation that reuses the posting exchange, so ~40% fewer rows
-    cross the Arrow boundary). Both yield byte-identical blocks
-    (tested)."""
-    enc = _StreamEncoder(n_docs, avgdl, block_size)
-    for batch in batches:
-        if batch.empty:
-            continue
-        shards = batch["shard"].to_numpy(np.int64)
-        terms = batch["term"].to_numpy()  # object array of str
-        docs = batch["doc_id"].to_numpy(np.int64).astype(np.uint64)
-        dls = batch["dl"].to_numpy(np.float64)
-        tfs = (batch["tf"].to_numpy(np.int64).astype(np.uint64)
-               if "tf" in batch.columns else None)
-        salts = salt.salts_np(docs, batch["term"]) if salt else None
-        # group boundaries on (shard, term[, salt])
-        if batch.shape[0] == 1:
-            seg_starts = np.array([0], dtype=np.int64)
-        else:
-            change = (shards[1:] != shards[:-1]) | (terms[1:] != terms[:-1])
-            if salts is not None:
-                change |= salts[1:] != salts[:-1]
-            seg_starts = np.concatenate(([0], np.flatnonzero(change) + 1))
-        seg_ends = np.concatenate((seg_starts[1:], [batch.shape[0]]))
-        for s0, s1 in zip(seg_starts, seg_ends):
-            d = docs[s0:s1]
-            if salts is None:
-                key: tuple = (int(shards[s0]), terms[s0])
-                first_block = 0
-            else:
-                key = (int(shards[s0]), terms[s0], int(salts[s0]))
-                first_block = int(salts[s0]) * salt.blocks_per_salt
-            if tfs is not None:
-                # pre-folded: (term, doc) unique — feed runs directly
-                enc.feed_segment(key, d, tfs[s0:s1], dls[s0:s1],
-                                 first_block)
-            else:
-                # collapse duplicate doc_ids (sorted) → tf per unique doc
-                runs = np.concatenate(
-                    ([0], np.flatnonzero(d[1:] != d[:-1]) + 1))
-                counts = np.diff(
-                    np.concatenate((runs, [d.size]))).astype(np.uint64)
-                enc.feed_segment(key, d[runs], counts, dls[s0:s1][runs],
-                                 first_block)
-        out = enc.drain()
-        if out is not None:
-            yield out
-    enc.close_group()
-    out = enc.drain()
-    if out is not None:
-        yield out
-
-
 def postings_plan_from_tokens(
     spark: SparkSession,
     toks: DataFrame,
     n_shards: int,
-    n_docs: int,
     avgdl: float,
     block_size: int = BLOCK_SIZE,
     partitions: int | None = None,
     salt: SaltSpec | None = None,
-    layout: str = "packed",
 ) -> DataFrame:
     """The posting-build dataflow over a pre-tokenized projection
-    (``(doc_id, tokens, dl)``) — explode → repartition(shard, term) →
-    sort → streaming encode. Taking tokens (not raw docs) lets callers
+    (``(doc_id, tokens, dl)``) — explode → one exchange on (shard,
+    term[, salt]) → tf fold → sort → JVM block pack
+    (:func:`pack_blocks`). Taking tokens (not raw docs) lets callers
     persist ONE tokenized projection and derive norms, stats, and
     postings from it (single tokenize pass over the corpus).
 
@@ -367,43 +214,12 @@ def postings_plan_from_tokens(
     partitions instead of serializing into one task; WAND/TAAT read
     salted and unsalted indexes identically (tested rank-identical).
     Always restrict to a hot set (``SaltSpec.hot``): salting every term
-    fragments (shard, term) groups into tiny segments — measured ~10×
-    slower than unsalted on a 10k-term Zipf corpus. Requires
+    fragments (shard, term) groups into tiny runs. Requires
     non-negative doc_ids.
-
-    ``layout`` picks how rows cross the Python boundary — both produce
-    BYTE-IDENTICAL postings (tested). Both now fold tf JVM-side inside
-    the one posting exchange (repartition by the partition keys, then a
-    groupBy whose keys extend them — HashPartitioning on a subset of
-    the grouping keys satisfies the aggregation's clustering, so no
-    second exchange), because the JVM→Python boundary costs ~5-8 µs/row
-    REGARDLESS of column width, Arrow batch size, or mapInPandas-vs-
-    mapInArrow (measured again in round 6: a consume-only mapInArrow
-    over the 90M-row sorted stream cost 16 s of the 25 s encode stage),
-    so the one lever is CROSSING FEWER ROWS:
-
-    * ``'packed'`` (default since round 6): after the fold, ONE window
-      pass (row_number + lag over one spec, ordering already satisfied
-      by the fold's sort) buckets postings into 128-doc blocks and a
-      block-BOUNDED ``collect_list`` packs them — the boundary carries
-      ONE ROW PER BLOCK (~410k rows instead of 52M unique postings at
-      400k docs; encode stage 22.4 s → 11.9 s, full noop build 29.3 s
-      → ~15 s). Not the unbounded round-1 compaction this module's
-      header warns about: arrays cap at ``block_size``, no second
-      posting shuffle, no dictionary join; the window buffers one
-      (shard, term, salt) group and spills past
-      ``spark.sql.windowExecBufferSpillThreshold`` — with the fold
-      done by the hash aggregate (not a w_doc window, as the round-5
-      packed experiment did), the remaining buffering measured
-      threshold-insensitive (11.9 s vs 12.1 s with 4M-row buffers).
-    * ``'stream'``: the folded per-posting Arrow stream into the
-      incremental :class:`_StreamEncoder` — zero group buffering at
-      any df; kept as the byte-identity cross-check and the shape the
-      streaming compaction encoder reuses.
 
     Beware same-plan re-execution when benchmarking: Spark reuses
     completed shuffle map stages of an identical plan, so only
-    fresh-plan (cold) timings compare layouts honestly."""
+    fresh-plan (cold) timings compare honestly."""
     # explode_outer + post-filter, NOT explode: plain explode generates an
     # implicit size(tokens)>0 pre-filter that Catalyst pushes below the
     # tokens projection, re-evaluating the whole tokenizer expression a
@@ -416,182 +232,85 @@ def postings_plan_from_tokens(
     ).filter(F.col("term").isNotNull())
     # default posting partitions = 3× the cluster parallelism (scale-
     # adaptive, not a constant): the reduce stage carries the fold +
-    # sort + pack + encode, and 2-4 tasks per core smooths its task-size
-    # tail the way classic shuffle sizing prescribes — measured 11.0 s
-    # (1× slots) → 8.8 s (3×) for the 400k-doc posting job, flat from
-    # 2×-4×, so the multiplier is not a tuned local constant.
+    # sort + pack, and 2-4 tasks per core smooths its task-size tail the
+    # way classic shuffle sizing prescribes — measured 11.0 s (1× slots)
+    # → 8.8 s (3×) for the 400k-doc posting job, flat from 2×-4×.
     n_part = partitions or 3 * spark.sparkContext.defaultParallelism
-    part_keys = [F.col("shard"), F.col("term")]
+    folded = fold_postings(exploded, salt, n_part, F.count(F.lit(1)))
+    return pack_blocks(folded, salt, block_size, avgdl)
+
+
+def fold_postings(rows: DataFrame, salt: SaltSpec | None, n_part: int,
+                  tf=None) -> DataFrame:
+    """Cluster posting rows ``(shard, term, doc_id, dl[, tf])`` by
+    (shard, term[, __salt]) in ONE exchange and sort each run by
+    doc_id — the input :func:`pack_blocks` expects.
+
+    ``tf`` is the fold's aggregate (occurrence count in the build, sum
+    of delta tfs in compaction), or None when the rows are already one
+    per (shard, term, doc). The fold groups by the partition keys plus
+    doc_id: hash partitioning on a subset of the grouping keys satisfies
+    the aggregation's clustering, so it reuses the exchange.
+    ``__salt`` is materialized as a column so the repartition, the fold
+    and :func:`pack_blocks`' window all reference the same attribute."""
+    grp = ["shard", "term"]
     if salt is not None:
-        # exact integer division (`div`), NOT float `/` + cast: double
-        # rounding near an integer boundary would disagree with the
-        # uint64 // in SaltSpec.salts_np and split one (shard, term,
-        # salt) group across two partitions — duplicated first_block /
-        # out-of-order blocks for that term. Both sides must compute
-        # bit-identical salts.
-        salt_col = F.expr(
-            f"(doc_id - {salt.min_id}L) div {salt.width}L")
-        if salt.hot is not None:
-            salt_col = F.when(F.col("term").isin(list(salt.hot)), salt_col) \
-                        .otherwise(F.lit(0))
-        part_keys.append(salt_col)
+        rows = rows.withColumn("__salt", salt.column())
+        grp.append("__salt")
+    rows = rows.repartition(n_part, *grp)
+    if tf is not None:
+        rows = rows.groupBy(*grp, "doc_id").agg(
+            tf.alias("tf"), F.first("dl").alias("dl"))
+    return rows.select(*grp, "doc_id", "tf", "dl") \
+        .sortWithinPartitions(*grp, "doc_id")
+
+
+def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
+                block_size: int, avgdl: float) -> DataFrame:
+    """Pack a folded posting stream (:func:`fold_postings`) into
+    :data:`POSTINGS_SCHEMA` block rows, entirely in the JVM.
+
+    A ``row_number`` window (its ordering already satisfied by the
+    fold's sort) buckets each run into ``block_size``-doc blocks; one
+    aggregate per block collects the block-bounded ``(doc_id, tf)``
+    list and computes the block metadata, with the tf-norm expression
+    in the same operation order as the numpy scorer. The group keys
+    extend the partition keys, so the aggregate reuses the clustering:
+    no second exchange. The offsets from ``first_doc`` are one lambda
+    over the extracted ids array; a lambda that indexed into ``ps``
+    itself would re-extract the array per element (quadratic)."""
     bs = block_size
-    if layout == "stream":
-        # tf-fold INSIDE the one posting exchange (round 6): repartition
-        # by (shard, term[, salt]) first, then groupBy(part_keys ∪
-        # doc_id) — HashPartitioning on a subset of the grouping keys
-        # satisfies the aggregation's clustering requirement, so the
-        # aggregate reuses the exchange (ONE Exchange in the plan,
-        # plan-asserted). The fold collapses duplicate (term, doc)
-        # occurrences to tf JVM-side, so the sort and the JVM→Python
-        # Arrow boundary carry one row per unique posting (~40% fewer
-        # rows on web text; the boundary is the build's dominant cost —
-        # measured 22.4 s → 16.2 s for the encode stage at 400k docs).
-        # The salt expression must be IN the grouping keys when salting
-        # is on, or the subset check fails and Catalyst inserts a second
-        # exchange.
-        folded = (
-            exploded.repartition(n_part, *part_keys)
-            .groupBy(*part_keys, F.col("doc_id"))
-            .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-            .select("shard", "term", "doc_id", "tf", "dl")
-            .sortWithinPartitions("shard", "term", "doc_id")
-        )
-
-        def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            return _encode_batches(batches, n_docs, avgdl, bs, salt)
-
-        return folded.mapInPandas(encode, POSTINGS_SCHEMA)
-    if layout != "packed":
-        raise ValueError(f"unknown postings layout: {layout!r}")
-
-    # Packed layout over the SAME folded stream (round 6): the tf fold
-    # is the exchange-reusing hash aggregate (as above), then ONE
-    # window pass (row_number + lag share a spec; the fold's sort
-    # already satisfies the window ordering) buckets unique postings
-    # into 128-doc blocks and a block-BOUNDED collect_list packs them —
-    # the Arrow boundary then carries ONE ROW PER BLOCK (~410k rows at
-    # 400k docs) instead of one row per posting. __salt is materialized
-    # as a column (monotone in doc_id within (shard, term), so sorting
-    # (shard, term, __salt, doc_id) equals the stream layout's order)
-    # so the repartition, the fold's groupBy and the window specs all
-    # reference the same attribute and the whole chain shares the one
-    # exchange (plan-asserted: 1 Exchange, 2 Sorts — the 52M-row fold
-    # sort plus the 410k-row block re-sort).
-    if salt is not None:
-        base = exploded.withColumn("__salt", part_keys[2])
-        rep_cols = [F.col("shard"), F.col("term"), F.col("__salt")]
-        grp_cols = ["shard", "term", "__salt"]
-    else:
-        # no constant __salt column: it would ride the shuffle for
-        # nothing — the block math below treats absent salt as 0
-        base = exploded
-        rep_cols = [F.col("shard"), F.col("term")]
-        grp_cols = ["shard", "term"]
-    folded = (
-        base.repartition(n_part, *rep_cols)
-        .groupBy(*grp_cols, F.col("doc_id"))
-        .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
-        .sortWithinPartitions(*grp_cols, "doc_id")
-    )
-    return pack_and_encode_folded(folded, salt, bs, avgdl)
-
-
-def pack_and_encode_folded(folded: DataFrame, salt: SaltSpec | None,
-                           block_size: int, avgdl: float) -> DataFrame:
-    """Block-pack + encode a FOLDED posting stream — the shared tail of
-    the packed layout (also reused by the streaming compaction, whose
-    decoded delta rows are already tf-folded). ``folded`` must carry
-    (shard, term[, __salt], doc_id, tf, dl), be clustered by
-    (shard, term[, __salt]) and sorted by (..., doc_id); ``__salt`` is
-    required exactly when ``salt`` is given."""
-    from pyspark.sql import Window
-
-    bs = block_size
-    grp_cols = (["shard", "term", "__salt"] if salt is not None
-                else ["shard", "term"])
-    w_grp = Window.partitionBy(*grp_cols).orderBy("doc_id")
-    rn = F.row_number().over(w_grp)
-    uniq = folded.select(
-        *grp_cols, "doc_id", "tf", "dl",
+    grp = ["shard", "term"] + (["__salt"] if salt is not None else [])
+    rn = F.row_number().over(Window.partitionBy(*grp).orderBy("doc_id"))
+    k1, b = bm25.K1, bm25.B
+    t = F.col("tf").cast("double")
+    tfnorm = t / (t + F.lit(k1) * (F.lit(1.0 - b)
+                                   + F.lit(b) * F.col("dl").cast("double")
+                                   / F.lit(avgdl)))
+    blocks = folded.select(
+        *grp, "doc_id", "tf", "dl",
         ((rn - 1) - ((rn - 1) % bs)).alias("__blk0"),
+    ).groupBy(*grp, "__blk0").agg(
+        F.sort_array(F.collect_list(
+            F.struct("doc_id", F.col("tf").cast("int").alias("tf"))))
+        .alias("ps"),
+        F.count(F.lit(1)).cast("int").alias("n_docs"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
+        F.max(tfnorm).alias("block_max_tfnorm"),
+        F.sum("tf").cast("long").alias("sum_tf"),
     )
-    # group keys extend the partition keys → the aggregate reuses the
-    # existing clustering, no exchange; collect_list is bounded at
-    # block_size elements per group by construction.
-    blocks = uniq.groupBy(*grp_cols, "__blk0").agg(
-        F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl")))
-        .alias("ps"))
-    blocks_per_salt = salt.blocks_per_salt if salt is not None else 0
-    salt_off = (F.col("__salt") * F.lit(blocks_per_salt)
+    salt_off = (F.col("__salt") * F.lit(salt.blocks_per_salt)
                 if salt is not None else F.lit(0))
-    w_blk = Window.partitionBy(*grp_cols).orderBy("__blk0")
-    packed = blocks.select(
+    return blocks.select(
         "shard", "term",
         (salt_off + (F.col("__blk0") / bs).cast("long")).alias("block_id"),
-        F.col("ps.doc_id").alias("ids"),
-        F.col("ps.tf").alias("tfs_arr"),
-        F.col("ps.dl").alias("dls"),
-        # each salt range restarts its gap chain at 0, exactly like the
-        # stream encoder's close_group()
-        F.coalesce(
-            F.lag(F.element_at(F.col("ps.doc_id"), -1)).over(w_blk),
-            F.lit(0),
-        ).alias("prev_last"),
+        "n_docs", "first_doc", "last_doc",
+        F.transform(F.col("ps.doc_id"), lambda x: x - F.col("first_doc"))
+        .alias("doc_gaps"),
+        F.col("ps.tf").alias("tfs"),
+        "block_max_tfnorm", "sum_tf",
     )
-
-    def encode_packed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _encode_packed_batches(batches, avgdl)
-
-    return packed.mapInPandas(encode_packed, POSTINGS_SCHEMA)
-
-
-def _encode_packed_batches(batches: Iterator[pd.DataFrame], avgdl: float,
-                           k1: float = bm25.K1,
-                           b: float = bm25.B) -> Iterator[pd.DataFrame]:
-    """Per-block vectorized encode of the JVM-packed block rows: every
-    input row is one complete block (unique sorted doc_ids, folded tfs,
-    dls, its block_id and the previous block's last doc), so encoding
-    is row-local — one varint pass over the batch's concatenated
-    arrays, byte-identical to the streaming encoder (tested)."""
-    from deces_dataprep_spark.index.codec import _varint_encode_offsets
-
-    for batch in batches:
-        if batch.empty:
-            continue
-        n = len(batch)
-        lens = np.fromiter((len(x) for x in batch["ids"]), np.int64, n)
-        flat_ids = np.concatenate(
-            [np.asarray(x, np.int64) for x in batch["ids"]]).view(np.uint64)
-        flat_tfs = np.concatenate(
-            [np.asarray(x, np.int64) for x in batch["tfs_arr"]]) \
-            .astype(np.uint64)
-        flat_dls = np.concatenate(
-            [np.asarray(x, np.float64) for x in batch["dls"]])
-        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        ends = starts + lens
-        prev = batch["prev_last"].to_numpy(np.int64).view(np.uint64)
-        gaps = np.empty_like(flat_ids)
-        gaps[1:] = flat_ids[1:] - flat_ids[:-1]
-        gaps[starts] = flat_ids[starts] - prev
-        gap_buf, gap_offs = _varint_encode_offsets(gaps)
-        tf_buf, tf_offs = _varint_encode_offsets(flat_tfs)
-        t = flat_tfs.astype(np.float64)
-        tfnorm = t / (t + k1 * (1.0 - b + b * flat_dls / avgdl))
-        yield pd.DataFrame({
-            "shard": batch["shard"].to_numpy(np.int32),
-            "term": batch["term"],
-            "block_id": batch["block_id"].to_numpy(np.int64),
-            "n_docs": lens.astype(np.int32),
-            "first_doc": flat_ids[starts].astype(np.int64),
-            "last_doc": flat_ids[ends - 1].astype(np.int64),
-            "doc_gaps": [gap_buf[gap_offs[s]:gap_offs[e]]
-                         for s, e in zip(starts, ends)],
-            "tfs": [tf_buf[tf_offs[s]:tf_offs[e]]
-                    for s, e in zip(starts, ends)],
-            "block_max_tfnorm": np.maximum.reduceat(tfnorm, starts),
-            "sum_tf": np.add.reduceat(flat_tfs.astype(np.int64), starts),
-        })
 
 
 def hot_terms_by_df(toks: DataFrame, df_threshold: int,
@@ -621,7 +340,7 @@ def hot_terms_by_df(toks: DataFrame, df_threshold: int,
 #: >=10% of all docs dominates its task's runtime).
 AUTO_SALT_DF_FRAC = 0.1
 #: don't bother auto-salting tiny corpora: below this the whole build is
-#: a handful of tasks and salting only fragments encoder groups.
+#: a handful of tasks and salting only fragments block runs.
 AUTO_SALT_MIN_DOCS = 100_000
 
 
@@ -660,7 +379,6 @@ def postings_plan(
     spark: SparkSession,
     docs: DataFrame,
     n_shards: int,
-    n_docs: int,
     avgdl: float,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -672,7 +390,7 @@ def postings_plan(
     """postings_plan_from_tokens over a fresh tokenize of ``docs`` —
     for callers without a reusable tokenized projection."""
     toks = docs_with_tokens(docs, text_col, id_col, tokenizer)
-    return postings_plan_from_tokens(spark, toks, n_shards, n_docs, avgdl,
+    return postings_plan_from_tokens(spark, toks, n_shards, avgdl,
                                      block_size, partitions, salt)
 
 
@@ -698,7 +416,6 @@ def build_index(
     salt_df_threshold: int | None = None,
     salt_sample_frac: float = 0.01,
     auto_salt: bool = True,
-    layout: str = "packed",
 ) -> IndexTables:
     """Build the full index (postings/dictionary/norms/stats) lazily.
 
@@ -725,7 +442,7 @@ def build_index(
     if cache_tokens:
         toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     norms = norms_from_tokens(toks, n_shards)
-    # global stats — tiny; computed eagerly (the encoder needs avgdl);
+    # global stats — tiny; computed eagerly (the block bounds need avgdl);
     # this is also what materializes the token cache.
     stats_row = toks.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"),
@@ -747,9 +464,8 @@ def build_index(
             int(stats_row["min_id"] or 0), int(stats_row["max_id"] or 0),
             block_size, salt_sample_frac,
         )
-    postings = postings_plan_from_tokens(spark, toks, n_shards, n_docs_g,
-                                         avgdl_g, block_size, partitions,
-                                         salt)
+    postings = postings_plan_from_tokens(spark, toks, n_shards, avgdl_g,
+                                         block_size, partitions, salt)
     dictionary = dictionary_from_postings(postings)
     stats_df = spark.createDataFrame(
         [(n_docs_g, avgdl_g)], "n_docs long, avgdl double"

@@ -1,193 +1,59 @@
-"""Posting-list block codec: delta-gap doc_ids + LEB128 varints.
+"""Posting-block layout and its decode entry points.
 
 The reference's Elasticsearch sink stores postings in Lucene FOR/PFor
-blocks (an internal behavioral contract only — nothing to copy). We
-build the equivalent explicitly:
+blocks (an internal behavioral contract only — nothing to copy). Here a
+term's postings are sorted by ``doc_id`` and split into blocks of
+``BLOCK_SIZE`` (128) docs, and each block is one Parquet row of plain
+arrays, packed JVM-side by the builder:
 
-* postings for a term are sorted by ``doc_id`` and split into blocks of
-  ``BLOCK_SIZE`` (128) docs;
-* within a block, doc_ids are delta-gap encoded (first gap is relative
-  to the previous block's last doc, or the raw doc_id for block 0) and
-  the gaps + term frequencies are LEB128-varint packed into ``bytes``;
-* each block carries ``(n_docs, first_doc, last_doc, block_max_score)``
-  — the per-block BM25 upper bound that block-max WAND uses to skip.
+* ``doc_gaps array<bigint>`` — each doc's offset from the block's
+  ``first_doc`` (element 0 is 0), so every block decodes on its own;
+* ``tfs array<int>`` — the term frequencies, aligned;
+* ``(n_docs, first_doc, last_doc, block_max_tfnorm, sum_tf)`` — the
+  metadata block-max WAND skips on.
 
-Everything is numpy-vectorized because encode/decode run inside
-Arrow-batched pandas UDFs on executors (no per-row Python).
+Parquet's own encodings and snappy compress these columns; no Python
+node touches a block on the way in or out. Two decode entry points:
+:func:`decode_blocks_concat` on the driver (numpy, zero-copy over Arrow
+list columns) and :func:`explode_blocks` inside a Spark plan (JVM).
 """
 
 from __future__ import annotations
-
-from typing import NamedTuple
 
 import numpy as np
 
 BLOCK_SIZE = 128
 
-_U7 = np.uint64(7)
-_U0x7F = np.uint64(0x7F)
+
+class RebuildRequired(ValueError):
+    """The postings were written in a layout this version cannot read."""
 
 
-def _varint_encode_offsets(values: np.ndarray | list[int]) -> tuple[bytes, np.ndarray]:
-    """LEB128-encode an array (vectorized); also return the byte offset
-    of each value (length n+1, cumulative) so callers can slice the
-    buffer at arbitrary value boundaries without re-encoding."""
-    vals = np.ascontiguousarray(values, dtype=np.uint64)
-    n = vals.size
-    if n == 0:
-        return b"", np.zeros(1, dtype=np.int64)
-    # bytes needed per value: ceil(bit_length/7), min 1
-    nb = np.ones(n, dtype=np.int64)
-    v = vals >> _U7
-    while v.any():
-        nb += v > 0
-        v >>= _U7
-    offs = np.empty(n + 1, dtype=np.int64)
-    offs[0] = 0
-    np.cumsum(nb, out=offs[1:])
-    buf = np.zeros(offs[-1], dtype=np.uint8)
-    v = vals.copy()
-    pos = offs[:-1].copy()
-    remaining = nb.copy()
-    active = np.arange(n)
-    while active.size:
-        sel_v = v[active]
-        sel_pos = pos[active]
-        cont = remaining[active] > 1
-        buf[sel_pos] = (sel_v & _U0x7F).astype(np.uint8) | (cont.astype(np.uint8) << 7)
-        v[active] = sel_v >> _U7
-        pos[active] = sel_pos + 1
-        remaining[active] -= 1
-        active = active[remaining[active] > 0]
-    return buf.tobytes(), offs
+def require_array_layout(doc_gaps_type: str, source: str) -> None:
+    """Refuse postings whose ``doc_gaps`` column is binary (LEB128
+    varint blocks, the layout before array blocks). There is no
+    conversion path: such an index must be rebuilt from its input."""
+    if doc_gaps_type.lower() == "binary":
+        raise RebuildRequired(
+            f"{source}: postings store doc_gaps as binary varint blocks, "
+            "a layout this version no longer reads — rebuild the index "
+            "(write_index, or re-ingest the stream)")
 
 
-def varint_encode(values: np.ndarray | list[int]) -> bytes:
-    """LEB128-encode an array of non-negative ints (vectorized)."""
-    return _varint_encode_offsets(values)[0]
-
-
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode a LEB128 byte string → uint64 array (vectorized)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    # value index of each byte: 0-based, increments after each end byte
-    val_idx = np.empty(b.size, dtype=np.int64)
-    val_idx[0] = 0
-    np.cumsum(is_end[:-1], out=val_idx[1:])
-    n_vals = int(is_end.sum())
-    # byte position within its value
-    starts = np.flatnonzero(np.concatenate(([True], is_end[:-1])))
-    byte_pos = np.arange(b.size, dtype=np.uint64) - starts[val_idx].astype(np.uint64)
-    contrib = (b & 0x7F).astype(np.uint64) << (_U7 * byte_pos)
-    out = np.zeros(n_vals, dtype=np.uint64)
-    np.add.at(out, val_idx, contrib)
-    return out
-
-
-class PostingBlock(NamedTuple):
-    block_id: int
-    n_docs: int
-    first_doc: int
-    last_doc: int
-    doc_gaps: bytes
-    tfs: bytes
-    block_max_score: float
-    sum_tf: int = 0
-
-
-def encode_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    scores: np.ndarray | None = None,
-    block_size: int = BLOCK_SIZE,
-    prev_last: int = 0,
-    first_block_id: int = 0,
-) -> list[PostingBlock]:
-    """Split a sorted (doc_id, tf[, score]) posting list into encoded blocks.
-
-    ``doc_ids`` must be sorted ascending and unique (uint64-safe range);
-    ``scores`` are the per-posting score contributions (or tf-norm
-    factors), used for ``block_max_score`` (0.0 if not supplied).
-    ``prev_last``/``first_block_id`` let a streaming encoder emit a
-    term's blocks incrementally across calls: pass the previous call's
-    last doc_id and next block_id.
-    """
-    cols = encode_postings_columnar(doc_ids, tfs, scores, block_size,
-                                    prev_last, first_block_id)
-    return [PostingBlock(*row) for row in zip(
-        cols["block_id"], cols["n_docs"], cols["first_doc"], cols["last_doc"],
-        cols["doc_gaps"], cols["tfs"], cols["block_max_score"], cols["sum_tf"],
-    )]
-
-
-def encode_postings_columnar(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    scores: np.ndarray | None = None,
-    block_size: int = BLOCK_SIZE,
-    prev_last: int = 0,
-    first_block_id: int = 0,
-) -> dict[str, list | np.ndarray]:
-    """Vectorized block encoder: ONE varint pass over the whole posting
-    run, block metadata via ``ufunc.reduceat`` — no per-block Python
-    loop except the final byte-buffer slicing. Gap encoding does not
-    reset at block boundaries (each block's first gap is relative to the
-    previous block's last doc), so the gap array is a single ``diff``.
-    """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.uint64)
-    tfs_a = np.ascontiguousarray(tfs, dtype=np.uint64)
-    n = doc_ids.size
-    empty: dict[str, list | np.ndarray] = {
-        "block_id": [], "n_docs": [], "first_doc": [], "last_doc": [],
-        "doc_gaps": [], "tfs": [], "block_max_score": [], "sum_tf": [],
-    }
-    if n == 0:
-        return empty
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_ids[0] - np.uint64(prev_last)
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-    gap_buf, gap_offs = _varint_encode_offsets(gaps)
-    tf_buf, tf_offs = _varint_encode_offsets(tfs_a)
-
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    ends = np.minimum(starts + block_size, n)
-    n_blocks = starts.size
-    bmax = (np.maximum.reduceat(np.asarray(scores, dtype=np.float64), starts)
-            if scores is not None else np.zeros(n_blocks))
-    sum_tf = np.add.reduceat(tfs_a.astype(np.int64), starts)
-    return {
-        "block_id": (first_block_id + np.arange(n_blocks, dtype=np.int64)),
-        "n_docs": (ends - starts).astype(np.int32),
-        "first_doc": doc_ids[starts].astype(np.int64),
-        "last_doc": doc_ids[ends - 1].astype(np.int64),
-        "doc_gaps": [gap_buf[gap_offs[s]:gap_offs[e]] for s, e in zip(starts, ends)],
-        "tfs": [tf_buf[tf_offs[s]:tf_offs[e]] for s, e in zip(starts, ends)],
-        "block_max_score": bmax,
-        "sum_tf": sum_tf,
-    }
-
-
-def decode_block(doc_gaps: bytes, tfs: bytes, prev_last: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block → (doc_ids, tfs); ``prev_last`` is the previous
-    block's last doc_id (0 for block 0)."""
-    gaps = varint_decode(doc_gaps)
-    ids = np.cumsum(gaps, dtype=np.uint64) + np.uint64(prev_last)
-    return ids, varint_decode(tfs)
-
-
-def decode_block_abs(doc_gaps: bytes, tfs: bytes, first_doc: int) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block against its own ``first_doc`` metadata — makes
-    every block self-delimiting (no dependence on the previous block),
-    which matters when block streams from several partial indexes
-    (streaming deltas) are interleaved."""
-    gaps = varint_decode(doc_gaps)
-    ids = np.cumsum(gaps, dtype=np.uint64)
-    if ids.size:
-        ids += np.uint64(first_doc) - ids[0]
-    return ids, varint_decode(tfs)
+def _flat(arrays, dtype) -> np.ndarray:
+    """The blocks' array elements laid end to end: accepts an Arrow list
+    column (sliced or chunked — the values are read zero-copy), a flat
+    numpy array, or a sequence of per-block arrays."""
+    if isinstance(arrays, np.ndarray):
+        return arrays.astype(dtype, copy=False)
+    if hasattr(arrays, "combine_chunks"):  # pyarrow.ChunkedArray
+        arrays = arrays.combine_chunks()
+    if hasattr(arrays, "flatten"):  # pyarrow list array
+        return arrays.flatten().to_numpy(zero_copy_only=False) \
+            .astype(dtype, copy=False)
+    if len(arrays) == 0:
+        return np.empty(0, dtype)
+    return np.concatenate([np.asarray(a, dtype) for a in arrays])
 
 
 def decode_blocks_concat(
@@ -196,40 +62,36 @@ def decode_blocks_concat(
     first_docs,
     n_docs_arr,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY blocks in one vectorized pass → (doc_ids, tfs).
+    """Decode MANY blocks in one vectorized pass → (doc_ids uint64,
+    tfs int64), blocks in the given order.
 
-    Per-block :func:`decode_block_abs` costs ~30µs of fixed numpy
-    overhead per 128-entry block — on a head term (tens of thousands of
-    blocks) that fixed cost dominates serving latency. Concatenating the
-    byte buffers first amortizes it: ONE varint pass over all gaps, one
-    over all tfs, then a segmented cumsum rebase
-    (``ids = csum + repeat(first_doc − csum[block_start], n_docs)``)
-    reproduces decode_block_abs exactly (blocks stay self-delimiting —
-    each is rebased on its own ``first_doc``). Measured ~50× faster than
-    the loop on 44k blocks.
-    """
+    ``doc_gaps_list``/``tfs_list`` are the blocks' arrays (see
+    :func:`_flat` for the accepted shapes); block ``i`` holds
+    ``n_docs_arr[i]`` entries. A doc_id is its block's ``first_doc``
+    plus its offset, so blocks from different terms, shards or delta
+    batches decode together."""
     counts = np.ascontiguousarray(n_docs_arr, dtype=np.int64)
     if counts.size == 0 or int(counts.sum()) == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.uint64)
-    gaps = varint_decode(b"".join(doc_gaps_list))
-    tfs = varint_decode(b"".join(tfs_list))
-    starts = np.empty(counts.size, dtype=np.int64)
-    starts[0] = 0
-    np.cumsum(counts[:-1], out=starts[1:])
-    csum = np.cumsum(gaps, dtype=np.uint64)
-    base = np.ascontiguousarray(first_docs, dtype=np.uint64) - csum[starts]
-    ids = csum + np.repeat(base, counts)
+        return np.empty(0, np.uint64), np.empty(0, np.int64)
+    gaps = _flat(doc_gaps_list, np.int64)
+    tfs = _flat(tfs_list, np.int64)
+    base = np.ascontiguousarray(first_docs, dtype=np.int64)
+    ids = (np.repeat(base, counts) + gaps).view(np.uint64)
     return ids, tfs
 
 
-def decode_postings(blocks: list[PostingBlock]) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a full (ordered) block list → (doc_ids, tfs)."""
-    all_ids: list[np.ndarray] = []
-    all_tfs: list[np.ndarray] = []
-    for blk in sorted(blocks, key=lambda b: b.block_id):
-        ids, t = decode_block_abs(blk.doc_gaps, blk.tfs, blk.first_doc)
-        all_ids.append(ids)
-        all_tfs.append(t)
-    if not all_ids:
-        return np.empty(0, np.uint64), np.empty(0, np.uint64)
-    return np.concatenate(all_ids), np.concatenate(all_tfs)
+def explode_blocks(blocks, *keep: str):
+    """One row per posting, ``(*keep, doc_id long, tf long)``, from a
+    posting-block DataFrame — the JVM decode (a generator over the
+    stored arrays plus one add), shared by compaction and every
+    index-backed Spark route."""
+    from pyspark.sql import functions as F
+
+    return blocks.select(
+        *keep, "first_doc",
+        F.explode(F.arrays_zip("doc_gaps", "tfs")).alias("__p"),
+    ).select(
+        *keep,
+        (F.col("first_doc") + F.col("__p.doc_gaps")).alias("doc_id"),
+        F.col("__p.tfs").cast("long").alias("tf"),
+    )

@@ -206,23 +206,13 @@ class QueryEngine:
         """
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
+            import numpy as np
+
+            from deces_dataprep_spark.index.arrow_serve import block_columns
+
             if self.reader is not None:
                 dfs = self.reader.term_dfs(missing)
                 cols = self.reader.postings(missing)
-                rows = (
-                    {
-                        "shard": int(cols["shard"][i]),
-                        "term": cols["term"][i],
-                        "block_id": int(cols["block_id"][i]),
-                        "n_docs": int(cols["n_docs"][i]),
-                        "first_doc": int(cols["first_doc"][i]),
-                        "last_doc": int(cols["last_doc"][i]),
-                        "doc_gaps": cols["doc_gaps"][i],
-                        "tfs": cols["tfs"][i],
-                        "block_max_tfnorm": float(cols["block_max_tfnorm"][i]),
-                    }
-                    for i in range(len(cols["term"]))
-                )
             else:
                 # ONE Spark job per fetch: df(term) is BY CONSTRUCTION
                 # the sum of the term's block n_docs across shards
@@ -236,36 +226,40 @@ class QueryEngine:
                 # over the few hundred collected block rows — a Spark
                 # orderBy here planned a range-partitioned sort whose
                 # boundary-sampling pass is a SECOND job per cold query
-                # (measured ~2× the cold fetch cost).
-                rows = (
+                # (measured ~2× the cold fetch cost). The rows arrive
+                # as Arrow, so the block arrays are never boxed.
+                cols = block_columns(
                     self.tables.postings.filter(F.col("term").isin(missing))
-                    .collect()
-                )
-                rows.sort(key=lambda r: (r["shard"], r["term"],
-                                         r["block_id"]))
+                    .toArrow())
                 dfs = {}
-                for r in rows:
-                    dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["n_docs"])
+                for t, n in zip(cols["term"], cols["n_docs"].tolist()):
+                    dfs[t] = dfs.get(t, 0) + n
             self._df_cache.update(dfs)
             fetched: dict[str, dict[int, TermPostings]] = {t: {} for t in missing}
-            for r in rows:
-                shard = int(r["shard"])
-                tp = fetched[r["term"]].get(shard)
-                if tp is None:
-                    tp = TermPostings(
-                        term=r["term"], df=dfs[r["term"]], block_ids=[],
-                        n_docs=[], first_docs=[], last_docs=[], doc_gaps=[],
-                        tfs=[], block_max=[],
-                    )
-                    fetched[r["term"]][shard] = tp
-                idf = bm25.idf(tp.df, self.n_docs)
-                tp.block_ids.append(int(r["block_id"]))
-                tp.n_docs.append(int(r["n_docs"]))
-                tp.first_docs.append(int(r["first_doc"]))
-                tp.last_docs.append(int(r["last_doc"]))
-                tp.doc_gaps.append(bytes(r["doc_gaps"]))
-                tp.tfs.append(bytes(r["tfs"]))
-                tp.block_max.append(float(idf) * float(r["block_max_tfnorm"]))
+            # zero-copy flat views of the block arrays; a (shard, term)
+            # run of block rows owns one contiguous slice of them
+            gaps = cols["doc_gaps"].flatten().to_numpy()
+            tfs = cols["tfs"].flatten().to_numpy()
+            elem = np.concatenate(([0], np.cumsum(cols["n_docs"],
+                                                  dtype=np.int64)))
+            shards = cols["shard"].tolist()
+            key = list(zip(shards, cols["term"]))
+            cuts = [i for i in range(1, len(key)) if key[i] != key[i - 1]]
+            for a, b in zip([0] + cuts, cuts + [len(key)]):
+                if a == b:
+                    continue
+                shard, term = key[a]
+                idf = float(bm25.idf(dfs[term], self.n_docs))
+                e0, e1 = elem[a], elem[b]
+                fetched[term][int(shard)] = TermPostings(
+                    term=term, df=dfs[term],
+                    block_ids=cols["block_id"][a:b].tolist(),
+                    n_docs=cols["n_docs"][a:b].tolist(),
+                    first_docs=cols["first_doc"][a:b].tolist(),
+                    last_docs=cols["last_doc"][a:b].tolist(),
+                    doc_gaps=gaps[e0:e1], tfs=tfs[e0:e1],
+                    block_max=(idf * cols["block_max_tfnorm"][a:b]).tolist(),
+                )
             self._term_cache.update(fetched)
         by_shard: dict[int, list[TermPostings]] = {}
         for t in terms:
@@ -536,7 +530,7 @@ def bm25_topk_from_index(
     plan — the cluster-scale path when the candidate set is too large
     for driver-side WAND/TAAT (or when scoring feeds another job):
 
-    postings(term IN q)  →  mapInPandas block decode (executor-side)
+    postings(term IN q)  →  explode(arrays_zip(doc_gaps, tfs)) (JVM)
       → join norms on (shard, doc_id) for dl
       → broadcast df map → score → groupBy(doc) sum → TakeOrderedAndProject
 
@@ -585,10 +579,7 @@ def bm25_scores_from_index(
     (which must sum FULL per-field score sets: truncating per field
     before the sum would drop docs ranked just below k in every single
     field but inside the global top-k)."""
-    import numpy as np
-    import pandas as pd
-
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
+    from deces_dataprep_spark.index.codec import explode_blocks
 
     if n_docs is None or avgdl is None:
         stats = tables.stats.collect()[0]
@@ -596,31 +587,13 @@ def bm25_scores_from_index(
     dfs = _resolve_dfs(tables, terms, dfs)
     if not dfs:
         return spark.createDataFrame([], "doc_id long, score double")
-    idf_map = {t: float(bm25.idf(df, n_docs)) for t, df in dfs.items()}
-
+    idf_map = F.create_map(*[
+        x for t, df in dfs.items()
+        for x in (F.lit(t), F.lit(float(bm25.idf(df, n_docs))))
+    ])
     blocks = tables.postings.filter(F.col("term").isin(terms))
-
-    def decode(batches):
-        # one vectorized decode per Arrow batch (decode_blocks_concat:
-        # every block rebases on its own first_doc, so blocks from
-        # different terms/shards batch together safely)
-        for b in batches:
-            if b.empty:
-                continue
-            counts = b["n_docs"].to_numpy(np.int64)
-            ids, tfs = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                counts,
-            )
-            idfs = np.repeat(
-                np.array([idf_map[t] for t in b["term"]], np.float64), counts
-            )
-            yield pd.DataFrame({"doc_id": ids.astype(np.int64), "idf": idfs,
-                                "tf": tfs.astype(np.int64)})
-
-    decoded = blocks.mapInPandas(decode, "doc_id long, idf double, tf long")
+    decoded = explode_blocks(blocks, "term").select(
+        "doc_id", idf_map[F.col("term")].alias("idf"), "tf")
     with_dl = decoded.join(
         tables.norms.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
     )
@@ -1019,31 +992,10 @@ def _postings_tf_rows(tables: IndexTables, terms: list[str]) -> DataFrame:
     only (parquet pushdown on ``term``) — the term-tagged sibling of
     the anonymous decode in :func:`bm25_scores_from_index`, for routes
     that need per-term combine semantics (cross_fields dis_max)."""
-    import numpy as np
-    import pandas as pd
+    from deces_dataprep_spark.index.codec import explode_blocks
 
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
-
-    blocks = tables.postings.filter(F.col("term").isin(terms))
-
-    def decode(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            counts = b["n_docs"].to_numpy(np.int64)
-            ids, tfs = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                counts,
-            )
-            yield pd.DataFrame({
-                "term": np.repeat(b["term"].to_numpy(), counts),
-                "doc_id": ids.astype(np.int64),
-                "tf": tfs.astype(np.int64),
-            })
-
-    return blocks.mapInPandas(decode, "term string, doc_id long, tf long")
+    return explode_blocks(
+        tables.postings.filter(F.col("term").isin(terms)), "term")
 
 
 def cross_fields_from_index(
@@ -1330,22 +1282,20 @@ def bm25_topk_broadcast(
     if not dfs:
         return spark.createDataFrame([], "doc_id long, score double")
 
-    rows = (
+    t = (
         tables.postings.filter(F.col("term").isin(terms))
         .select("term", "n_docs", "first_doc", "doc_gaps", "tfs")
-        .collect()
+        .toArrow()
     )
-    per_term: dict[str, list] = {}
-    for r in rows:
-        per_term.setdefault(r["term"], []).append(r)
+    ids_all, tfs_all = decode_blocks_concat(
+        t["doc_gaps"], t["tfs"], t["first_doc"].to_numpy(),
+        t["n_docs"].to_numpy())
+    block_term = np.asarray(t["term"].to_pylist(), dtype=object)
+    post_term = np.repeat(block_term, t["n_docs"].to_numpy())
     payload = []
-    for term, rs in per_term.items():
-        ids, tfs = decode_blocks_concat(
-            [bytes(r["doc_gaps"]) for r in rs],
-            [bytes(r["tfs"]) for r in rs],
-            [int(r["first_doc"]) for r in rs],
-            [int(r["n_docs"]) for r in rs],
-        )
+    for term in dict.fromkeys(block_term.tolist()):
+        sel = post_term == term
+        ids, tfs = ids_all[sel], tfs_all[sel]
         order = np.argsort(ids)
         payload.append((float(bm25.idf(dfs[term], n_docs)),
                         ids[order].astype(np.int64),
@@ -2419,29 +2369,11 @@ def _matching_doc_ids_decode(tables: "IndexTables",
     terms' posting blocks only (parquet pushdown on ``term``) — the
     shared scan under the index-backed aggregation routes and the
     query-string atom tagger."""
-    import numpy as np
+    from deces_dataprep_spark.index.codec import explode_blocks
 
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
-
-    blocks = tables.postings.filter(F.col("term").isin(terms))
-
-    def decode(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            counts = b["n_docs"].to_numpy(np.int64)
-            ids, _tfs = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                counts,
-            )
-            yield pd.DataFrame({
-                "term": np.repeat(b["term"].to_numpy(), counts),
-                "doc_id": ids.astype(np.int64),
-            })
-
-    return blocks.mapInPandas(decode, "term string, doc_id long")
+    return explode_blocks(
+        tables.postings.filter(F.col("term").isin(terms)), "term"
+    ).select("term", "doc_id")
 
 
 def _matching_doc_ids_from_postings(tables: "IndexTables",
@@ -2828,9 +2760,7 @@ def boolean_topk_from_index(
     ``minimum_should_match`` — same contract as the scan route: ≥ this
     many distinct should terms per doc, enforced in the same per-doc
     aggregate."""
-    import numpy as np
-
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
+    from deces_dataprep_spark.index.codec import explode_blocks
 
     must_t = [t for q in must for t in analyze_query(q)]
     should_t = [t for q in (should or []) for t in analyze_query(q)]
@@ -2850,26 +2780,8 @@ def boolean_topk_from_index(
     if any(t not in dfs for t in set(must_t)):
         return spark.createDataFrame([], "doc_id long, score double")
 
-    blocks = tables.postings.filter(F.col("term").isin(all_terms))
-
-    def decode(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            counts = b["n_docs"].to_numpy(np.int64)
-            ids, tfs = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                counts,
-            )
-            yield pd.DataFrame({
-                "term": np.repeat(b["term"].to_numpy(), counts),
-                "doc_id": ids.astype(np.int64),
-                "tf": tfs.astype(np.int64),
-            })
-
-    decoded = blocks.mapInPandas(decode, "term string, doc_id long, tf long")
+    decoded = explode_blocks(
+        tables.postings.filter(F.col("term").isin(all_terms)), "term")
     if not_t:
         banned = decoded.filter(F.col("term").isin(not_t)) \
             .select("doc_id").distinct()
@@ -2981,7 +2893,7 @@ def fuzzy_match_from_index(
     import pandas as pd
 
     from deces_dataprep_spark.functions.analyze import normalize_series
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
+    from deces_dataprep_spark.index.codec import explode_blocks
 
     q = normalize_series(pd.Series([query])).iloc[0]
     if max_edits == "auto":
@@ -3011,21 +2923,9 @@ def fuzzy_match_from_index(
         ]
     if not cand:
         return spark.createDataFrame([], "doc_id long")
-    blocks = tables.postings.filter(F.col("term").isin(cand))
-
-    def decode(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            ids, _ = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                b["n_docs"].to_numpy(np.int64),
-            )
-            yield pd.DataFrame({"doc_id": np.unique(ids.astype(np.int64))})
-
-    return blocks.mapInPandas(decode, "doc_id long").distinct()
+    return explode_blocks(
+        tables.postings.filter(F.col("term").isin(cand))
+    ).select("doc_id").distinct()
 
 
 def mlt_topk_df(

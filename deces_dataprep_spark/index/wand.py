@@ -24,12 +24,17 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from deces_dataprep_spark.index import bm25
-from deces_dataprep_spark.index.codec import decode_block_abs
+from deces_dataprep_spark.index.codec import decode_blocks_concat
 
 
 @dataclass
 class TermPostings:
-    """All blocks of one term (one shard), in block_id order."""
+    """All blocks of one term (one shard), in block_id order.
+
+    ``doc_gaps``/``tfs`` are the blocks' arrays laid end to end (block
+    ``i`` holds ``n_docs[i]`` entries, each an offset from
+    ``first_docs[i]``) — a flat numpy array, or any shape
+    :func:`codec.decode_blocks_concat` accepts."""
 
     term: str
     df: int
@@ -37,10 +42,12 @@ class TermPostings:
     n_docs: list[int]
     first_docs: list[int]
     last_docs: list[int]
-    doc_gaps: list[bytes]
-    tfs: list[bytes]
+    doc_gaps: np.ndarray
+    tfs: np.ndarray
     block_max: list[float]
     _decoded: tuple | None = None  # memoized (doc_ids, tfs) full decode
+    #: memoized start of each block in the decoded arrays
+    _starts: np.ndarray | None = None
     #: memoized TAAT projection: (key, (norm_positions, contributions)) —
     #: a term's per-posting BM25 contribution is query-independent, so
     #: repeat queries sharing the term reduce to one bincount
@@ -61,10 +68,7 @@ class _Cursor:
         if self.block_idx >= len(self.tp.block_ids):
             self.exhausted = True
             return
-        self.doc_ids, self.tfs = decode_block_abs(
-            self.tp.doc_gaps[self.block_idx], self.tp.tfs[self.block_idx],
-            self.tp.first_docs[self.block_idx],
-        )
+        self.doc_ids, self.tfs = block_arrays(self.tp, self.block_idx)
         self.pos = 0
 
     @property
@@ -215,14 +219,21 @@ def wand_topk(
 def decode_term_arrays(tp: TermPostings) -> tuple[np.ndarray, np.ndarray]:
     """Decode all blocks of one term → (doc_ids, tfs) numpy arrays
     (memoized on the TermPostings — repeat queries skip the decode)."""
-    if tp._decoded is not None:
-        return tp._decoded
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
-
-    tp._decoded = decode_blocks_concat(
-        tp.doc_gaps, tp.tfs, tp.first_docs, tp.n_docs
-    )
+    if tp._decoded is None:
+        tp._decoded = decode_blocks_concat(
+            tp.doc_gaps, tp.tfs, tp.first_docs, tp.n_docs
+        )
     return tp._decoded
+
+
+def block_arrays(tp: TermPostings, i: int) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_ids, tfs) of block ``i``: views into the term's decode."""
+    ids, tfs = decode_term_arrays(tp)
+    if tp._starts is None:
+        tp._starts = np.concatenate(
+            ([0], np.cumsum(tp.n_docs, dtype=np.int64)))
+    a, b = tp._starts[i], tp._starts[i + 1]
+    return ids[a:b], tfs[a:b]
 
 
 def taat_scores(
@@ -335,7 +346,7 @@ def exhaustive_topk(
     scores: dict[int, float] = {}
     for tp in terms:
         for i in range(len(tp.block_ids)):
-            ids, tfs = decode_block_abs(tp.doc_gaps[i], tp.tfs[i], tp.first_docs[i])
+            ids, tfs = block_arrays(tp, i)
             for d, t in zip(ids.tolist(), tfs.tolist()):
                 dl = doc_lens[int(d)]
                 scores[int(d)] = scores.get(int(d), 0.0) + float(

@@ -12,6 +12,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: local-mode driver heap as a share of the host's MemTotal when
+#: SPARK_DRIVER_MEM is unset: the heap is committed lazily (no
+#: pretouch), and the rest of the host stays free for the Python
+#: workers and the OS page cache
+LOCAL_MEM_SHARE = 0.4
+
+
+def _local_driver_mem() -> str | None:
+    """LOCAL_MEM_SHARE of MemTotal (at least 1 GiB), or None when the
+    host does not expose /proc/meminfo."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{max(1024, int(kb * LOCAL_MEM_SHARE / 1024))}m"
+
+
 def get_spark(
     app_name: str = "deces_dataprep_spark",
     master: str | None = None,
@@ -23,10 +42,22 @@ def get_spark(
     Defaults follow the local sandbox (``local[$SPARK_GRAFT_CPUS]``,
     32 cores); on a real cluster, ``master`` and memory come from
     spark-submit and only the SQL confs below matter.
+
+    Driver memory: ``$SPARK_DRIVER_MEM`` when set, and then the whole
+    heap is also committed at JVM start (``-Xms`` + AlwaysPreTouch, see
+    below). Unset, a local master gets LOCAL_MEM_SHARE of the host's
+    memory with a lazily-grown heap, so a session always fits the host
+    it starts on; a cluster master keeps Spark's own default. These
+    settings only take effect when this call launches the JVM. Under
+    ``spark-submit`` (client mode) the driver JVM is already running, so
+    pass memory and heap flags on its command line instead:
+    ``--driver-memory 8g --driver-java-options "-Xms8g
+    -XX:+AlwaysPreTouch"``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions if shuffle_partitions is not None else max(cpus, 8)
+    mem = os.environ.get("SPARK_DRIVER_MEM")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -42,22 +73,25 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+    )
+    if mem:
         # Pre-commit the whole heap at JVM start (-Xms == -Xmx +
         # AlwaysPreTouch): without it, the first big cache/shuffle pays
         # the heap's page-zeroing and growth-GC stalls INSIDE the timed
         # work — measured ~12 s on the first 400k-doc token-cache
         # materialization at 48 g (norms pass 14.8 s → 2.3 s with
-        # pretouch, build rep0 34.3 s → 26.3 s). Standard server-JVM
-        # practice, scale-neutral (it tracks SPARK_DRIVER_MEM, no local
-        # constant; a real cluster wants the same per executor via
-        # spark.executor.extraJavaOptions, where executor memory is the
-        # knob). Spark forbids -Xmx here; -Xms + pretouch is the
-        # supported way to pin the committed size.
-        .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '16g')} "
-                "-XX:+AlwaysPreTouch")
-    )
+        # pretouch, build rep0 34.3 s → 26.3 s). Only on request: a
+        # pretouched heap larger than the host's free memory cannot
+        # start at all. A real cluster wants the same per executor via
+        # spark.executor.extraJavaOptions. Spark forbids -Xmx here;
+        # -Xms + pretouch is the supported way to pin the committed size.
+        builder = (builder.config("spark.driver.memory", mem)
+                   .config("spark.driver.extraJavaOptions",
+                           f"-Xms{mem} -XX:+AlwaysPreTouch"))
+    elif master.startswith("local"):
+        local_mem = _local_driver_mem()
+        if local_mem:
+            builder = builder.config("spark.driver.memory", local_mem)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -320,22 +320,17 @@ def optimize_postings(spark: SparkSession, warehouse: str,
     """ES ``force_merge`` analogue: rewrite the postings table for
     SERVING and commit a new snapshot.
 
-    The build's hash layout (``repartition(P, shard, term)``) balances
-    encode groups, but every output file then holds a hash-spread of
-    terms — its parquet row-group [min, max] term range spans the whole
-    vocabulary, so a term lookup must touch every row group (measured:
-    ~the full table per query). This pass re-sorts: range-partition by
-    (shard, term), sort within partitions, small row groups
-    (``row_group_bytes``). After it, a term's blocks live in one
-    contiguous run covered by 1-2 row groups per shard, and both the
-    Spark scan (PushedFilters on term) and the Arrow serving tier
-    (_rg_index) skip everything else.
+    The build already writes each shard as ONE file sorted by term in
+    small row groups (:func:`write_postings`), so a term lookup touches
+    about one row group per shard. This pass additionally splits every
+    shard into ``files_per_shard`` range-partitioned files with row
+    groups of ``row_group_bytes`` — the layout for a serving tier that
+    reads shards in parallel — and re-sorts the positional table the
+    same way (phrase serving prunes on term like the posting fetch).
 
     Old snapshots stay valid: the rewrite lands in a fresh
     ``postings_serve/<id>/`` location; unchanged tables keep their
     pinned file lists."""
-    from deces_dataprep_spark.index.builder import POSTINGS_SCHEMA  # noqa: F401
-
     log = SnapshotLog(warehouse)
     snap = log.latest()
     if snap is None:
@@ -376,6 +371,39 @@ def optimize_postings(spark: SparkSession, warehouse: str,
                       files_override=files)
 
 
+def _marker_version(marker: str) -> str | None:
+    """The ``pipeline_version`` a shard's ``_DONE.json`` records, or
+    None when the shard has no (readable) marker."""
+    try:
+        with open(marker) as f:
+            return json.load(f).get("pipeline_version")
+    except (OSError, ValueError):
+        return None
+
+
+def write_postings(spark: SparkSession, blocks: DataFrame, root: str,
+                   n_shards: int, dynamic: bool = False) -> None:
+    """Write posting blocks under ``root/shard=<s>/``: one file per
+    shard, rows sorted by (shard, term, block_id), row groups of
+    ``POSTINGS_ROW_GROUP_BYTES`` — so each row group's footer term range
+    is narrow and a term lookup (Spark pushdown or the arrow reader)
+    skips the rest. The pack runs wide (3× slots), and a partitionBy
+    write from P wide tasks would land P×shards tiny files that every
+    downstream scan pays to open; the block stream is ~1/300 of the
+    corpus, so the exchange by shard is cheap. ``dynamic`` overwrites
+    only the shards present in ``blocks``."""
+    from deces_dataprep_spark.index.builder import POSTINGS_ROW_GROUP_BYTES
+
+    w = (blocks.repartition(
+            max(n_shards, spark.sparkContext.defaultParallelism), "shard")
+         .sortWithinPartitions("shard", "term", "block_id")
+         .write.mode("overwrite")
+         .option("parquet.block.size", str(POSTINGS_ROW_GROUP_BYTES)))
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("shard").parquet(root)
+
+
 @dataclass
 class BuildResult:
     run_id: str
@@ -399,7 +427,6 @@ def write_index(
     salt_df_threshold: int | None = None,
     with_positions: bool = False,
     auto_salt: bool = True,
-    layout: str = "packed",
 ) -> BuildResult:
     """Build + persist the index with shard-level checkpointing.
 
@@ -407,7 +434,9 @@ def write_index(
     postings land in ``postings/shard=<s>/`` with an atomic
     ``_DONE.json`` lineage marker. A re-run with ``resume=True`` skips
     completed shards (kill the build mid-run, run again → identical
-    index; see tests). The corpus is tokenized exactly ONCE: the
+    index; see tests) — but only shards whose marker carries the
+    current :func:`pipeline_version`; a marker from other code is
+    stale and its shard is rebuilt. The corpus is tokenized exactly ONCE: the
     tokenized projection is persisted (MEMORY_AND_DISK) by the
     norms/stats pass, and every shard batch filters the cached
     projection by ``pmod(doc_id, n)`` instead of re-running the
@@ -498,7 +527,7 @@ def write_index(
         todo = []
         for shard in range(n_shards):
             marker = os.path.join(post_root, f"shard={shard}", "_DONE.json")
-            if resume and os.path.exists(marker):
+            if resume and _marker_version(marker) == ver:
                 skipped.append(shard)
             else:
                 todo.append(shard)
@@ -527,22 +556,9 @@ def write_index(
             toks_b = toks if len(batch) == n_shards else toks.filter(
                 F.pmod(F.col("doc_id"), F.lit(n_shards)).isin(batch)
             )
-            part = postings_plan_from_tokens(spark, toks_b, n_shards, n_docs_g,
-                                             avgdl_g, salt=salt, layout=layout)
-            # The encode runs wide (3× slots — see postings_plan_from_tokens)
-            # but a partitionBy write from P wide tasks lands P×shards tiny
-            # files, which every downstream scan (lineage agg, dictionary,
-            # load_index, the serving optimizer) then pays to open. The
-            # encoded block stream is ~1/300 of the corpus, so one extra
-            # exchange of it is cheap; hashing by shard makes each shard's
-            # blocks ONE file whose size tracks shard sizing (the operator
-            # already sizes shards) — measured: same write wall-clock, tail
-            # scans 1.3 s → 0.5 s, 256 files → n_shards.
-            (part.repartition(max(n_shards, spark.sparkContext.defaultParallelism),
-                              "shard")
-                 .write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("shard").parquet(post_root))
+            part = postings_plan_from_tokens(spark, toks_b, n_shards, avgdl_g,
+                                             salt=salt)
+            write_postings(spark, part, post_root, n_shards, dynamic=True)
             if b0 + shard_batch >= len(todo):
                 tail = [pool.submit(_write_dictionary), pool.submit(_write_stats)]
             aggs = {
@@ -654,6 +670,7 @@ def load_index(spark: SparkSession, warehouse: str,
     later appends/commits as long as its files weren't physically
     overwritten. ``basePath`` keeps the ``shard=`` partition column."""
     from deces_dataprep_spark.index.builder import IndexTables
+    from deces_dataprep_spark.index.codec import require_array_layout
 
     log = SnapshotLog(warehouse)
     if alias is not None:
@@ -673,8 +690,12 @@ def load_index(spark: SparkSession, warehouse: str,
         reader = spark.read.option("basePath", loc) if base else spark.read
         return reader.parquet(*files) if files else reader.parquet(loc)
 
+    postings = read("postings", base=True)
+    if "doc_gaps" in postings.columns:
+        require_array_layout(
+            postings.schema["doc_gaps"].dataType.simpleString(), warehouse)
     return IndexTables(
-        postings=read("postings", base=True),
+        postings=postings,
         dictionary=read("dictionary"),
         norms=read("norms"),
         stats=read("stats"),

@@ -14,11 +14,12 @@ equivalent:
   encoded with the *batch-local* avgdl, so their ``block_max_tfnorm``
   is not a trusted global bound — queries over an uncompacted index
   must use the exact TAAT path (``method='taat'``), never WAND.
-* ``compact_deltas`` — the sort-merge of partial postings: decode base
-  + deltas back to (shard, term, doc_id, tf), join the accumulated
-  norms for dl, re-encode through ``postings_plan``'s encoder with the
-  *final* global stats, and atomically commit the merged index as a
-  new snapshot. After compaction WAND bounds are valid again.
+* ``compact_deltas`` — the sort-merge of partial postings: explode the
+  deltas' block arrays back to (shard, term, doc_id, tf) JVM-side, join
+  the accumulated norms for dl, re-pack through the batch builder's
+  block pack with the *final* global stats, and atomically commit the
+  merged index as a new snapshot. After compaction WAND bounds are
+  valid again.
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation
   over an event stream (late data handled by the watermark), the
   streaming counterpart of the ``events_hourly`` batch rollup.
@@ -27,10 +28,7 @@ equivalent:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,12 +77,12 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     nothing), so no emptiness pre-check job is needed.
 
     No shared persisted projection (round 6): the norms side only needs
-    doc_len == the TOKEN COUNT, which ``regexp_count`` computes in one
-    regex pass with no array materialization (identical longs to
-    ``size(tokens_col(text))`` — null/empty parity pinned by
-    ``test_streaming``'s dl-parity test), so the norms job is a tiny
-    array-free projection write and the delta job tokenizes its own
-    repartitioned input. The former shared cache made the two jobs
+    doc_len == the TOKEN COUNT, which ``token_count_col`` computes in
+    one regex pass over the lowered text with no array materialization
+    (identical longs to ``size(tokens_col(text))`` — null/empty and
+    non-ASCII parity pinned by ``test_streaming``'s dl-parity test),
+    so the norms job is a tiny array-free projection write and the
+    delta job tokenizes its own repartitioned input. The former shared cache made the two jobs
     serialize on per-block cache locks and paid a micro-batch-sized
     cache fill per trigger for a projection each side reads once —
     measured (interleaved A/B, 40k docs / 4 micro-batches): ingest
@@ -101,7 +99,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     after this change."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from deces_dataprep_spark.functions.analyze import _JAVA_TOKEN_RX
+    from deces_dataprep_spark.functions.analyze import token_count_col
     from deces_dataprep_spark.index.builder import postings_plan_from_tokens
 
     par = spark.sparkContext.defaultParallelism
@@ -111,8 +109,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
             .alias("shard"),
             "doc_id",
-            F.regexp_count(F.col("text"), F.lit(_JAVA_TOKEN_RX))
-            .cast("long").alias("doc_len"),
+            token_count_col("text").cast("long").alias("doc_len"),
             F.lit(batch_id).alias("ingest_batch"),
         )
         (norms.write.mode("overwrite")
@@ -130,7 +127,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
         # data, so extra slots only add task launches — still
         # scale-adaptive (tracks the cluster size, no constant).
         toks = docs_with_tokens(batch_df.repartition(par))
-        delta = postings_plan_from_tokens(spark, toks, n_shards, 0,
+        delta = postings_plan_from_tokens(spark, toks, n_shards,
                                           _DELTA_AVGDL, partitions=par)
         # collapse the delta's block rows to a few files per
         # micro-batch (the wide encode would otherwise land one tiny
@@ -199,9 +196,13 @@ def load_delta_index(spark: SparkSession, warehouse: str):
     trusting scores.
     """
     from deces_dataprep_spark.index.builder import IndexTables
+    from deces_dataprep_spark.index.codec import require_array_layout
 
-    postings = spark.read.option("basePath", os.path.join(warehouse, "postings_delta")) \
-        .parquet(os.path.join(warehouse, "postings_delta")).drop("ingest_batch")
+    delta_root = os.path.join(warehouse, "postings_delta")
+    postings = spark.read.option("basePath", delta_root) \
+        .parquet(delta_root).drop("ingest_batch")
+    require_array_layout(
+        postings.schema["doc_gaps"].dataType.simpleString(), delta_root)
     norms_all = spark.read.option("basePath", os.path.join(warehouse, "norms_delta")) \
         .parquet(os.path.join(warehouse, "norms_delta"))
     _, norms = _latest_norms(norms_all)
@@ -225,7 +226,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     straggler the batch build defuses by default. Hot terms are
     estimated from the delta BLOCK METADATA (sum of per-block n_docs
     per term — no decode pass; re-ingest overcounts only bias toward
-    salting), and the encoder keys segments (shard, term, salt) with
+    salting), and the pack keys blocks by (shard, term, salt) with
     per-range block_id offsets exactly like the batch `SaltSpec` path,
     so WAND/TAAT read the compacted salted index unchanged.
     """
@@ -233,9 +234,16 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
         AUTO_SALT_DF_FRAC,
         AUTO_SALT_MIN_DOCS,
         IndexTables,
+        fold_postings,
         make_salt_spec,
+        pack_blocks,
     )
-    from deces_dataprep_spark.snapshots import SnapshotLog
+    from deces_dataprep_spark.index.codec import (
+        BLOCK_SIZE,
+        explode_blocks,
+        require_array_layout,
+    )
+    from deces_dataprep_spark.snapshots import SnapshotLog, write_postings
 
     norms_all = spark.read.option("basePath", os.path.join(warehouse, "norms_delta")) \
         .parquet(os.path.join(warehouse, "norms_delta"))
@@ -263,53 +271,13 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
 
     deltas = spark.read.option("basePath", os.path.join(warehouse, "postings_delta")) \
         .parquet(os.path.join(warehouse, "postings_delta"))
+    require_array_layout(deltas.schema["doc_gaps"].dataType.simpleString(),
+                         os.path.join(warehouse, "postings_delta"))
 
-    # Decode blocks back to (ingest_batch, shard, term, doc_id, tf) rows.
-    # Each row decodes INDEPENDENTLY via decode_block_abs (first_doc is
-    # stored per block) — no cross-row prev_last chaining, so Arrow batch
-    # boundaries / parquet splits / task boundaries cannot split a
-    # (batch, shard, term) run and silently shift doc_ids.
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from deces_dataprep_spark.index.codec import decode_blocks_concat
-
-        for b in batches:
-            if b.empty:
-                continue
-            counts = b["n_docs"].to_numpy(np.int64)
-            ids, tfs = decode_blocks_concat(
-                [bytes(x) for x in b["doc_gaps"]],
-                [bytes(x) for x in b["tfs"]],
-                b["first_doc"].to_numpy(np.int64),
-                counts,
-            )
-            # one OUTPUT ROW PER BLOCK (arrays), not per posting: the
-            # JVM→Python boundary costs ~5-8 µs/row regardless of width
-            # (the builder's measurement), so the per-posting frame paid
-            # ~100× the rows for the same bytes — the explode back to
-            # posting rows happens JVM-side below, where a generator
-            # over materialized arrays is codegen'd and cheap
-            # (measured: decode stage 2.6 s → 1.0 s at 5.2M postings).
-            cuts = np.cumsum(counts)[:-1]
-            yield pd.DataFrame({
-                "ingest_batch": b["ingest_batch"].to_numpy(np.int64),
-                "shard": b["shard"].to_numpy(np.int32),
-                "term": b["term"].to_numpy(),
-                "doc_ids": np.split(ids.astype(np.int64), cuts),
-                "tfs_arr": np.split(tfs.astype(np.int64), cuts),
-            })
-
-    blocks_decoded = deltas.mapInPandas(
-        decode, "ingest_batch long, shard int, term string, "
-                "doc_ids array<long>, tfs_arr array<long>"
-    )
-    rows = blocks_decoded.select(
-        "ingest_batch", "shard", "term",
-        F.explode(F.arrays_zip("doc_ids", "tfs_arr")).alias("__z"),
-    ).select(
-        "ingest_batch", "shard", "term",
-        F.col("__z.doc_ids").alias("doc_id"),
-        F.col("__z.tfs_arr").alias("tf"),
-    )
+    # One posting row per block element, JVM-side. Each block decodes
+    # on its own (offsets from its stored first_doc), so parquet splits
+    # and task boundaries cannot shift doc_ids.
+    rows = explode_blocks(deltas, "ingest_batch", "shard", "term")
     # REPLACE semantics: keep only postings from each doc's latest
     # ingest_batch (a re-ingested doc's older postings are superseded,
     # matching the idempotent _id overwrite of the reference's ES sink).
@@ -362,56 +330,21 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
                                       int(stats_row["max_id"] or 0),
                                       n_ranges, n_docs, hot_terms=hot)
         # 3× parallelism, matching the batch builder's scale-adaptive
-        # posting-partition default (see postings_plan_from_tokens)
+        # posting-partition default (see postings_plan_from_tokens).
+        # Same fold + pack as the batch builder. The per-(term, doc)
+        # fold is needed only on the REPLACE branch as defense-in-depth:
+        # in the append-only case every (term, doc) is provably unique
+        # already (each doc was ingested exactly once — that is what the
+        # append-only check established — and its batch's delta folded
+        # tf per doc), so the aggregate would be a 1-row-per-group
+        # identity pass over every posting; skip it and let the sort
+        # feed the pack directly.
         n_part = partitions or 3 * spark.sparkContext.defaultParallelism
-        part_keys = [F.col("shard"), F.col("term")]
-        if salt is not None:
-            # exact integer div — must agree bit-for-bit with salts_np
-            salt_col = F.expr(f"(doc_id - {salt.min_id}L) div {salt.width}L")
-            part_keys.append(
-                F.when(F.col("term").isin(list(salt.hot)), salt_col)
-                .otherwise(F.lit(0)))
-        # Same pack shape as the batch builder's default layout: one
-        # exchange on the partition keys, sort, block-bounded pack, ONE
-        # ROW PER BLOCK across the Python boundary (the boundary was the
-        # compaction encoder's dominant cost, as in the batch build).
-        # The per-(term, doc) fold is needed only on the REPLACE branch
-        # as defense-in-depth: in the append-only case every (term, doc)
-        # is provably unique already (each doc was ingested exactly once
-        # — that is what the append-only check established — and its
-        # batch's delta folded tf per doc), so the hash aggregate would
-        # be a 1-row-per-group identity pass over every posting; skip
-        # it and let the sort feed the pack directly.
-        from deces_dataprep_spark.index.builder import pack_and_encode_folded
-
-        if salt is not None:
-            base = with_dl.withColumn("__salt", part_keys[2])
-            rep_cols = [F.col("shard"), F.col("term"), F.col("__salt")]
-            grp_cols = ["shard", "term", "__salt"]
-        else:
-            base = with_dl
-            rep_cols = part_keys
-            grp_cols = ["shard", "term"]
-        shuffled = base.repartition(n_part, *rep_cols)
-        if append_only:
-            folded = shuffled.select(
-                *grp_cols, "doc_id", "tf", "dl"
-            ).sortWithinPartitions(*grp_cols, "doc_id")
-        else:
-            folded = (
-                shuffled
-                .groupBy(*grp_cols, F.col("doc_id"))
-                .agg(F.sum("tf").alias("tf"), F.first("dl").alias("dl"))
-                .sortWithinPartitions(*grp_cols, "doc_id")
-            )
-        compacted = pack_and_encode_folded(folded, salt, 128, avgdl)
+        folded = fold_postings(with_dl, salt, n_part,
+                               None if append_only else F.sum("tf"))
+        compacted = pack_blocks(folded, salt, BLOCK_SIZE, avgdl)
         post_root = os.path.join(warehouse, "postings")
-        # one file per shard instead of n_part×shards tiny ones — same
-        # rationale as write_index's pre-write repartition of the block
-        # stream (the compacted table is blocks, ~1/300 of the corpus)
-        (compacted.repartition(
-            max(n_shards, spark.sparkContext.defaultParallelism), "shard")
-            .write.mode("overwrite").partitionBy("shard").parquet(post_root))
+        write_postings(spark, compacted, post_root, n_shards)
 
         # postings landed — now norms/stats (pool) overlap the dictionary
         tail = [pool.submit(_write_norms), pool.submit(_write_stats)]

@@ -1,32 +1,20 @@
-"""Property-based tests (hypothesis): varint/block codec roundtrips on
-adversarial inputs; WAND ≡ TAAT ≡ exhaustive on random posting sets."""
+"""Property-based tests (hypothesis): array-block decode round trips
+on adversarial inputs; WAND ≡ TAAT ≡ exhaustive on random posting sets."""
 
 import numpy as np
+from block_fixtures import pack, term_postings
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from deces_dataprep_spark.index import bm25
-from deces_dataprep_spark.index.codec import (
-    decode_postings,
-    encode_postings,
-    varint_decode,
-    varint_encode,
-)
+from deces_dataprep_spark.index.codec import decode_blocks_concat
 from deces_dataprep_spark.index.wand import (
     TermPostings,
+    block_arrays,
     exhaustive_topk,
     taat_topk,
     wand_topk,
 )
-
-u64 = st.integers(min_value=0, max_value=2**64 - 1)
-
-
-@given(st.lists(u64, max_size=300))
-@settings(max_examples=200, deadline=None)
-def test_varint_roundtrip(vals):
-    got = varint_decode(varint_encode(np.array(vals, dtype=np.uint64)))
-    assert got.tolist() == vals
 
 
 @given(
@@ -36,11 +24,12 @@ def test_varint_roundtrip(vals):
 )
 @settings(max_examples=60, deadline=None)
 def test_block_roundtrip(doc_set, tf_mod, block_size):
-    ids = np.array(sorted(doc_set), dtype=np.uint64)
-    tfs = (ids % np.uint64(tf_mod)) + np.uint64(1)
-    blocks = encode_postings(ids, tfs, None, block_size)
-    assert all(b.n_docs <= block_size for b in blocks)
-    got_ids, got_tfs = decode_postings(blocks)
+    ids = np.array(sorted(doc_set), dtype=np.int64)
+    tfs = (ids % tf_mod) + 1
+    b = pack(ids, tfs, None, block_size)
+    assert all(n <= block_size for n in b["n_docs"])
+    got_ids, got_tfs = decode_blocks_concat(b["doc_gaps"], b["tfs"],
+                                            b["first_doc"], b["n_docs"])
     assert got_ids.tolist() == ids.tolist()
     assert got_tfs.tolist() == tfs.tolist()
 
@@ -53,17 +42,9 @@ def _mk_term(term, doc_set, n_docs, avgdl, dls):
     scores = bm25.bm25_score(tfs.astype(np.float64), float(df), dl, n_docs, avgdl)
     # store the idf-free tf-norm bound exactly like the builder does
     idf = bm25.idf(df, n_docs)
-    blocks = encode_postings(ids, tfs, np.asarray(scores) / idf, 64)
-    return TermPostings(
-        term=term, df=df,
-        block_ids=[b.block_id for b in blocks],
-        n_docs=[b.n_docs for b in blocks],
-        first_docs=[b.first_doc for b in blocks],
-        last_docs=[b.last_doc for b in blocks],
-        doc_gaps=[b.doc_gaps for b in blocks],
-        tfs=[b.tfs for b in blocks],
-        block_max=[idf * b.block_max_score for b in blocks],
-    )
+    tp = term_postings(term, df, ids, tfs, np.asarray(scores) / idf, 64)
+    tp.block_max = [idf * m for m in tp.block_max]
+    return tp
 
 
 @given(
@@ -96,33 +77,34 @@ def test_wand_taat_exhaustive_rank_identical(term_doc_sets, k):
         assert abs(a - b) < 1e-9
 
 
+def _per_block(b):
+    """Decode block by block through the TermPostings block view."""
+    tp = TermPostings(
+        term="t", df=0, block_ids=b["block_id"], n_docs=b["n_docs"],
+        first_docs=b["first_doc"], last_docs=b["last_doc"],
+        doc_gaps=np.concatenate(b["doc_gaps"]), tfs=np.concatenate(b["tfs"]),
+        block_max=b["block_max"])
+    parts = [block_arrays(tp, i) for i in range(len(b["n_docs"]))]
+    return ([p[0] for p in parts], [p[1] for p in parts])
+
+
+def _concat(parts):
+    """Several terms' blocks as one block list."""
+    return {k: sum((p[k] for p in parts), []) for k in parts[0]}
+
+
 def test_decode_blocks_concat_equals_per_block():
-    """The batched decoder must reproduce decode_block_abs exactly for
-    arbitrary multi-term block mixes (each block self-delimiting)."""
-    import numpy as np
-
-    from deces_dataprep_spark.index.codec import (
-        decode_block_abs,
-        decode_blocks_concat,
-        encode_postings,
-    )
-
+    """The batched decoder must reproduce the per-block view exactly
+    for arbitrary multi-term block mixes (each block self-delimiting)."""
     rng = np.random.default_rng(7)
-    blocks = []
+    parts = []
     for start in (0, 10_000, 2**62):  # three "terms", huge-id regime too
         ids = np.cumsum(rng.integers(1, 1000, size=300)) + start
-        tfs = rng.integers(1, 50, size=300)
-        blocks.extend(encode_postings(ids.astype(np.uint64),
-                                      tfs.astype(np.uint64)))
+        parts.append(pack(ids, rng.integers(1, 50, size=300)))
+    b = _concat(parts)
     got_ids, got_tfs = decode_blocks_concat(
-        [b.doc_gaps for b in blocks], [b.tfs for b in blocks],
-        [b.first_doc for b in blocks], [b.n_docs for b in blocks],
-    )
-    exp_ids, exp_tfs = [], []
-    for b in blocks:
-        i, t = decode_block_abs(b.doc_gaps, b.tfs, b.first_doc)
-        exp_ids.append(i)
-        exp_tfs.append(t)
+        b["doc_gaps"], b["tfs"], b["first_doc"], b["n_docs"])
+    exp_ids, exp_tfs = _per_block(b)
     assert np.array_equal(got_ids, np.concatenate(exp_ids))
     assert np.array_equal(got_tfs, np.concatenate(exp_tfs))
 
@@ -139,37 +121,28 @@ def test_decode_blocks_concat_equals_per_block():
     st.integers(min_value=1, max_value=1000),            # max gap
 )
 def test_decode_blocks_concat_property(runs, max_gap):
-    """Batched decode == per-block decode for arbitrary encoded runs
-    (mixed lengths, huge-id regime, runs from unrelated 'terms')."""
-    import numpy as np
-
-    from deces_dataprep_spark.index.codec import (
-        decode_block_abs,
-        decode_blocks_concat,
-        encode_postings,
-    )
-
+    """Batched decode == per-block decode for arbitrary runs (mixed
+    lengths, huge-id regime, runs from unrelated 'terms'), and every
+    block's metadata agrees with its decoded ids."""
     rng = np.random.default_rng(0)
-    blocks = []
+    parts = []
     for start, n in runs:
-        ids = (np.cumsum(rng.integers(1, max_gap + 1, size=n))
-               + np.uint64(start)).astype(np.uint64)
-        tfs = rng.integers(1, 1000, size=n).astype(np.uint64)
-        blocks.extend(encode_postings(ids, tfs))
-    got_ids, got_tfs = decode_blocks_concat(
-        [b.doc_gaps for b in blocks], [b.tfs for b in blocks],
-        [b.first_doc for b in blocks], [b.n_docs for b in blocks],
-    )
-    exp_i, exp_t = [], []
-    for b in blocks:
-        i, t = decode_block_abs(b.doc_gaps, b.tfs, b.first_doc)
-        exp_i.append(i)
-        exp_t.append(t)
-    if blocks:
-        assert np.array_equal(got_ids, np.concatenate(exp_i))
-        assert np.array_equal(got_tfs, np.concatenate(exp_t))
-    else:
+        ids = np.cumsum(rng.integers(1, max_gap + 1, size=n)) + start
+        parts.append(pack(ids, rng.integers(1, 1000, size=n)))
+    if not parts:
+        got_ids, got_tfs = decode_blocks_concat([], [], [], [])
         assert got_ids.size == 0 and got_tfs.size == 0
+        return
+    b = _concat(parts)
+    got_ids, got_tfs = decode_blocks_concat(
+        b["doc_gaps"], b["tfs"], b["first_doc"], b["n_docs"])
+    exp_i, exp_t = _per_block(b)
+    assert np.array_equal(got_ids, np.concatenate(exp_i))
+    assert np.array_equal(got_tfs, np.concatenate(exp_t))
+    for i, ids in enumerate(exp_i):
+        assert ids.size == b["n_docs"][i]
+        assert int(ids[0]) == b["first_doc"][i]
+        assert int(ids[-1]) == b["last_doc"][i]
 
 
 @given(

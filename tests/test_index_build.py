@@ -5,10 +5,12 @@ Spark-SQL BM25 oracle."""
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from deces_dataprep_spark.index.builder import build_index, term_frequencies
-from deces_dataprep_spark.index.codec import decode_postings
+from deces_dataprep_spark.index.codec import decode_blocks_concat
 from deces_dataprep_spark.index.query import QueryEngine, bm25_topk_df
 from deces_dataprep_spark.index.wand import TermPostings
 
@@ -42,15 +44,9 @@ def test_postings_match_dataframe_tf(spark, documents, tables):
         }
         got = {}
         for shard, rows in _collect_term(tables, term).items():
-            from deces_dataprep_spark.index.codec import PostingBlock
-
-            blocks = [
-                PostingBlock(r["block_id"], r["n_docs"], r["first_doc"],
-                             r["last_doc"], bytes(r["doc_gaps"]), bytes(r["tfs"]),
-                             r["block_max_tfnorm"], r["sum_tf"])
-                for r in rows
-            ]
-            ids, tfs = decode_postings(blocks)
+            ids, tfs = decode_blocks_concat(
+                [r["doc_gaps"] for r in rows], [r["tfs"] for r in rows],
+                [r["first_doc"] for r in rows], [r["n_docs"] for r in rows])
             for d, t in zip(ids.tolist(), tfs.tolist()):
                 got[(shard, int(d))] = int(t)
         assert got == want, term
@@ -259,10 +255,9 @@ def test_salt_partition_key_exact_integer_division(spark):
     for a, b in zip(rows, rows[1:]):
         assert a["last_doc"] < b["first_doc"], (a["block_id"], b["block_id"])
     # all six docs survive the round trip, in order
-    from deces_dataprep_spark.index.codec import decode_blocks_concat
     got, _ = decode_blocks_concat(
-        [bytes(r["doc_gaps"]) for r in rows],
-        [bytes(r["tfs"]) for r in rows],
+        [r["doc_gaps"] for r in rows],
+        [r["tfs"] for r in rows],
         [int(r["first_doc"]) for r in rows],
         [int(r["n_docs"]) for r in rows])
     assert [int(x) for x in got] == sorted(ids)
@@ -312,56 +307,171 @@ def test_auto_salt_default_on_splits_hot_terms(spark, documents, monkeypatch):
         assert e_a.search(q, k=10) == pytest.approx(e_p.search(q, k=10))
 
 
-def _block_map(df):
-    return {
-        (r["shard"], r["term"], r["block_id"]): (
-            r["n_docs"], r["first_doc"], r["last_doc"],
-            bytes(r["doc_gaps"]), bytes(r["tfs"]),
-            round(r["block_max_tfnorm"], 12), r["sum_tf"])
-        for r in df.collect()
-    }
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
-def test_packed_layout_byte_identical_to_stream(spark, documents):
-    """The packed layout (JVM-side tf fold + block bucketing, one Arrow
-    row per block) must produce BYTE-identical posting blocks to the
-    streaming per-posting encoder — gaps, varints, block ids, bounds,
-    everything."""
-    from deces_dataprep_spark.index.builder import (
-        docs_with_tokens,
-        postings_plan_from_tokens,
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _record_block_writes(monkeypatch) -> list[str]:
+    """Physical plans of every posting-block DataFrame written to
+    Parquet from now on (the spy sees the plan the write executes)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if "doc_gaps" in self._df.columns:
+            plans.append(_plan(self._df))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+def test_postings_plans_have_no_python_node(spark, documents, tmp_path,
+                                            monkeypatch):
+    """Build, streaming delta, compaction and the index-backed BM25
+    plan pack and decode blocks in the JVM: no Python node anywhere."""
+    from deces_dataprep_spark.index.query import bm25_scores_from_index
+    from deces_dataprep_spark.snapshots import load_index, write_index
+    from deces_dataprep_spark.streaming.incremental import (
+        _append_batch,
+        compact_deltas,
     )
 
-    toks = docs_with_tokens(documents)
-    n_docs = toks.count()
-    avgdl = float(toks.agg(F.avg("dl")).collect()[0][0])
-    a = _block_map(postings_plan_from_tokens(
-        spark, toks, 2, n_docs, avgdl, layout="packed"))
-    b = _block_map(postings_plan_from_tokens(
-        spark, toks, 2, n_docs, avgdl, layout="stream"))
-    assert a == b and a
+    plans = _record_block_writes(monkeypatch)
+    wh, swh = str(tmp_path / "wh"), str(tmp_path / "stream")
+    write_index(spark, documents, wh, n_shards=2)
+    _append_batch(spark, documents.select("doc_id", "text"), 0, swh, 2)
+    compact_deltas(spark, swh, n_shards=2)
+    assert len(plans) == 3, "build, delta and compaction writes"
+    plans.append(_plan(bm25_scores_from_index(
+        spark, load_index(spark, wh), ["the", "spark", "join"])))
+    for plan in plans:
+        for node in PYTHON_NODES:
+            assert node not in plan, plan
 
 
-def test_packed_layout_byte_identical_salted(spark, documents):
-    """Same byte-identity under hot-term salting: per-salt-range gap
-    chains restart at 0 and block_ids carry the salt offset in both
-    layouts."""
-    from deces_dataprep_spark.index.builder import (
-        docs_with_tokens,
-        hot_terms_by_df,
-        make_salt_spec,
-        postings_plan_from_tokens,
+def _row_group_ranges(path):
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    ti = md.schema.names.index("term")
+    return [(md.row_group(i).column(ti).statistics.min,
+             md.row_group(i).column(ti).statistics.max)
+            for i in range(md.num_row_groups)]
+
+
+def test_postings_row_groups_sorted_and_skippable(spark, tmp_path,
+                                                  monkeypatch):
+    """Every postings file written by write_index and compact_deltas is
+    sorted by term: row-group term ranges ascend (adjacent groups share
+    at most the one term whose blocks straddle the boundary), and the
+    arrow reader reads at most one row group per file for a one-term
+    query on a term with one block per shard."""
+    import pyarrow.parquet as pq
+
+    from deces_dataprep_spark.index import builder
+    from deces_dataprep_spark.index.arrow_serve import ArrowIndexReader
+    from deces_dataprep_spark.snapshots import SnapshotLog, write_index
+    from deces_dataprep_spark.sources.corpus import synth_pages
+    from deces_dataprep_spark.streaming.incremental import (
+        _append_batch,
+        compact_deltas,
     )
 
-    toks = docs_with_tokens(documents)
-    n_docs = toks.count()
-    avgdl = float(toks.agg(F.avg("dl")).collect()[0][0])
-    mm = toks.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    hot = hot_terms_by_df(toks, 50, sample_frac=1.0)
-    assert hot, "fixture needs at least one hot term"
-    salt = make_salt_spec(int(mm[0]), int(mm[1]), 8, n_docs, hot_terms=hot)
-    a = _block_map(postings_plan_from_tokens(
-        spark, toks, 2, n_docs, avgdl, salt=salt, layout="packed"))
-    b = _block_map(postings_plan_from_tokens(
-        spark, toks, 2, n_docs, avgdl, salt=salt, layout="stream"))
-    assert a == b and a
+    # a Zipf corpus over a 10k-term vocabulary, and small row groups, so
+    # every postings file spans several row groups
+    docs = synth_pages(spark, 3000).select("doc_id", "text")
+    monkeypatch.setattr(builder, "POSTINGS_ROW_GROUP_BYTES", 16 << 10)
+    wh, swh = str(tmp_path / "wh"), str(tmp_path / "stream")
+    write_index(spark, docs, wh, n_shards=2)
+    _append_batch(spark, docs, 0, swh, 2)
+    compact_deltas(spark, swh, n_shards=2)
+    for root in (wh, swh):
+        files = SnapshotLog(root).latest()["tables"]
+        post = files["postings"]["files"]
+        assert len(post) == 2, post  # one file per shard
+        assert max(len(_row_group_ranges(f)) for f in post) > 1
+        for f in post:
+            ranges = _row_group_ranges(f)
+            for lo, hi in ranges:
+                assert lo <= hi
+            for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+                assert hi <= lo, (f, ranges)
+
+        reads: dict[int, int] = {}
+        orig = pq.ParquetFile.read_row_group
+
+        def counting(self, i, *args, _orig=orig, **kwargs):
+            reads[id(self)] = reads.get(id(self), 0) + 1
+            return _orig(self, i, *args, **kwargs)
+
+        monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
+        reader = ArrowIndexReader({k: v["files"] for k, v in files.items()})
+        blocks = pq.ParquetDataset(post).read(columns=["term"])
+        counts = blocks.group_by("term").aggregate([("term", "count")])
+        single = [t for t, n in zip(counts["term"].to_pylist(),
+                                    counts["term_count"].to_pylist())
+                  if n <= 2][:25]
+        assert single
+        for term in single:
+            reads.clear()
+            cols = reader.postings([term])
+            assert set(cols["term"]) == {term}
+            assert reads and max(reads.values()) == 1, (term, reads)
+        monkeypatch.setattr(pq.ParquetFile, "read_row_group", orig)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.dictionaries(
+        st.sampled_from(["a", "b", "zz"]),
+        st.dictionaries(st.integers(min_value=0, max_value=2**62),
+                        st.integers(min_value=1, max_value=50),
+                        min_size=1, max_size=60),
+        min_size=1, max_size=3),
+    st.integers(min_value=1, max_value=9),
+)
+def test_pack_block_properties(spark, postings, block_size):
+    """The JVM pack on arbitrary posting sets: decoding a term's blocks
+    returns its sorted unique ids and their tfs; first_doc, last_doc,
+    n_docs and sum_tf agree with the decoded block; block_max_tfnorm
+    bounds every posting's tf-norm (and is attained)."""
+    from deces_dataprep_spark.index import bm25
+    from deces_dataprep_spark.index.builder import fold_postings, pack_blocks
+
+    def dl(d):
+        return 3 + d % 11
+
+    rows = [(0, t, d, tf, dl(d)) for t, p in postings.items()
+            for d, tf in p.items()]
+    avgdl = float(np.mean([dl(d) for _, _, d, _, _ in rows]))
+    df = spark.createDataFrame(
+        rows, "shard int, term string, doc_id long, tf long, dl long")
+    packed = pack_blocks(fold_postings(df, None, 4), None, block_size,
+                         avgdl).collect()
+    for term, p in postings.items():
+        blocks = sorted((r for r in packed if r["term"] == term),
+                        key=lambda r: r["block_id"])
+        assert [r["block_id"] for r in blocks] == list(range(len(blocks)))
+        ids, tfs = decode_blocks_concat(
+            [r["doc_gaps"] for r in blocks], [r["tfs"] for r in blocks],
+            [r["first_doc"] for r in blocks], [r["n_docs"] for r in blocks])
+        want = sorted(p)
+        assert ids.tolist() == want
+        assert tfs.tolist() == [p[d] for d in want]
+        for r in blocks:
+            b_ids = [r["first_doc"] + g for g in r["doc_gaps"]]
+            assert r["doc_gaps"][0] == 0
+            assert 1 <= r["n_docs"] == len(b_ids) <= block_size
+            assert (r["first_doc"], r["last_doc"]) == (b_ids[0], b_ids[-1])
+            assert r["sum_tf"] == sum(r["tfs"])
+            t = np.asarray(r["tfs"], np.float64)
+            dls = np.asarray([dl(d) for d in b_ids], np.float64)
+            norms = t / (t + bm25.K1 * (1.0 - bm25.B + bm25.B * dls / avgdl))
+            assert (r["block_max_tfnorm"] >= norms).all()
+            assert r["block_max_tfnorm"] == norms.max()

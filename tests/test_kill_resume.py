@@ -34,8 +34,9 @@ def _content_hash(spark, wh):
     return (
         t.postings.select(
             F.md5(F.concat_ws("|", "shard", "term", "block_id", "n_docs",
-                              "first_doc", "last_doc", F.hex("doc_gaps"),
-                              F.hex("tfs"), "sum_tf")).alias("h"))
+                              "first_doc", "last_doc",
+                              F.col("doc_gaps").cast("string"),
+                              F.col("tfs").cast("string"), "sum_tf")).alias("h"))
         .agg(F.md5(F.array_join(F.array_sort(F.collect_list("h")), "")).alias("a"))
         .collect()[0]["a"]
     )

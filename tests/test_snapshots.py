@@ -30,7 +30,7 @@ def _index_content_hash(spark, warehouse: str) -> str:
             F.md5(
                 F.concat_ws(
                     "|", "shard", "term", "block_id", "n_docs", "first_doc",
-                    "last_doc", F.hex("doc_gaps"), F.hex("tfs"),
+                    "last_doc", F.col("doc_gaps").cast("string"), F.col("tfs").cast("string"),
                     F.round("block_max_tfnorm", 9), "sum_tf",
                 )
             ).alias("h")
@@ -79,6 +79,65 @@ def test_resume_skips_done_shards_and_is_identical(spark, docs, tmp_path):
     assert sorted(res.shards_skipped) == [0, 1]
     assert sorted(res.shards_built) == [2, 3]
     assert _index_content_hash(spark, wh) == want
+
+
+def test_resume_rebuilds_shards_with_stale_marker(spark, docs, tmp_path):
+    """A shard whose _DONE.json records another pipeline_version (a build
+    killed under other code, possibly another on-disk layout) is rebuilt
+    on resume, never mixed into the index."""
+    import json
+
+    wh_full = str(tmp_path / "full")
+    write_index(spark, docs, wh_full, n_shards=4, resume=False, shard_batch=1)
+    want = _index_content_hash(spark, wh_full)
+
+    wh = str(tmp_path / "stale")
+    write_index(spark, docs, wh, n_shards=4, resume=False, shard_batch=1)
+    marker = os.path.join(wh, "postings", "shard=1", "_DONE.json")
+    with open(marker) as f:
+        lineage = json.load(f)
+    lineage["pipeline_version"] = "0ld0ld00"
+    with open(marker, "w") as f:
+        json.dump(lineage, f)
+    res = write_index(spark, docs, wh, n_shards=4, resume=True, shard_batch=1)
+    assert sorted(res.shards_skipped) == [0, 2, 3]
+    assert res.shards_built == [1]
+    assert _index_content_hash(spark, wh) == want
+    with open(marker) as f:
+        assert json.load(f)["pipeline_version"] == pipeline_version()
+
+
+def test_binary_postings_layout_requires_rebuild(spark, tmp_path):
+    """A warehouse whose postings store doc_gaps as binary (the varint
+    layout) is refused with a rebuild message by both readers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deces_dataprep_spark.index.arrow_serve import ArrowIndexReader
+    from deces_dataprep_spark.index.codec import RebuildRequired
+
+    wh = str(tmp_path / "old")
+    tables = {}
+    for name, cols in {
+        "postings": {"term": ["a"], "block_id": [0], "n_docs": [1],
+                     "first_doc": [7], "last_doc": [7],
+                     "doc_gaps": pa.array([b"\x07"], pa.binary()),
+                     "tfs": pa.array([b"\x01"], pa.binary()),
+                     "block_max_tfnorm": [0.5], "sum_tf": [1]},
+        "dictionary": {"term": ["a"], "df": [1], "cf": [1]},
+        "norms": {"shard": [0], "doc_id": [7], "doc_len": [1]},
+        "stats": {"n_docs": [1], "avgdl": [1.0]},
+    }.items():
+        loc = os.path.join(wh, name, "shard=0" if name == "postings" else "")
+        os.makedirs(loc, exist_ok=True)
+        pq.write_table(pa.table(cols), os.path.join(loc, "part-0.parquet"))
+        tables[name] = os.path.join(wh, name)
+    SnapshotLog(wh).commit(tables, "0ld0ld00", "adhoc", "old")
+    with pytest.raises(RebuildRequired, match="rebuild"):
+        load_index(spark, wh)
+    files = {k: v["files"] for k, v in SnapshotLog(wh).latest()["tables"].items()}
+    with pytest.raises(RebuildRequired, match="rebuild"):
+        ArrowIndexReader(files)
 
 
 def test_memoized_skip_by_version_and_tag(spark, docs, tmp_path):

@@ -64,24 +64,27 @@ def test_streamed_norms_dl_matches_tokenizer(spark, streamed_wh, pages_dir):
 
 
 def test_regexp_count_dl_parity_edge_cases(spark):
-    """null / empty / whitespace / accent-free parity of the two dl
-    expressions the streaming path relies on being identical."""
+    """null / empty / whitespace / non-ASCII parity of the two dl
+    expressions the streaming path relies on being identical. U+0130 İ
+    lowers to i + a combining dot, which splits "İstanbul" into two
+    tokens: a count over the raw text would say 2 tokens, not 3."""
     from deces_dataprep_spark.functions.analyze import (
-        _JAVA_TOKEN_RX,
+        token_count_col,
         tokens_col,
     )
 
     df = spark.createDataFrame(
         [(1, "a b  c"), (2, ""), (3, None), (4, "   "), (5, "x"),
-         (6, "w00123-w4!"), (7, "a" * 500)],
+         (6, "w00123-w4!"), (7, "a" * 500), (8, "İstanbul kebap")],
         "doc_id long, text string")
     rows = df.select(
+        "doc_id",
         F.size(tokens_col("text")).cast("long").alias("a"),
-        F.regexp_count(F.col("text"), F.lit(_JAVA_TOKEN_RX))
-        .cast("long").alias("b"),
+        token_count_col("text").cast("long").alias("b"),
     ).collect()
     for r in rows:
-        assert r["a"] == r["b"]
+        assert r["a"] == r["b"], r
+    assert [r["b"] for r in rows if r["doc_id"] == 8] == [3]
 
 
 def test_delta_index_taat_matches_oracle(spark, streamed_wh, pages_dir):

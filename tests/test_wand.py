@@ -3,9 +3,10 @@
 import numpy as np
 import pytest
 
+from block_fixtures import term_postings
+
 from deces_dataprep_spark.index import bm25
-from deces_dataprep_spark.index.codec import encode_postings
-from deces_dataprep_spark.index.wand import TermPostings, exhaustive_topk, wand_topk
+from deces_dataprep_spark.index.wand import exhaustive_topk, wand_topk
 
 
 def _make_term(rng, term, n_docs_universe, doc_lens, n_docs_g, avgdl, df_size):
@@ -13,18 +14,8 @@ def _make_term(rng, term, n_docs_universe, doc_lens, n_docs_g, avgdl, df_size):
     tfs = rng.randint(1, 8, size=df_size).astype(np.uint64)
     dls = np.array([doc_lens[int(d)] for d in doc_ids], dtype=np.float64)
     scores = bm25.bm25_score(tfs.astype(np.float64), float(df_size), dls, n_docs_g, avgdl)
-    blocks = encode_postings(doc_ids, tfs, np.asarray(scores), block_size=32)
-    return TermPostings(
-        term=term,
-        df=df_size,
-        block_ids=[b.block_id for b in blocks],
-        n_docs=[b.n_docs for b in blocks],
-        first_docs=[b.first_doc for b in blocks],
-        last_docs=[b.last_doc for b in blocks],
-        doc_gaps=[b.doc_gaps for b in blocks],
-        tfs=[b.tfs for b in blocks],
-        block_max=[b.block_max_score for b in blocks],
-    )
+    return term_postings(term, df_size, doc_ids, tfs, np.asarray(scores),
+                         block_size=32)
 
 
 @pytest.mark.parametrize("seed", range(20))
@@ -56,14 +47,7 @@ def test_wand_empty_and_single():
     tfs = np.array([2, 1], dtype=np.uint64)
     scores = np.asarray(bm25.bm25_score(tfs.astype(float), 2.0,
                                         np.array([10.0, 20.0]), n, avgdl))
-    blocks = encode_postings(ids, tfs, scores)
-    tp = TermPostings(
-        term="x", df=2,
-        block_ids=[b.block_id for b in blocks], n_docs=[b.n_docs for b in blocks],
-        first_docs=[b.first_doc for b in blocks], last_docs=[b.last_doc for b in blocks],
-        doc_gaps=[b.doc_gaps for b in blocks], tfs=[b.tfs for b in blocks],
-        block_max=[b.block_max_score for b in blocks],
-    )
+    tp = term_postings("x", 2, ids, tfs, scores)
     out = wand_topk([tp], n, avgdl, doc_lens, k=5)
     assert len(out) == 2
     assert out[0][0] == 1  # higher tf, shorter doc → higher score
