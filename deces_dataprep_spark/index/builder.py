@@ -71,6 +71,10 @@ POSTINGS_SCHEMA = (
     "last_doc long, doc_gaps array<bigint>, tfs array<int>, "
     "block_max_tfnorm double, sum_tf long"
 )
+# The other index tables (module docstring).
+DICTIONARY_SCHEMA = "term string, df long, cf long"
+NORMS_SCHEMA = "shard int, doc_id long, doc_len long"
+STATS_SCHEMA = "n_docs long, avgdl double"
 
 #: target Parquet row-group size of every postings file. Files are
 #: written sorted by (shard, term, block_id), so a row group covers a
@@ -467,9 +471,7 @@ def build_index(
     postings = postings_plan_from_tokens(spark, toks, n_shards, avgdl_g,
                                          block_size, partitions, salt)
     dictionary = dictionary_from_postings(postings)
-    stats_df = spark.createDataFrame(
-        [(n_docs_g, avgdl_g)], "n_docs long, avgdl double"
-    )
+    stats_df = spark.createDataFrame([(n_docs_g, avgdl_g)], STATS_SCHEMA)
     return IndexTables(postings=postings, dictionary=dictionary, norms=norms,
                        stats=stats_df,
                        tokens=toks if cache_tokens else None)

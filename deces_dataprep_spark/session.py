@@ -18,6 +18,17 @@ from pyspark.sql import SparkSession
 #: workers and the OS page cache
 LOCAL_MEM_SHARE = 0.4
 
+#: entries of Spark's generated-class cache (the static SQL conf
+#: ``spark.sql.codegen.cache.maxEntries``, Spark's default 100). One
+#: warm streaming refresh (slice write, re-crawl compaction, a
+#: Spark-route query) uses more than 100 distinct generated classes, so
+#: at 100 the LRU evicts what the next refresh needs and every refresh
+#: recompiles them: Janino time plus classes that start cold in the
+#: JIT. Measured on 4 cores: 85 compiles per warm test-sized refresh at
+#: 100 entries, at most 2 at 1000 (tests/test_streaming.py); a build
+#: uses about 70 classes and fits either size.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def _local_driver_mem() -> str | None:
     """LOCAL_MEM_SHARE of MemTotal (at least 1 GiB), or None when the
@@ -52,7 +63,9 @@ def get_spark(
     ``spark-submit`` (client mode) the driver JVM is already running, so
     pass memory and heap flags on its command line instead:
     ``--driver-memory 8g --driver-java-options "-Xms8g
-    -XX:+AlwaysPreTouch"``.
+    -XX:+AlwaysPreTouch"``. The codegen cache size
+    (:data:`CODEGEN_CACHE_ENTRIES`) is a static SQL conf too: under
+    spark-submit pass ``--conf spark.sql.codegen.cache.maxEntries=1000``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
@@ -73,6 +86,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
     )
     if mem:
         # Pre-commit the whole heap at JVM start (-Xms == -Xmx +

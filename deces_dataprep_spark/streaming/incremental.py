@@ -16,10 +16,15 @@ equivalent:
   must use the exact TAAT path (``method='taat'``), never WAND.
 * ``compact_deltas`` — the sort-merge of partial postings: explode the
   deltas' block arrays back to (shard, term, doc_id, tf) JVM-side, join
-  the accumulated norms for dl, re-pack through the batch builder's
-  block pack with the *final* global stats, and atomically commit the
-  merged index as a new snapshot. After compaction WAND bounds are
-  valid again.
+  them ONCE with the *latest table* (one row per doc: the
+  ``(doc_id, ingest_batch, shard, doc_len)`` of its latest ingest) —
+  that one join both drops the postings of superseded page versions
+  (re-ingest REPLACE semantics) and attaches dl — re-pack through the
+  batch builder's block pack with the *final* global stats, and
+  atomically commit the merged index as a new snapshot. After
+  compaction WAND bounds are valid again. There is no separate
+  append-only branch: a stream that never re-ingests takes the same
+  plan.
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation
   over an event stream (late data handled by the watermark), the
   streaming counterpart of the ``events_hourly`` batch rollup.
@@ -29,10 +34,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from deces_dataprep_spark.index.builder import (
+    DICTIONARY_SCHEMA,
+    NORMS_SCHEMA,
+    POSTINGS_SCHEMA,
+    STATS_SCHEMA,
     docs_with_tokens,
     dictionary_from_postings,
 )
@@ -41,6 +50,13 @@ PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
     "doc_id long"
 )
+
+# The delta tables as _append_batch writes them (ingest_batch is the
+# partition column). Compaction and the delta index read them with these
+# schemas, so no read pays a schema-inference job.
+NORMS_DELTA_SCHEMA = (
+    "shard int, doc_id long, doc_len long, ingest_batch long")
+POSTINGS_DELTA_SCHEMA = POSTINGS_SCHEMA + ", ingest_batch long"
 
 
 def stream_pages(spark: SparkSession, input_dir: str,
@@ -96,7 +112,12 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     the idempotent per-batch_id overwrites heal both partitions. Only
     abandoning the checkpoint AND serving/compacting the torn
     warehouse skips that healing — same operator error before and
-    after this change."""
+    after this change.
+
+    A doc_id that occurs more than once in one micro-batch keeps one
+    version (:func:`_latest_pages`), on both sides: the latest table
+    compaction joins on assumes one norms row and one folded delta
+    posting per (doc_id, ingest_batch)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from deces_dataprep_spark.functions.analyze import token_count_col
@@ -105,11 +126,15 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     par = spark.sparkContext.defaultParallelism
 
     def write_norms() -> None:
-        norms = batch_df.select(
+        # doc_len is counted before the dedup's exchange, in the input's
+        # own tasks; AQE then coalesces the small exchange, so a
+        # micro-batch lands about one norms file, as before the dedup
+        norms = _latest_pages(batch_df.withColumn(
+            "doc_len", token_count_col("text").cast("long"))).select(
             F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
             .alias("shard"),
             "doc_id",
-            token_count_col("text").cast("long").alias("doc_len"),
+            "doc_len",
             F.lit(batch_id).alias("ingest_batch"),
         )
         (norms.write.mode("overwrite")
@@ -118,15 +143,11 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
               .parquet(os.path.join(warehouse, "norms_delta")))
 
     def write_delta() -> None:
-        # A micro-batch arrives with the file source's partitioning
-        # (often a single file → a handful of tasks); the raw text is
-        # tiny relative to the tokenize work, so spread it across the
-        # full parallelism BEFORE tokenizing. 1× the cluster
-        # parallelism for the delta's posting stage (not the batch
-        # builder's 3×): a micro-batch's fold/sort holds a sliver of
-        # data, so extra slots only add task launches — still
+        # 1× the cluster parallelism for the delta's posting stage (not
+        # the batch builder's 3×): a micro-batch's fold/sort holds a
+        # sliver of data, so extra slots only add task launches — still
         # scale-adaptive (tracks the cluster size, no constant).
-        toks = docs_with_tokens(batch_df.repartition(par))
+        toks = docs_with_tokens(_latest_pages(batch_df, par))
         delta = postings_plan_from_tokens(spark, toks, n_shards,
                                           _DELTA_AVGDL, partitions=par)
         # collapse the delta's block rows to a few files per
@@ -145,6 +166,29 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [pool.submit(write_norms), pool.submit(write_delta)]:
             f.result()
+
+
+def _latest_pages(batch_df: DataFrame, par: int | None = None) -> DataFrame:
+    """One row per doc_id of a micro-batch: the latest ``warc_ts``, ties
+    broken by the greater ``url`` and then the greater ``text`` (either
+    timestamp or url may be absent from a caller's frame; the text
+    always decides the last tie, so both writes pick the same version).
+
+    ``par`` hash-partitions the batch on doc_id into exactly that many
+    partitions, which is then the one exchange the dedup window needs.
+    The delta write asks for it: a micro-batch arrives with the file
+    source's partitioning (often a single file → a handful of tasks)
+    and the raw text is tiny relative to the tokenize work, so it is
+    spread across the cluster BEFORE tokenizing, and an explicit count
+    keeps AQE from coalescing it back into one task."""
+    order = [F.col(c).desc_nulls_last()
+             for c in ("warc_ts", "url", "text") if c in batch_df.columns]
+    rn = F.row_number().over(Window.partitionBy("doc_id").orderBy(*order))
+    pages = batch_df.withColumn("doc_id", F.col("doc_id").cast("long"))
+    if par is not None:
+        pages = pages.repartition(par, "doc_id")
+    return pages.withColumn("__rn", rn).filter(F.col("__rn") == 1) \
+        .drop("__rn")
 
 
 def incremental_index(spark: SparkSession, pages: DataFrame, warehouse: str,
@@ -169,18 +213,43 @@ def incremental_index(spark: SparkSession, pages: DataFrame, warehouse: str,
     return writer.start()
 
 
-def _latest_norms(norms_all: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Re-ingest semantics are REPLACE: a doc_id re-ingested in a later
-    micro-batch supersedes its earlier rows. Returns
-    ``(latest(doc_id, ingest_batch), norms(shard, doc_id, doc_len))``
-    with exactly one row per doc (the max-ingest_batch one)."""
-    latest = norms_all.groupBy("doc_id").agg(
-        F.max("ingest_batch").alias("ingest_batch")
-    )
-    norms = norms_all.join(latest, ["doc_id", "ingest_batch"]).select(
-        "shard", "doc_id", "doc_len"
-    )
-    return latest, norms
+def _read_deltas(spark: SparkSession,
+                 warehouse: str) -> tuple[DataFrame, DataFrame]:
+    """``(norms_delta, postings_delta)`` read with their known schemas.
+
+    A delta written with binary varint blocks raises
+    :class:`~deces_dataprep_spark.index.codec.RebuildRequired`: one
+    footer is read on the driver, with no Spark job."""
+    import pyarrow.parquet as pq
+
+    from deces_dataprep_spark.index.codec import require_array_layout
+
+    post_root = os.path.join(warehouse, "postings_delta")
+    first = next((os.path.join(dp, f) for dp, _, fs in os.walk(post_root)
+                  for f in sorted(fs) if f.endswith(".parquet")), None)
+    if first is not None:
+        require_array_layout(
+            str(pq.read_schema(first).field("doc_gaps").type), post_root)
+
+    def read(name: str, schema: str) -> DataFrame:
+        root = os.path.join(warehouse, name)
+        return spark.read.schema(schema).option("basePath", root) \
+            .parquet(root)
+
+    return (read("norms_delta", NORMS_DELTA_SCHEMA),
+            read("postings_delta", POSTINGS_DELTA_SCHEMA))
+
+
+def latest_docs(norms_delta: DataFrame) -> DataFrame:
+    """The latest table: one row per doc, ``(doc_id, ingest_batch, shard,
+    doc_len)`` of the doc's latest ingest. Re-ingest semantics are
+    REPLACE: a doc_id re-ingested in a later micro-batch supersedes its
+    earlier rows. ``max`` of a struct led by ``ingest_batch`` picks that
+    row in one aggregate (deterministic: a batch holds one row per doc,
+    and the struct's other fields break any tie)."""
+    return norms_delta.groupBy("doc_id").agg(
+        F.max(F.struct("ingest_batch", "shard", "doc_len")).alias("__l")
+    ).select("doc_id", "__l.ingest_batch", "__l.shard", "__l.doc_len")
 
 
 def load_delta_index(spark: SparkSession, warehouse: str):
@@ -188,24 +257,18 @@ def load_delta_index(spark: SparkSession, warehouse: str):
 
     block_max_tfnorm bounds are batch-local → only exact paths (TAAT /
     exhaustive) may be used; QueryEngine.search(..., method='taat').
-    Norms/stats are deduped to the latest ingest of each doc; posting
-    blocks, however, are served as-is — a doc re-ingested in 2+ batches
-    still has its OLD postings in older deltas, so pre-compaction
-    serving is exact only for append-only streams. After a re-ingest,
-    run :func:`compact_deltas` (which applies replace semantics) before
-    trusting scores.
+    Norms/stats come from the latest table (:func:`latest_docs`, one row
+    per doc); posting blocks, however, are served as-is — a doc
+    re-ingested in 2+ batches still has its OLD postings in older
+    deltas, so pre-compaction serving is exact only for append-only
+    streams. After a re-ingest, run :func:`compact_deltas` (which
+    applies replace semantics) before trusting scores.
     """
     from deces_dataprep_spark.index.builder import IndexTables
-    from deces_dataprep_spark.index.codec import require_array_layout
 
-    delta_root = os.path.join(warehouse, "postings_delta")
-    postings = spark.read.option("basePath", delta_root) \
-        .parquet(delta_root).drop("ingest_batch")
-    require_array_layout(
-        postings.schema["doc_gaps"].dataType.simpleString(), delta_root)
-    norms_all = spark.read.option("basePath", os.path.join(warehouse, "norms_delta")) \
-        .parquet(os.path.join(warehouse, "norms_delta"))
-    _, norms = _latest_norms(norms_all)
+    norms_delta, deltas = _read_deltas(spark, warehouse)
+    postings = deltas.drop("ingest_batch")
+    norms = latest_docs(norms_delta).select("shard", "doc_id", "doc_len")
     stats = norms.agg(F.count(F.lit(1)).alias("n_docs"),
                       F.avg("doc_len").alias("avgdl"))
     return IndexTables(postings=postings,
@@ -214,11 +277,42 @@ def load_delta_index(spark: SparkSession, warehouse: str):
                        trusted_bounds=False)
 
 
+def compaction_postings(deltas: DataFrame, latest: DataFrame, avgdl: float,
+                        salt, n_part: int) -> DataFrame:
+    """The compaction's posting plan: every delta posting, exploded
+    JVM-side, joins the latest table ONCE on ``(doc_id, ingest_batch)``.
+    That one join drops the postings of superseded page versions and
+    attaches each posting's dl; the fold and the block pack are the
+    batch builder's.
+
+    Each block decodes on its own (offsets from its stored first_doc),
+    so parquet splits and task boundaries cannot shift doc_ids. After
+    the join ``(shard, term, doc_id)`` is unique — a batch's delta holds
+    one folded posting per (term, doc), and only one batch per doc
+    survives — so the fold needs no tf aggregate. The latest table gets
+    no broadcast hint: it is doc-sized, and at corpus scale the planner
+    must stay free to shuffle both sides."""
+    from deces_dataprep_spark.index.builder import fold_postings, pack_blocks
+    from deces_dataprep_spark.index.codec import BLOCK_SIZE, explode_blocks
+
+    rows = explode_blocks(deltas, "ingest_batch", "shard", "term").join(
+        latest.select("doc_id", "ingest_batch",
+                      F.col("doc_len").alias("dl")),
+        ["doc_id", "ingest_batch"])
+    return pack_blocks(fold_postings(rows, salt, n_part), salt, BLOCK_SIZE,
+                       avgdl)
+
+
 def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
                    partitions: int | None = None, auto_salt: bool = True):
     """Sort-merge the accumulated posting deltas into a compacted index
     with globally-valid block-max bounds; returns IndexTables over the
     compacted warehouse (committed via the snapshot log).
+
+    One plan for every stream, whether or not it re-ingests: the latest
+    table (:func:`latest_docs`) gives the global stats in one action and
+    the compacted norms, and :func:`compaction_postings` joins it once
+    into the posting stream. Every table is read with its known schema.
 
     ``auto_salt`` keeps the batch builder's skew contract through the
     streaming path: without it, a stopword-grade term's compacted
@@ -230,69 +324,31 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     per-range block_id offsets exactly like the batch `SaltSpec` path,
     so WAND/TAAT read the compacted salted index unchanged.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     from deces_dataprep_spark.index.builder import (
         AUTO_SALT_DF_FRAC,
         AUTO_SALT_MIN_DOCS,
         IndexTables,
-        fold_postings,
         make_salt_spec,
-        pack_blocks,
-    )
-    from deces_dataprep_spark.index.codec import (
-        BLOCK_SIZE,
-        explode_blocks,
-        require_array_layout,
     )
     from deces_dataprep_spark.snapshots import SnapshotLog, write_postings
 
-    norms_all = spark.read.option("basePath", os.path.join(warehouse, "norms_delta")) \
-        .parquet(os.path.join(warehouse, "norms_delta"))
-    # One agg detects the append-only case (no doc_id ever re-ingested):
-    # then norms_all IS the latest set and the groupBy+join of
-    # _latest_norms plus the per-posting replace semi-join are all
-    # skipped — the common streaming shape pays zero replace overhead.
-    # min/max doc_id are re-ingest-invariant; only avg(doc_len) needs
-    # recomputing over the latest rows in the replace branch.
-    stats_row = norms_all.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("doc_id").alias("n"),
-        F.avg("doc_len").alias("a"),
+    norms_delta, deltas = _read_deltas(spark, warehouse)
+    latest = latest_docs(norms_delta)
+    stats_row = latest.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.avg("doc_len").alias("avgdl"),
         F.min("doc_id").alias("min_id"),
         F.max("doc_id").alias("max_id")).collect()[0]
-    append_only = int(stats_row["n_rows"]) == int(stats_row["n"])
-    if append_only:
-        latest = None
-        norms = norms_all.select("shard", "doc_id", "doc_len")
-        avgdl = float(stats_row["a"] or 0.0)
-    else:
-        latest, norms = _latest_norms(norms_all)
-        avgdl = float(norms.agg(F.avg("doc_len")).collect()[0][0] or 0.0)
-    n_docs = int(stats_row["n"])
+    n_docs = int(stats_row["n_docs"])
+    avgdl = float(stats_row["avgdl"] or 0.0)
 
-    deltas = spark.read.option("basePath", os.path.join(warehouse, "postings_delta")) \
-        .parquet(os.path.join(warehouse, "postings_delta"))
-    require_array_layout(deltas.schema["doc_gaps"].dataType.simpleString(),
-                         os.path.join(warehouse, "postings_delta"))
+    def path(name: str) -> str:
+        return os.path.join(warehouse, name)
 
-    # One posting row per block element, JVM-side. Each block decodes
-    # on its own (offsets from its stored first_doc), so parquet splits
-    # and task boundaries cannot shift doc_ids.
-    rows = explode_blocks(deltas, "ingest_batch", "shard", "term")
-    # REPLACE semantics: keep only postings from each doc's latest
-    # ingest_batch (a re-ingested doc's older postings are superseded,
-    # matching the idempotent _id overwrite of the reference's ES sink).
-    # Append-only streams (detected above) skip the semi-join outright.
-    if latest is not None:
-        rows = rows.join(
-            latest.withColumn("ingest_batch",
-                              F.col("ingest_batch").cast("long")),
-            ["doc_id", "ingest_batch"], "left_semi"
-        )
-    rows = rows.drop("ingest_batch")
-    # dl per posting (needed for the global tfnorm bounds)
-    with_dl = rows.join(
-        norms.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-    )
     # The compacted norms/stats tables depend only on the already-read
     # norms_delta rows, so their writes run on a small pool OVERLAPPING
     # the dictionary scan (guide §2.6) — but they are submitted only
@@ -300,17 +356,24 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     # overwrite warehouse/norms and warehouse/stats before the expensive
     # re-encode job has succeeded, and a mid-compaction failure would
     # then leave the four warehouse tables mutually inconsistent where
-    # the sequential code left them untouched.
-    from concurrent.futures import ThreadPoolExecutor
+    # the sequential code left them untouched. The pool's jobs keep the
+    # caller's job group and other local properties (in PySpark's
+    # default pinned-thread mode; without it the wrapper is the session
+    # itself, and there are no per-thread properties to carry).
+    inherit = inheritable_thread_target(spark)
+    if not callable(inherit):
+        def inherit(f):
+            return f
 
+    @inherit
     def _write_norms() -> None:
-        norms.write.mode("overwrite").parquet(
-            os.path.join(warehouse, "norms"))
+        latest.select("shard", "doc_id", "doc_len") \
+            .write.mode("overwrite").parquet(path("norms"))
 
+    @inherit
     def _write_stats() -> None:
-        spark.createDataFrame(
-            [(n_docs, avgdl)], "n_docs long, avgdl double"
-        ).write.mode("overwrite").parquet(os.path.join(warehouse, "stats"))
+        spark.createDataFrame([(n_docs, avgdl)], STATS_SCHEMA) \
+            .write.mode("overwrite").parquet(path("stats"))
 
     pool = ThreadPoolExecutor(max_workers=2)
     try:
@@ -331,40 +394,32 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
                                       n_ranges, n_docs, hot_terms=hot)
         # 3× parallelism, matching the batch builder's scale-adaptive
         # posting-partition default (see postings_plan_from_tokens).
-        # Same fold + pack as the batch builder. The per-(term, doc)
-        # fold is needed only on the REPLACE branch as defense-in-depth:
-        # in the append-only case every (term, doc) is provably unique
-        # already (each doc was ingested exactly once — that is what the
-        # append-only check established — and its batch's delta folded
-        # tf per doc), so the aggregate would be a 1-row-per-group
-        # identity pass over every posting; skip it and let the sort
-        # feed the pack directly.
         n_part = partitions or 3 * spark.sparkContext.defaultParallelism
-        folded = fold_postings(with_dl, salt, n_part,
-                               None if append_only else F.sum("tf"))
-        compacted = pack_blocks(folded, salt, BLOCK_SIZE, avgdl)
-        post_root = os.path.join(warehouse, "postings")
-        write_postings(spark, compacted, post_root, n_shards)
+        write_postings(spark,
+                       compaction_postings(deltas, latest, avgdl, salt,
+                                           n_part),
+                       path("postings"), n_shards)
 
         # postings landed — now norms/stats (pool) overlap the dictionary
         tail = [pool.submit(_write_norms), pool.submit(_write_stats)]
-        written = spark.read.option("basePath", post_root).parquet(post_root)
+        written = spark.read.schema(POSTINGS_SCHEMA) \
+            .option("basePath", path("postings")).parquet(path("postings"))
         dictionary_from_postings(written).write.mode("overwrite").parquet(
-            os.path.join(warehouse, "dictionary"))
+            path("dictionary"))
         for f in tail:
             f.result()
     finally:
         pool.shutdown(wait=True)
     SnapshotLog(warehouse).commit(
-        {k: os.path.join(warehouse, k)
-         for k in ("postings", "dictionary", "norms", "stats")},
+        {k: path(k) for k in ("postings", "dictionary", "norms", "stats")},
         "stream-compact", "deltas", "compaction",
     )
     return IndexTables(
         postings=written,
-        dictionary=spark.read.parquet(os.path.join(warehouse, "dictionary")),
-        norms=spark.read.parquet(os.path.join(warehouse, "norms")),
-        stats=spark.read.parquet(os.path.join(warehouse, "stats")),
+        dictionary=spark.read.schema(DICTIONARY_SCHEMA)
+        .parquet(path("dictionary")),
+        norms=spark.read.schema(NORMS_SCHEMA).parquet(path("norms")),
+        stats=spark.read.schema(STATS_SCHEMA).parquet(path("stats")),
     )
 
 

@@ -15,9 +15,12 @@ from pyspark.sql import functions as F
 
 from deces_dataprep_spark.snapshots import load_index, write_index
 
+#: the checkout under test: the subprocess imports the package from it
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 BUILD_SCRIPT = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from deces_dataprep_spark.session import get_spark
 from deces_dataprep_spark.snapshots import write_index
 
@@ -52,7 +55,7 @@ def test_sigkill_mid_build_then_resume(spark, tmp_path):
     script = str(tmp_path / "build.py")
     with open(script, "w") as f:
         f.write(BUILD_SCRIPT)
-    proc = subprocess.Popen([sys.executable, script, wh],
+    proc = subprocess.Popen([sys.executable, script, wh, ROOT],
                             stdout=subprocess.DEVNULL,
                             stderr=subprocess.DEVNULL)
     # wait for the first shard marker, then SIGKILL the whole build

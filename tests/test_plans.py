@@ -307,3 +307,35 @@ def test_curation_single_arrow_eval_node(spark, docs):
     plan = _plan(curate(docs.limit(500), bench))
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
+
+
+def test_compaction_joins_postings_once_against_latest_table(spark,
+                                                             tmp_path):
+    """Compaction's posting plan, executed: the exploded delta postings
+    meet exactly one join, the one-row-per-doc latest table is its build
+    side, and no exploded-postings side is ever broadcast (BuildLeft).
+    The pages are web-sized (about 80 tokens), so the posting stream
+    outweighs the doc table as on a real crawl; the latest table carries
+    no broadcast hint, the planner picks the side."""
+    from stream_fixtures import pages_df, recrawl_slices
+
+    from deces_dataprep_spark.streaming.incremental import (
+        _append_batch,
+        _read_deltas,
+        compaction_postings,
+        latest_docs,
+    )
+
+    wh = str(tmp_path / "wh")
+    for s, rows in enumerate(recrawl_slices()):
+        _append_batch(spark, pages_df(spark, rows), s, wh, n_shards=2)
+    norms_delta, deltas = _read_deltas(spark, wh)
+    out = compaction_postings(deltas, latest_docs(norms_delta), 40.0, None, 8)
+    out.collect()
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    joins = re.findall(r"\b\w*Join \[.*", final)
+    assert len(joins) == 1, final
+    assert "BuildRight" in joins[0], final
+    assert "BuildLeft" not in final, final

@@ -331,3 +331,179 @@ def test_wand_refused_on_uncompacted_delta_index(spark, streamed_wh):
         eng.search("spark merge sort table", k=10, method="wand")
     # 'auto' silently takes the exact TAAT route instead of raising
     assert eng.search("spark merge sort table", k=10, method="auto")
+
+
+def test_duplicate_doc_id_in_one_batch_keeps_one_version(spark, tmp_path):
+    """A doc_id twice in ONE micro-batch is one doc: the batch keeps the
+    latest warc_ts (ties: greater url, then greater text) on both the
+    norms and the delta side, so compaction writes one norms row, stats
+    over the docs, and the kept version's tfs — not both versions' tfs
+    summed and then doubled by a two-row norms join."""
+    import datetime as dt
+
+    from deces_dataprep_spark.index.codec import explode_blocks
+    from deces_dataprep_spark.streaming.incremental import (
+        PAGES_SCHEMA,
+        _append_batch,
+    )
+
+    wh = str(tmp_path / "wh")
+    batch = spark.createDataFrame(
+        [(1, "apple banana"), (2, "apple apple cherry"),
+         (2, "apple kiwi kiwi kiwi mango"), (3, "kiwi")],
+        "doc_id long, text string")
+    _append_batch(spark, batch, 0, wh, n_shards=2)
+    t = compact_deltas(spark, wh, n_shards=2)
+
+    assert sorted((r["doc_id"], r["doc_len"]) for r in t.norms.collect()) \
+        == [(1, 2), (2, 5), (3, 1)]
+    stats = t.stats.collect()[0]
+    assert (stats["n_docs"], stats["avgdl"]) == (3, 8 / 3)
+    assert {r["term"]: (r["df"], r["cf"]) for r in t.dictionary.collect()} \
+        == {"apple": (2, 2), "banana": (1, 1), "kiwi": (2, 4),
+            "mango": (1, 1)}
+    tfs = {(r["term"], r["doc_id"]): r["tf"]
+           for r in explode_blocks(t.postings, "term").collect()}
+    assert tfs[("kiwi", 2)] == 3 and tfs[("kiwi", 3)] == 1
+    assert tfs[("apple", 2)] == 1
+
+    # the later crawl wins even where its text sorts first
+    day = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    wh2 = str(tmp_path / "wh2")
+    pages = spark.createDataFrame(
+        [("u5", day + dt.timedelta(days=1), None, "aardvark", "en", 5),
+         ("u5", day, None, "zebra yak", "en", 5)], PAGES_SCHEMA)
+    _append_batch(spark, pages, 0, wh2, n_shards=2)
+    t2 = compact_deltas(spark, wh2, n_shards=2)
+    assert [(r["doc_id"], r["doc_len"]) for r in t2.norms.collect()] \
+        == [(5, 1)]
+    assert sorted(r["term"] for r in t2.dictionary.collect()) \
+        == ["aardvark"]
+
+
+def _feed(spark, base: str, rows, s: int) -> str:
+    """Land slice ``s`` as one file and run the stream over it; returns
+    the warehouse."""
+    from stream_fixtures import write_slice
+
+    write_slice(rows, os.path.join(base, "in", f"slice-{s}.parquet"))
+    wh = os.path.join(base, "wh")
+    incremental_index(spark, stream_pages(spark, os.path.join(base, "in")),
+                      wh, n_shards=2,
+                      checkpoint=os.path.join(base, "ckpt"),
+                      available_now=True).awaitTermination(300)
+    return wh
+
+
+@pytest.fixture(scope="module")
+def recrawl_stream(spark, tmp_path_factory):
+    """Three streamed slices of web-sized pages; slices 2 and 3
+    re-crawl earlier doc_ids. Returns (warehouse, latest page rows)."""
+    from stream_fixtures import latest_versions, recrawl_slices
+
+    base = str(tmp_path_factory.mktemp("recrawl"))
+    slices = recrawl_slices()
+    for s, rows in enumerate(slices):
+        wh = _feed(spark, base, rows, s)
+    return wh, latest_versions(slices)
+
+
+def test_compaction_equals_write_index_over_latest_versions(
+        spark, recrawl_stream, tmp_path):
+    """After a re-crawl stream, compaction writes exactly what a batch
+    build over each doc's latest version writes: the same block rows
+    (decoded ids and tfs, block bounds), dictionary, norms and stats."""
+    from stream_fixtures import pages_df
+
+    from deces_dataprep_spark.snapshots import load_index, write_index
+
+    wh, latest = recrawl_stream
+    compacted = compact_deltas(spark, wh, n_shards=2)
+    write_index(spark, pages_df(spark, latest), str(tmp_path / "batch"),
+                n_shards=2, resume=False)
+    built = load_index(spark, str(tmp_path / "batch"))
+
+    cols = {
+        "postings": ["shard", "term", "block_id", "n_docs", "first_doc",
+                     "last_doc", "doc_gaps", "tfs", "block_max_tfnorm",
+                     "sum_tf"],
+        "dictionary": ["term", "df", "cf"],
+        "norms": ["shard", "doc_id", "doc_len"],
+        "stats": ["n_docs", "avgdl"],
+    }
+    for name, cs in cols.items():
+        got = sorted(tuple(r) for r in
+                     getattr(compacted, name).select(*cs).collect())
+        want = sorted(tuple(r) for r in
+                      getattr(built, name).select(*cs).collect())
+        assert got == want, name
+    assert compacted.stats.collect()[0]["n_docs"] == len(latest)
+
+
+def test_recrawl_compaction_job_count(spark, recrawl_stream):
+    """One stats action, one latest table joined once, no schema-
+    inference reads: a re-crawl compaction launches at most 13 Spark
+    jobs (the pool's writes count too: they keep the job group)."""
+    wh, _ = recrawl_stream
+    sc = spark.sparkContext
+    sc.setJobGroup("compaction-jobs", "re-crawl compaction")
+    try:
+        compact_deltas(spark, wh, n_shards=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("compaction-jobs")
+    assert 0 < len(jobs) <= 13, len(jobs)
+
+
+def test_warm_refresh_compiles_no_new_code(spark, tmp_path):
+    """Spark's generated-class cache holds a whole refresh (slice
+    write, re-crawl compaction, one Spark-route query): the second
+    identical refresh, into a second warehouse, compiles at most 2
+    classes. With Spark's default 100-entry cache it recompiles the
+    classes the first refresh's later stages evicted."""
+    from stream_fixtures import recrawl_slices
+
+    slices = recrawl_slices()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def refresh(base: str, s: int):
+        tables = compact_deltas(spark, _feed(spark, base, slices[s], s),
+                                n_shards=2)
+        QueryEngine(tables, io="spark").search("w1 w7 w42", k=10)
+
+    bases = [str(tmp_path / name) for name in ("a", "b")]
+    for base in bases:
+        refresh(base, 0)
+    compiled = []
+    for base in bases:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        refresh(base, 1)
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[1] <= 2, compiled
+
+
+def test_binary_delta_layout_requires_rebuild(spark, tmp_path):
+    """Deltas are read with their known schema, so the varint layout is
+    caught first from one delta footer, by compaction and the delta
+    index alike."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deces_dataprep_spark.index.codec import RebuildRequired
+
+    wh = tmp_path / "old"
+    for name, cols in {
+        "postings_delta": {"shard": [0], "term": ["a"], "block_id": [0],
+                           "n_docs": [1], "first_doc": [8], "last_doc": [8],
+                           "doc_gaps": pa.array([b"\x08"], pa.binary()),
+                           "tfs": pa.array([b"\x01"], pa.binary()),
+                           "block_max_tfnorm": [0.5], "sum_tf": [1]},
+        "norms_delta": {"shard": [0], "doc_id": [8], "doc_len": [1]},
+    }.items():
+        part = wh / name / "ingest_batch=0"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table(cols), str(part / "part-0.parquet"))
+    with pytest.raises(RebuildRequired, match="rebuild"):
+        compact_deltas(spark, str(wh), n_shards=2)
+    with pytest.raises(RebuildRequired, match="rebuild"):
+        load_delta_index(spark, str(wh))

@@ -4,9 +4,11 @@ shuffle count). Run: python tools/dump_plans.py"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = "/root/testdata/sf0.01"
 
@@ -33,12 +35,19 @@ slow. Round-4 fixes, in order of effect:
    file source's partitioning (1 file → ~4 tasks); the raw text shuffle is
    ~15 MB while the tokenize is the real work, so `repartition(defaultParallelism)`
    first. Ingest 17.0 → 12.8 s on 40k docs.
-3. **Append-only fast path in `compact_deltas`**: one agg
-   (`count == count_distinct(doc_id)`) detects that no doc was re-ingested,
-   skipping `_latest_norms`' groupBy+join and the per-posting replace
-   semi-join entirely — the common streaming shape pays zero replace
-   overhead. Replace semantics are unchanged when a re-ingest IS present
-   (covered by tests/test_streaming.py).
+3. **One latest table in `compact_deltas`** (replaces the round-4
+   append-only fast path): one aggregate over `norms_delta` keeps one row
+   per doc, `(doc_id, ingest_batch, shard, doc_len)` of its latest
+   ingest, and the exploded delta postings join it ONCE on
+   `(doc_id, ingest_batch)` — that join both applies re-ingest REPLACE
+   semantics and attaches dl, for every stream, re-ingesting or not. The
+   stats are one action over it, and every table is read with its known
+   schema (no `parquet` schema-inference jobs): a re-crawl compaction went
+   from 22 to 13 jobs. The former shape (a left-semi join plus an inner
+   join with `norms ⋈ latest`, whose estimated size is the product of its
+   children's) made AQE broadcast the exploded *postings* (`BuildLeft`)
+   and funnel them through one task (asserted against in
+   tests/test_plans.py).
 4. **bench.py warms the streaming machinery** on a 400-doc stream before the
    timed best-of-2 reps, so the measured number is steady-state ingest, not
    JVM cold start.
@@ -381,7 +390,7 @@ def main() -> None:
             shard_size=40, max_docs_per_value=2),
     )
     sections.append(STREAM_NOTE)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical plans of the headline operators\n\n"
             "Generated by `tools/dump_plans.py` (sf0.01 inputs; plans are "
