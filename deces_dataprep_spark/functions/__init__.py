@@ -6,6 +6,7 @@ from deces_dataprep_spark.functions.analyze import (  # noqa: F401
     normalize_series,
     prefixes_col,
     tokenize_series,
+    tokenize_text,
     tokenize_udf,
     tokens_col,
 )

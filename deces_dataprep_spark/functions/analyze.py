@@ -18,7 +18,7 @@ repo, ``projects/deces-dataprep/datasets/deces_index.yml``):
 * ``index_prefixes {min_chars:4, max_chars:6}`` (deces_index.yml:80-82,
   119-121): extra prefix terms for date-like strings.
 
-Three implementations must agree (and are tested against each other):
+Four implementations must agree (and are tested against each other):
 
 1. ``tokens_col`` — native Spark expressions (JVM, whole-stage codegen):
    the hot path for the index build. Java regex ``[^\\p{L}\\p{Nd}]``
@@ -30,6 +30,11 @@ Three implementations must agree (and are tested against each other):
    accented text matters.
 3. ``duckdb_tokens_sql`` — the DuckDB-SQL fragment used by the oracle
    queries, identical on the ASCII oracle corpus.
+4. ``tokenize_text`` — the pandas chain's pure-Python twin for ONE
+   driver-side string (query text, phrases): the same five steps with
+   no Series built (a three-word query: 0.83 ms → 0.002 ms on a 4-core
+   x86 host). Tested equal to ``tokenize_series`` on random Unicode
+   text and on a sweep of code points (tests/test_analyze.py).
 """
 
 from __future__ import annotations
@@ -84,6 +89,16 @@ def tokenize_series(s: pd.Series) -> pd.Series:
     return normalize_series(s).str.split(" ").map(
         lambda toks: [t for t in toks if t] if isinstance(toks, list) else None
     )
+
+
+def tokenize_text(text: str) -> list[str]:
+    """:func:`tokenize_series` on one string, in plain Python: char
+    filter, NFKD, ASCII with ``ignore``, lowercase, split on spaces
+    dropping empties. The pandas chain's ``strip`` and space collapse
+    are implied: after the char filter only spaces separate tokens, and
+    no letter or digit folds to ASCII whitespace other than a space."""
+    return [t for t in _fold_ascii(_CHAR_FILTER.sub(" ", text)).lower()
+            .split(" ") if t]
 
 
 @F.pandas_udf(ArrayType(StringType()))

@@ -11,7 +11,12 @@ segments — with the same pruning the Spark path gets:
   (the build writes postings sorted by (shard, term, block_id) within
   each file, in row groups of ``builder.POSTINGS_ROW_GROUP_BYTES``, so
   a term touches ~1 row group per file);
-* the hive ``shard=`` path component is parsed into a column for free.
+* the hive ``shard=`` path component is parsed into a column for free;
+* each postings file's matching row groups are read in ONE call, only
+  the block columns, and the files are read in parallel on one
+  process-wide thread pool sized to the usable cores (pyarrow releases
+  the GIL while it reads and filters). A shard split into several files
+  by ``snapshots.optimize_postings`` is read by several threads at once.
 
 The reader is handed the snapshot manifest's FILE LIST (not the live
 directory), so serving stays pinned to a snapshot while later commits
@@ -20,7 +25,33 @@ append — the same time-travel guarantee the Spark reader has.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
+
+from deces_dataprep_spark.session import usable_cores
+
+#: the posting-block columns :func:`block_columns` reads (``shard``
+#: comes from the path); a fetch reads no other column
+BLOCK_COLUMNS = ["term", "block_id", "n_docs", "first_doc", "last_doc",
+                 "doc_gaps", "tfs", "block_max_tfnorm"]
+
+_pool: ThreadPoolExecutor | None = None
+_pool_lock = threading.Lock()
+
+
+def _fetch_pool() -> ThreadPoolExecutor:
+    """The postings-fetch pool: one per process, created on first use,
+    sized to the usable cores. Shared by every reader, because engines
+    are cheap and many (a pool per reader would keep threads per
+    engine)."""
+    global _pool
+    with _pool_lock:
+        if _pool is None:
+            _pool = ThreadPoolExecutor(max_workers=usable_cores(),
+                                       thread_name_prefix="arrow-fetch")
+        return _pool
 
 
 def block_columns(t) -> dict:
@@ -125,12 +156,14 @@ class ArrowIndexReader:
         return self._dict_cache
 
     def _rg_index(self):
-        """(ParquetFile, row-group idx, term_min, term_max, shard) for
-        every row group of every postings file — the serving tier's
+        """(ParquetFile, lock, shard, [(row-group idx, term_min,
+        term_max)]) for every postings file — the serving tier's
         posting-pointer structure (SURVEY §1.4 ``posting_ptr``): footers
         are parsed ONCE here; a query reads only the row groups whose
         [min, max] term range can contain one of its terms. The build
-        sorts postings by term within each file, so ranges are tight."""
+        sorts postings by term within each file, so ranges are tight.
+        The lock keeps one ParquetFile to one thread at a time when
+        queries share a reader."""
         if not hasattr(self, "_rg_cache"):
             import re
 
@@ -143,37 +176,48 @@ class ArrowIndexReader:
                 pf = pq.ParquetFile(frag.path)
                 md = pf.metadata
                 term_i = md.schema.names.index("term")
+                groups = []
                 for i in range(md.num_row_groups):
                     st = md.row_group(i).column(term_i).statistics
                     if st is None or not st.has_min_max:
-                        entries.append((pf, i, None, None, shard))
+                        groups.append((i, None, None))
                     else:
-                        entries.append((pf, i, st.min, st.max, shard))
+                        groups.append((i, st.min, st.max))
+                entries.append((pf, threading.Lock(), shard, groups))
             self._rg_cache = entries
         return self._rg_cache
 
     def postings(self, terms: list[str]) -> dict:
         """Block rows for the terms as :func:`block_columns`. Reads only
-        the row groups whose term range matches (see _rg_index)."""
+        the row groups whose term range matches (see _rg_index): one
+        ``read_row_groups`` call per file, the files in parallel."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        tabs = []
-        for pf, i, tmin, tmax, shard in self._rg_index():
-            if tmin is not None and not any(
-                tmin <= t <= tmax for t in terms
-            ):
-                continue
-            t = pf.read_row_group(i)
-            t = t.filter(pc.is_in(t["term"], pa.array(terms)))
-            if t.num_rows:
-                tabs.append(t.append_column(
-                    "shard", pa.array([shard] * t.num_rows, pa.int32())))
+        wanted = pa.array(terms, pa.string())
+        reads = []
+        for pf, lock, shard, groups in self._rg_index():
+            ids = [i for i, tmin, tmax in groups
+                   if tmin is None or any(tmin <= t <= tmax for t in terms)]
+            if ids:
+                reads.append((pf, lock, shard, ids))
+
+        def read(job):
+            pf, lock, shard, ids = job
+            with lock:
+                t = pf.read_row_groups(ids, columns=BLOCK_COLUMNS,
+                                       use_threads=False)
+            t = t.filter(pc.is_in(t["term"], wanted))
+            return t.append_column(
+                "shard", pa.array(np.full(t.num_rows, shard, np.int32)))
+
+        tabs = (list(_fetch_pool().map(read, reads)) if len(reads) > 1
+                else [read(job) for job in reads])
         if not tabs:
-            empty = self._post.schema.empty_table()
-            if "shard" not in empty.column_names:
-                empty = empty.append_column("shard", pa.array([], pa.int32()))
-            tabs = [empty]
+            schema = pa.schema([self._post.schema.field(c)
+                                for c in BLOCK_COLUMNS])
+            tabs = [schema.append(pa.field("shard", pa.int32()))
+                    .empty_table()]
         return block_columns(pa.concat_tables(tabs))
 
     def shard_norms(self, shard: int) -> tuple[np.ndarray, np.ndarray]:

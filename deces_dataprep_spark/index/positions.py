@@ -127,11 +127,9 @@ def phrase_match(docs: DataFrame, phrase: str, text_col: str = "text",
     :func:`_slop_fold` (ES ``match_phrase`` ``slop`` parameter)."""
     # NOT analyze_query: that de-dups terms; a phrase needs the raw
     # ordered term list ("to be or not to be").
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import tokenize_text
 
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-
-    terms = list(tokenize_series(pd.Series([phrase])).iloc[0])
+    terms = tokenize_text(phrase)
     if not terms:
         return docs.select(F.col(id_col).alias("doc_id")).limit(0)
     toked = docs.select(F.col(id_col).alias("doc_id"),
@@ -144,11 +142,9 @@ def phrase_match_from_index(spark: SparkSession, positions: DataFrame,
                             phrase: str, slop: int = 0) -> DataFrame:
     """The same phrase over the positional index: pushdown-fetch the
     phrase terms' rows, self-join per doc, adjacency fold."""
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import tokenize_text
 
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-
-    terms = list(tokenize_series(pd.Series([phrase])).iloc[0])
+    terms = tokenize_text(phrase)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
     return phrase_terms_from_index(positions, terms, slop)
@@ -187,11 +183,9 @@ def match_phrase_prefix(docs: DataFrame, phrase: str,
     contract: the edge-ngram/index_prefixes fields of
     deces_index.yml:28-33,80-82 exist to serve exactly this query
     shape."""
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import tokenize_text
 
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-
-    terms = list(tokenize_series(pd.Series([phrase])).iloc[0])
+    terms = tokenize_text(phrase)
     if not terms:
         return docs.select(F.col(id_col).alias("doc_id")).limit(0)
     toked = docs.select(F.col(id_col).alias("doc_id"),
@@ -224,14 +218,12 @@ def duckdb_phrase_match_sql(phrase: str, table: str = "documents",
     joined with an increasing-chain + span bound — an INDEPENDENT
     derivation of the same contract (the engine folds per doc; the
     oracle enumerates chains)."""
-    import pandas as pd
-
     from deces_dataprep_spark.functions.analyze import (
         duckdb_tokens_sql,
-        tokenize_series,
+        tokenize_text,
     )
 
-    terms = list(tokenize_series(pd.Series([phrase])).iloc[0])
+    terms = tokenize_text(phrase)
     toks = duckdb_tokens_sql(text_col)
     if slop > 0:
         if prefix_last:
@@ -321,10 +313,9 @@ def span_first_match(docs: DataFrame, term: str, end: int,
     0-based position p that is ``p < end`` (position boundaries are
     how ES anchors 'near the beginning of the field').  One row-local
     array kernel over the shared tokenize; no explode, no shuffle."""
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import tokenize_text
 
-    t = list(tokenize_series(pd.Series([term])).iloc[0])
+    t = tokenize_text(term)
     if len(t) != 1:
         raise ValueError("span_first takes exactly one analyzed term")
     toked = docs.select(F.col(id_col).alias("doc_id"),
@@ -345,11 +336,9 @@ def span_near_match(docs: DataFrame, terms_in: list[str], slop: int,
     ``|p − q| − 1 ≤ slop`` — the overwhelmingly common span shape; ≥3
     unordered clauses would need the k-list minimal-window merge and
     raises until someone needs it."""
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import tokenize_text
 
-    terms = [w for t in terms_in
-             for w in tokenize_series(pd.Series([t])).iloc[0]]
+    terms = [w for t in terms_in for w in tokenize_text(t)]
     if len(terms) < 2:
         raise ValueError("span_near needs at least two clauses")
     toked = docs.select(F.col(id_col).alias("doc_id"),

@@ -18,27 +18,21 @@ rank-identity contract):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deces_dataprep_spark.functions.analyze import tokenize_series, tokens_col
+from deces_dataprep_spark.functions.analyze import tokenize_text, tokens_col
 from deces_dataprep_spark.index import bm25
 from deces_dataprep_spark.index.builder import IndexTables, term_frequencies
 from deces_dataprep_spark.index.wand import TermPostings, taat_topk, wand_topk
 
 
 def analyze_query(q: str) -> list[str]:
-    """Query text through the same analyzer chain as indexing."""
-    toks = tokenize_series(pd.Series([q])).iloc[0]
-    # de-dup, keep order (conjunctive tf of repeated terms is not what ES does)
-    seen: set[str] = set()
-    out = []
-    for t in toks:
-        if t not in seen:
-            seen.add(t)
-            out.append(t)
-    return out
+    """Query text through the same analyzer chain as indexing, in its
+    pure-Python twin (:func:`~deces_dataprep_spark.functions.analyze.
+    tokenize_text`), de-duplicated in order (conjunctive tf of repeated
+    terms is not what ES does)."""
+    return list(dict.fromkeys(tokenize_text(q)))
 
 
 class QueryEngine:
@@ -368,11 +362,8 @@ class QueryEngine:
 
         Returns sorted matching doc_ids."""
         import numpy as np
-        import pandas as pd
 
-        from deces_dataprep_spark.functions.analyze import tokenize_series
-
-        terms = list(tokenize_series(pd.Series([phrase])).iloc[0])
+        terms = tokenize_text(phrase)
         if not terms:
             return []
         use_dist = method == "distributed"
@@ -3032,11 +3023,7 @@ def mlt_topk_from_index(
     (tested)."""
     import math
 
-    import pandas as pd
-
-    from deces_dataprep_spark.functions.analyze import tokenize_series
-
-    toks = list(tokenize_series(pd.Series([source_text])).iloc[0])
+    toks = tokenize_text(source_text)
     if not toks:
         return spark.createDataFrame([], "doc_id long, score double")
     if n_docs is None or avgdl is None:
@@ -4435,12 +4422,9 @@ def suggest_phrase(
 
     import pandas as pd
 
-    from deces_dataprep_spark.functions.analyze import (
-        normalize_series,
-        tokenize_series,
-    )
+    from deces_dataprep_spark.functions.analyze import normalize_series
 
-    terms = list(tokenize_series(pd.Series([text])).iloc[0])
+    terms = tokenize_text(text)
     if not terms:
         return spark.createDataFrame([], "suggestion string, score double")
     if engine is not None:
@@ -4555,10 +4539,9 @@ def duckdb_suggest_phrase_sql(
     from deces_dataprep_spark.functions.analyze import (
         duckdb_tokens_sql,
         normalize_series,
-        tokenize_series,
     )
 
-    terms = list(tokenize_series(pd.Series([text])).iloc[0])
+    terms = tokenize_text(text)
     if not terms:
         return ("SELECT '' AS suggestion, 0.0 AS score WHERE FALSE")
     toks = duckdb_tokens_sql("text")

@@ -46,13 +46,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deces_dataprep_spark.functions.analyze import (
     duckdb_tokens_sql,
-    tokenize_series,
+    tokenize_text,
     tokens_col,
 )
 from deces_dataprep_spark.index import bm25
@@ -158,7 +157,7 @@ def _scan_int(q: str, i: int) -> tuple[int, int]:
 
 
 def _analyze_word(w: str) -> list[str]:
-    return list(tokenize_series(pd.Series([w])).iloc[0])
+    return tokenize_text(w)
 
 
 def _atom(tok: tuple) -> QNode | None:

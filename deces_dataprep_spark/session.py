@@ -30,6 +30,23 @@ LOCAL_MEM_SHARE = 0.4
 CODEGEN_CACHE_ENTRIES = 1000
 
 
+def usable_cores() -> int:
+    """The cores this process may run on (its CPU affinity set, which a
+    container's cpuset narrows), or ``os.cpu_count()`` where the OS
+    reports no affinity."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def default_cores() -> int:
+    """Local-mode cores: ``$SPARK_GRAFT_CPUS`` when set, else
+    :func:`usable_cores`."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else usable_cores()
+
+
 def _local_driver_mem() -> str | None:
     """LOCAL_MEM_SHARE of MemTotal (at least 1 GiB), or None when the
     host does not expose /proc/meminfo."""
@@ -50,8 +67,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    Defaults follow the local sandbox (``local[$SPARK_GRAFT_CPUS]``,
-    32 cores); on a real cluster, ``master`` and memory come from
+    Defaults follow the local host (``local[n]`` with n from
+    :func:`default_cores`: ``$SPARK_GRAFT_CPUS``, else the usable
+    cores); on a real cluster, ``master`` and memory come from
     spark-submit and only the SQL confs below matter.
 
     Driver memory: ``$SPARK_DRIVER_MEM`` when set, and then the whole
@@ -67,7 +85,7 @@ def get_spark(
     (:data:`CODEGEN_CACHE_ENTRIES`) is a static SQL conf too: under
     spark-submit pass ``--conf spark.sql.codegen.cache.maxEntries=1000``.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     master = master or f"local[{cpus}]"
     n_shuffle = shuffle_partitions if shuffle_partitions is not None else max(cpus, 8)
     mem = os.environ.get("SPARK_DRIVER_MEM")
@@ -88,6 +106,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        # a persisted plan keeps AQE's partition coalescing: the
+        # compaction's cached latest table is then written as the one
+        # norms file AQE gives it uncached, not one file per shuffle
+        # partition (8 on 4 cores)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
     )
     if mem:
         # Pre-commit the whole heap at JVM start (-Xms == -Xmx +

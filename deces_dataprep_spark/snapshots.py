@@ -38,6 +38,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: the build metrics table, one row per (run_id, stage, partition)
+METRICS_SCHEMA = ("run_id string, stage string, partition_id int, "
+                  "tokens long, postings long, secs double")
+
 
 def pipeline_version() -> str:
     """Content hash of the engine source — same idea as the reference's
@@ -324,9 +328,10 @@ def optimize_postings(spark: SparkSession, warehouse: str,
     small row groups (:func:`write_postings`), so a term lookup touches
     about one row group per shard. This pass additionally splits every
     shard into ``files_per_shard`` range-partitioned files with row
-    groups of ``row_group_bytes`` — the layout for a serving tier that
-    reads shards in parallel — and re-sorts the positional table the
-    same way (phrase serving prunes on term like the posting fetch).
+    groups of ``row_group_bytes`` — files the arrow reader
+    (``index.arrow_serve``) reads in parallel, one thread per file —
+    and re-sorts the positional table the same way (phrase serving
+    prunes on term like the posting fetch).
 
     Old snapshots stay valid: the rewrite lands in a fresh
     ``postings_serve/<id>/`` location; unchanged tables keep their
@@ -447,10 +452,13 @@ def write_index(
     from pyspark.sql import functions as F  # local alias for clarity
 
     from deces_dataprep_spark.index.builder import (
+        POSTINGS_SCHEMA,
+        STATS_SCHEMA,
         auto_salt_spec,
         dictionary_from_postings,
         docs_with_tokens,
         hot_terms_by_df,
+        local_rows,
         make_salt_spec,
         norms_from_tokens,
         postings_plan_from_tokens,
@@ -537,15 +545,21 @@ def write_index(
         # postings land they run on the overlap pool, back-filling executor
         # slots while the main thread collects lineage counts and writes
         # markers/metrics — overlap of independent jobs (guide §2.6).
+        # The postings just written are read with their known schema:
+        # no schema-inference job.
+        def read_postings(*paths: str) -> DataFrame:
+            return spark.read.schema(POSTINGS_SCHEMA) \
+                .option("basePath", post_root).parquet(*paths)
+
         def _write_dictionary() -> None:
-            written = spark.read.option("basePath", post_root).parquet(post_root)
-            dictionary_from_postings(written).write.mode("overwrite").parquet(
-                os.path.join(warehouse, "dictionary"))
+            dictionary_from_postings(read_postings(post_root)) \
+                .write.mode("overwrite").parquet(
+                    os.path.join(warehouse, "dictionary"))
 
         def _write_stats() -> None:
-            spark.createDataFrame(
-                [(n_docs_g, avgdl_g)], "n_docs long, avgdl double"
-            ).write.mode("overwrite").parquet(os.path.join(warehouse, "stats"))
+            local_rows(spark, [(n_docs_g, avgdl_g)], STATS_SCHEMA) \
+                .write.mode("overwrite").parquet(
+                    os.path.join(warehouse, "stats"))
 
         tail: list = []
         for b0 in range(0, len(todo), shard_batch):
@@ -563,7 +577,7 @@ def write_index(
                 tail = [pool.submit(_write_dictionary), pool.submit(_write_stats)]
             aggs = {
                 int(r["shard"]): r
-                for r in spark.read.option("basePath", post_root).parquet(
+                for r in read_postings(
                     *[os.path.join(post_root, f"shard={s}") for s in batch]
                 ).groupBy("shard").agg(
                     F.count(F.lit(1)).alias("blocks"),
@@ -636,11 +650,11 @@ def write_index(
         pool.shutdown(wait=True)
 
     if metrics:
-        spark.createDataFrame(
+        local_rows(
+            spark,
             [(m["run_id"], m["stage"], m["partition_id"], m["tokens"],
               m["postings"], m["secs"]) for m in metrics],
-            "run_id string, stage string, partition_id int, tokens long, "
-            "postings long, secs double",
+            METRICS_SCHEMA,
         ).write.mode("append").parquet(os.path.join(warehouse, "metrics"))
 
     snap = log.commit(

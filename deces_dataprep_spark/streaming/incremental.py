@@ -310,9 +310,10 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     compacted warehouse (committed via the snapshot log).
 
     One plan for every stream, whether or not it re-ingests: the latest
-    table (:func:`latest_docs`) gives the global stats in one action and
-    the compacted norms, and :func:`compaction_postings` joins it once
-    into the posting stream. Every table is read with its known schema.
+    table (:func:`latest_docs`), persisted once, gives the global stats
+    in one action and the compacted norms, and
+    :func:`compaction_postings` joins it once into the posting stream.
+    Every table is read with its known schema.
 
     ``auto_salt`` keeps the batch builder's skew contract through the
     streaming path: without it, a stopword-grade term's compacted
@@ -326,25 +327,22 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import StorageLevel
     from pyspark.util import inheritable_thread_target
 
     from deces_dataprep_spark.index.builder import (
         AUTO_SALT_DF_FRAC,
         AUTO_SALT_MIN_DOCS,
         IndexTables,
+        local_rows,
         make_salt_spec,
     )
     from deces_dataprep_spark.snapshots import SnapshotLog, write_postings
 
     norms_delta, deltas = _read_deltas(spark, warehouse)
-    latest = latest_docs(norms_delta)
-    stats_row = latest.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.min("doc_id").alias("min_id"),
-        F.max("doc_id").alias("max_id")).collect()[0]
-    n_docs = int(stats_row["n_docs"])
-    avgdl = float(stats_row["avgdl"] or 0.0)
+    # three consumers (the stats action, the postings join, the norms
+    # write) share one evaluation of the latest table
+    latest = latest_docs(norms_delta).persist(StorageLevel.MEMORY_AND_DISK)
 
     def path(name: str) -> str:
         return os.path.join(warehouse, name)
@@ -372,11 +370,18 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
 
     @inherit
     def _write_stats() -> None:
-        spark.createDataFrame([(n_docs, avgdl)], STATS_SCHEMA) \
+        local_rows(spark, [(n_docs, avgdl)], STATS_SCHEMA) \
             .write.mode("overwrite").parquet(path("stats"))
 
     pool = ThreadPoolExecutor(max_workers=2)
     try:
+        stats_row = latest.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.avg("doc_len").alias("avgdl"),
+            F.min("doc_id").alias("min_id"),
+            F.max("doc_id").alias("max_id")).collect()[0]
+        n_docs = int(stats_row["n_docs"])
+        avgdl = float(stats_row["avgdl"] or 0.0)
         salt = None
         if auto_salt and n_docs >= AUTO_SALT_MIN_DOCS:
             # df estimate per term from block metadata — a cheap agg over
@@ -410,6 +415,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
             f.result()
     finally:
         pool.shutdown(wait=True)
+        latest.unpersist()
     SnapshotLog(warehouse).commit(
         {k: path(k) for k in ("postings", "dictionary", "norms", "stats")},
         "stream-compact", "deltas", "compaction",

@@ -3,11 +3,14 @@
 import duckdb
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from deces_dataprep_spark.functions.analyze import (
     duckdb_tokens_sql,
     normalize_series,
     tokenize_series,
+    tokenize_text,
 )
 
 CASES = [
@@ -26,6 +29,35 @@ CASES = [
 def test_tokenize_pandas(raw, expected):
     out = tokenize_series(pd.Series([raw])).iloc[0]
     assert out == expected
+    assert tokenize_text(raw) == expected
+
+
+# characters where folding, lowercasing or the char filter do something
+# unusual: İ lowers to i + a combining mark, ² folds to 2, ﷺ folds to
+# several words, ⑴ to "(1)", ß keeps no ASCII form, ﬁ folds to "fi"
+_TRICKY = ["", " ", "\t\n", "İ", "İstanbul", "²", "ﷺ", "⑴", "ß", "ﬁ",
+           "_", "é", "\u0301", "Ⅻ", "ǅ", "x\u00a0y", "٣"]
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.one_of(st.sampled_from(_TRICKY),
+                          st.text(max_size=12)), max_size=6))
+def test_tokenize_text_equals_pandas_chain(parts):
+    text = " ".join(parts)
+    assert tokenize_text(text) == tokenize_series(pd.Series([text])).iloc[0]
+
+
+def test_tokenize_text_code_point_sweep():
+    """A deterministic sample (every 13th) of the sweep over U+0020 to
+    U+2FFFF, each code point c in ``x<c>y <c> Ab<c><c>_z\t<c>``, plus
+    the tricky characters above."""
+    cps = [c for c in range(0x20, 0x30000, 13) if not 0xD800 <= c <= 0xDFFF]
+    chars = [chr(c) for c in cps] + [t for t in _TRICKY if len(t) == 1]
+    texts = [f"x{c}y {c} Ab{c}{c}_z\t{c}" for c in chars]
+    want = tokenize_series(pd.Series(texts)).tolist()
+    got = [tokenize_text(t) for t in texts]
+    bad = [(t, g, w) for t, g, w in zip(texts, got, want) if g != w]
+    assert not bad, bad[:5]
 
 
 def test_normalize_keyword():

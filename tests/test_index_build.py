@@ -403,14 +403,21 @@ def test_postings_row_groups_sorted_and_skippable(spark, tmp_path,
             for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
                 assert hi <= lo, (f, ranges)
 
+        # row groups read per file, through either read call
         reads: dict[int, int] = {}
         orig = pq.ParquetFile.read_row_group
+        orig_many = pq.ParquetFile.read_row_groups
 
         def counting(self, i, *args, _orig=orig, **kwargs):
             reads[id(self)] = reads.get(id(self), 0) + 1
             return _orig(self, i, *args, **kwargs)
 
+        def counting_many(self, ids, *args, _orig=orig_many, **kwargs):
+            reads[id(self)] = reads.get(id(self), 0) + len(ids)
+            return _orig(self, ids, *args, **kwargs)
+
         monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting)
+        monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting_many)
         reader = ArrowIndexReader({k: v["files"] for k, v in files.items()})
         blocks = pq.ParquetDataset(post).read(columns=["term"])
         counts = blocks.group_by("term").aggregate([("term", "count")])
@@ -424,6 +431,7 @@ def test_postings_row_groups_sorted_and_skippable(spark, tmp_path,
             assert set(cols["term"]) == {term}
             assert reads and max(reads.values()) == 1, (term, reads)
         monkeypatch.setattr(pq.ParquetFile, "read_row_group", orig)
+        monkeypatch.setattr(pq.ParquetFile, "read_row_groups", orig_many)
 
 
 @settings(max_examples=8, deadline=None)

@@ -9,7 +9,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from deces_dataprep_spark.index.builder import STATS_SCHEMA
 from deces_dataprep_spark.snapshots import (
+    METRICS_SCHEMA,
     SnapshotLog,
     load_index,
     pipeline_version,
@@ -59,6 +61,14 @@ def test_write_load_roundtrip(spark, docs, tmp_path):
     m = spark.read.parquet(os.path.join(wh, "metrics"))
     assert m.filter(F.col("stage") == "postings").count() == 4
     assert m.filter(F.col("stage") == "norms").count() == 1
+    # the one-row-plan writes keep the declared column names and types
+
+    def types(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    assert types(m) == types(spark.createDataFrame([], METRICS_SCHEMA))
+    assert types(spark.read.parquet(os.path.join(wh, "stats"))) == types(
+        spark.createDataFrame([], STATS_SCHEMA))
 
 
 def test_resume_skips_done_shards_and_is_identical(spark, docs, tmp_path):
