@@ -34,7 +34,8 @@ Four implementations must agree (and are tested against each other):
    driver-side string (query text, phrases): the same five steps with
    no Series built (a three-word query: 0.83 ms → 0.002 ms on a 4-core
    x86 host). Tested equal to ``tokenize_series`` on random Unicode
-   text and on a sweep of code points (tests/test_analyze.py).
+   text and on a sweep of code points (tests/test_analyze.py);
+   ``normalize_text`` is the same twin of ``normalize_series``.
 """
 
 from __future__ import annotations
@@ -99,6 +100,14 @@ def tokenize_text(text: str) -> list[str]:
     no letter or digit folds to ASCII whitespace other than a space."""
     return [t for t in _fold_ascii(_CHAR_FILTER.sub(" ", text)).lower()
             .split(" ") if t]
+
+
+def normalize_text(text: str) -> str:
+    """:func:`normalize_series` on one string, in plain Python: the
+    tokens of :func:`tokenize_text` joined by single spaces, which is
+    what the chain's strip and space collapse leave of the char-filtered,
+    folded, lowered string."""
+    return " ".join(tokenize_text(text))
 
 
 @F.pandas_udf(ArrayType(StringType()))

@@ -21,6 +21,10 @@ segments — with the same pruning the Spark path gets:
 The reader is handed the snapshot manifest's FILE LIST (not the live
 directory), so serving stays pinned to a snapshot while later commits
 append — the same time-travel guarantee the Spark reader has.
+
+Blocks come back keyed by doc number (``codec`` module docstring);
+:meth:`ArrowIndexReader.all_norms` returns each shard's docnums next to
+its doc_ids, which is what the engine maps them through.
 """
 
 from __future__ import annotations
@@ -84,7 +88,10 @@ class ArrowIndexReader:
     def __init__(self, files: dict[str, list[str]]):
         import pyarrow.dataset as ds
 
-        from deces_dataprep_spark.index.codec import require_array_layout
+        from deces_dataprep_spark.index.codec import (
+            require_array_layout,
+            require_docnum_norms,
+        )
 
         self._ds = ds
         self._post = ds.dataset(files["postings"], format="parquet",
@@ -96,6 +103,9 @@ class ArrowIndexReader:
                                else "(no files)"))
         self._dict = ds.dataset(files["dictionary"], format="parquet")
         self._norms = ds.dataset(files["norms"], format="parquet")
+        require_docnum_norms(
+            self._norms.schema.names,
+            "norms " + (files["norms"][0] if files["norms"] else "(no files)"))
         self._stats = ds.dataset(files["stats"], format="parquet")
         self._pos = (ds.dataset(files["positions"], format="parquet")
                      if files.get("positions") else None)
@@ -220,35 +230,31 @@ class ArrowIndexReader:
                     .empty_table()]
         return block_columns(pa.concat_tables(tabs))
 
-    def shard_norms(self, shard: int) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted doc_id uint64, aligned doc_len float64) for a shard."""
-        t = self._norms.to_table(
-            columns=["doc_id", "doc_len"],
-            filter=self._ds.field("shard") == shard,
-        )
-        ids = t["doc_id"].to_numpy(zero_copy_only=False).astype("uint64")
-        dls = t["doc_len"].to_numpy(zero_copy_only=False).astype("float64")
-        order = np.argsort(ids)
-        return ids[order], dls[order]
-
-    def all_norms(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-        """Norms for EVERY shard from one scan of the norms table.
+    def all_norms(self) -> dict[int, tuple[np.ndarray, np.ndarray,
+                                             np.ndarray]]:
+        """Norms for EVERY shard from one scan of the norms table:
+        ``{shard: (sorted doc_id uint64, aligned doc_len float64,
+        aligned docnum int64)}``.
 
         A per-shard filter scan re-reads the whole table once per shard
         (norms aren't partitioned by shard on disk) — measured 8× the
         IO of this single pass at n_shards=8. One lexsort splits the
-        read into the per-shard (sorted doc_id, doc_len) pairs the
-        WAND/TAAT kernels binary-search."""
-        t = self._norms.to_table(columns=["shard", "doc_id", "doc_len"])
+        read into the per-shard arrays the WAND/TAAT kernels
+        binary-search; docnum order is doc_id order, so the docnums come
+        out sorted too."""
+        t = self._norms.to_table(
+            columns=["shard", "doc_id", "doc_len", "docnum"])
         sh = t["shard"].to_numpy(zero_copy_only=False).astype("int64")
         ids = t["doc_id"].to_numpy(zero_copy_only=False).astype("uint64")
         dls = t["doc_len"].to_numpy(zero_copy_only=False).astype("float64")
+        nums = t["docnum"].to_numpy(zero_copy_only=False).astype("int64")
         order = np.lexsort((ids, sh))
-        sh, ids, dls = sh[order], ids[order], dls[order]
-        out: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        sh, ids, dls, nums = sh[order], ids[order], dls[order], nums[order]
+        out: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         uniq, starts = np.unique(sh, return_index=True)
         bounds = list(starts) + [sh.size]
         for i, s in enumerate(uniq):
             a, b = bounds[i], bounds[i + 1]
-            out[int(s)] = (ids[a:b].copy(), dls[a:b].copy())
+            out[int(s)] = (ids[a:b].copy(), dls[a:b].copy(),
+                           nums[a:b].copy())
         return out

@@ -13,16 +13,29 @@ Architecture — designed for 10^12-doc scale, tested on local[32]:
    merge the per-shard partial top-k (the sort-merge of partials;
    exact because scoring uses *global* df/N/avgdl).
 
-2. **One posting shuffle, fully columnar.** ``explode(tokens)`` →
+2. **Doc numbers.** Postings are keyed by ``docnum``, the 0-based rank
+   of a doc's id within its shard (``row_number() over (partition by
+   shard order by doc_id) - 1``), assigned by the norms pass over the
+   narrow ``(shard, doc_id, dl)`` projection and stored in the norms
+   table. Offsets between dense ranks are small, where offsets between
+   random 62-bit web ids are as wide as the ids: this halves the index.
+   The postings plan attaches each doc's number with ONE doc-level join
+   of the token projection, below the explode (a broadcast while the
+   ``(doc_id, docnum)`` table fits ``autoBroadcastJoinThreshold``; above
+   it Spark shuffles the doc-level token projection once, never the
+   postings). Reads map ``(shard, docnum)`` back to doc_id through the
+   norms (:mod:`~deces_dataprep_spark.index.codec`).
+
+3. **One posting shuffle, fully columnar.** ``explode(tokens)`` →
    ``repartition(P, shard, term)`` → ``sortWithinPartitions(shard,
-   term, doc_id)``. ``dl`` (doc length) is attached before the explode
+   term, docnum)``. ``dl`` (doc length) is attached before the explode
    so it rides along. Tungsten's sort-based shuffle spills to disk, so
    even a pathological (shard, term) run never has to fit in memory as
    one record — this replaces the earlier collect_list compaction,
    which materialized per-bucket arrays (GC-heavy) and needed a second
    shuffle plus a dictionary join.
 
-3. **JVM block pack, no Python node.** The tf fold is a hash aggregate
+4. **JVM block pack, no Python node.** The tf fold is a hash aggregate
    that reuses the posting exchange; a ``row_number`` window buckets
    each (shard, term) run into 128-doc blocks, and one block-bounded
    ``collect_list`` aggregate packs each block into ``doc_gaps``/``tfs``
@@ -34,7 +47,7 @@ Architecture — designed for 10^12-doc scale, tested on local[32]:
    the global-df join from the build entirely; the query side
    multiplies the bound by idf(df) from the dictionary.
 
-4. **Dictionary from block metadata.** Each block carries ``n_docs``
+5. **Dictionary from block metadata.** Each block carries ``n_docs``
    and ``sum_tf``, so ``dictionary(term, df, cf)`` is a cheap
    aggregation over posting *blocks* (thousands of times smaller than
    postings) — no extra pass over the corpus. df is global because a
@@ -44,10 +57,14 @@ Output tables (written by :mod:`deces_dataprep_spark.snapshots`):
   postings(shard, term, block_id, n_docs, first_doc, last_doc,
            doc_gaps array<bigint>, tfs array<int>,
            block_max_tfnorm double, sum_tf long), sorted by
-           (shard, term, block_id) within each file
+           (shard, term, block_id) within each file; first_doc,
+           last_doc and first_doc + doc_gaps are docnums
   dictionary(term, df, cf)
-  norms(shard, doc_id, doc_len)
+  norms(shard, doc_id, doc_len, docnum)
   stats(n_docs, avgdl)
+
+``codec.decode_blocks_concat`` and ``codec.explode_blocks`` return
+these block keys; every read maps them through the norms.
 """
 
 from __future__ import annotations
@@ -63,9 +80,9 @@ from deces_dataprep_spark.index.codec import BLOCK_SIZE
 
 # One row per block (codec module docstring): ``doc_gaps`` holds each
 # doc's offset from ``first_doc`` and ``tfs`` the aligned term
-# frequencies. block_id is long: salted builds offset it by
-# salt * blocks_per_salt, which exceeds int32 once the doc-id space is
-# web-scale.
+# frequencies, all keyed by docnum. block_id is long: salted builds
+# offset it by salt * blocks_per_salt, which exceeds int32 once a
+# shard's doc count is web-scale.
 POSTINGS_SCHEMA = (
     "shard int, term string, block_id long, n_docs int, first_doc long, "
     "last_doc long, doc_gaps array<bigint>, tfs array<int>, "
@@ -73,7 +90,7 @@ POSTINGS_SCHEMA = (
 )
 # The other index tables (module docstring).
 DICTIONARY_SCHEMA = "term string, df long, cf long"
-NORMS_SCHEMA = "shard int, doc_id long, doc_len long"
+NORMS_SCHEMA = "shard int, doc_id long, doc_len long, docnum int"
 STATS_SCHEMA = "n_docs long, avgdl double"
 
 #: target Parquet row-group size of every postings file. Files are
@@ -175,24 +192,25 @@ class SaltSpec:
     """df-skew salting parameters, derived from the corpus:
 
     hot terms (df > threshold) are split into ``n_ranges`` contiguous
-    doc-id ranges of ``width = ceil(span / n_ranges)`` over the OBSERVED
-    id span [min_id, max_id] — id-space-agnostic (works for dense 0..N
-    ids and for random 64-bit ids alike). Each range's blocks are offset
-    by ``salt * blocks_per_salt`` with ``blocks_per_salt =
-    ceil(n_docs / block_size)`` (no range can hold more docs than the
-    corpus), so block_id order == doc order across the whole term."""
+    block-key ranges of ``width = ceil(span / n_ranges)`` over the key
+    span [min_id, max_id] — key-space-agnostic: a build's docnums span
+    [0, largest shard's doc count), a delta's doc_ids their observed
+    range. Each range's blocks are offset by ``salt * blocks_per_salt``
+    with ``blocks_per_salt = ceil(n_docs / block_size)`` (no range can
+    hold more docs than the corpus), so block_id order == key order
+    across the whole term."""
 
     min_id: int
-    width: int          # doc-id width of one salt range (≥ 1)
+    width: int          # key width of one salt range (≥ 1)
     blocks_per_salt: int
     hot: frozenset | None  # None = salt every term (narrow use)
 
-    def column(self):
-        """The salt of each posting row: its doc-id range for hot terms,
-        0 otherwise. Exact integer division (``div``), not float ``/`` +
-        cast: double rounding near a range boundary would split one
-        (shard, term, salt) group across two ranges."""
-        salt = F.expr(f"(doc_id - {self.min_id}L) div {self.width}L")
+    def column(self, key: str = "doc_id"):
+        """The salt of each posting row: its ``key`` range for hot
+        terms, 0 otherwise. Exact integer division (``div``), not float
+        ``/`` + cast: double rounding near a range boundary would split
+        one (shard, term, salt) group across two ranges."""
+        salt = F.expr(f"({key} - {self.min_id}L) div {self.width}L")
         if self.hot is None:
             return salt
         return F.when(F.col("term").isin(sorted(self.hot)), salt) \
@@ -218,6 +236,7 @@ def postings_plan_from_tokens(
     block_size: int = BLOCK_SIZE,
     partitions: int | None = None,
     salt: SaltSpec | None = None,
+    docnums: DataFrame | None = None,
 ) -> DataFrame:
     """The posting-build dataflow over a pre-tokenized projection
     (``(doc_id, tokens, dl)``) — explode → one exchange on (shard,
@@ -226,14 +245,20 @@ def postings_plan_from_tokens(
     persist ONE tokenized projection and derive norms, stats, and
     postings from it (single tokenize pass over the corpus).
 
+    ``docnums`` — the ``(doc_id, docnum)`` columns of the index's norms
+    (:func:`number_docs`): blocks are keyed by docnum, attached by one
+    doc-level join BELOW the explode (module docstring). Without it
+    (streaming deltas) blocks are keyed by doc_id.
+
     ``salt`` (the df-skew defuser, :class:`SaltSpec`): hot terms are
-    additionally partitioned by their doc-id salt range, so a
+    additionally partitioned by their block-key salt range, so a
     stopword's postings inside one shard split across up to n_ranges
     partitions instead of serializing into one task; WAND/TAAT read
     salted and unsalted indexes identically (tested rank-identical).
     Always restrict to a hot set (``SaltSpec.hot``): salting every term
-    fragments (shard, term) groups into tiny runs. Requires
-    non-negative doc_ids.
+    fragments (shard, term) groups into tiny runs; its ranges are over
+    the block key (docnums when ``docnums`` is given). Requires
+    non-negative keys.
 
     Beware same-plan re-execution when benchmarking: Spark reuses
     completed shuffle map stages of an identical plan, so only
@@ -242,9 +267,13 @@ def postings_plan_from_tokens(
     # implicit size(tokens)>0 pre-filter that Catalyst pushes below the
     # tokens projection, re-evaluating the whole tokenizer expression a
     # second time per row in the scan stage (visible in PLANS.md).
+    key = "doc_id"
+    if docnums is not None:
+        toks = toks.join(docnums.select("doc_id", "docnum"), "doc_id")
+        key = "docnum"
     exploded = toks.select(
         F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
-        "doc_id",
+        key,
         "dl",
         F.explode_outer("tokens").alias("term"),
     ).filter(F.col("term").isNotNull())
@@ -254,67 +283,71 @@ def postings_plan_from_tokens(
     # way classic shuffle sizing prescribes — measured 11.0 s (1× slots)
     # → 8.8 s (3×) for the 400k-doc posting job, flat from 2×-4×.
     n_part = partitions or 3 * spark.sparkContext.defaultParallelism
-    folded = fold_postings(exploded, salt, n_part, F.count(F.lit(1)))
-    return pack_blocks(folded, salt, block_size, avgdl)
+    folded = fold_postings(exploded, salt, n_part, F.count(F.lit(1)), key)
+    return pack_blocks(folded, salt, block_size, avgdl, key)
 
 
 def fold_postings(rows: DataFrame, salt: SaltSpec | None, n_part: int,
-                  tf=None) -> DataFrame:
-    """Cluster posting rows ``(shard, term, doc_id, dl[, tf])`` by
-    (shard, term[, __salt]) in ONE exchange and sort each run by
-    doc_id — the input :func:`pack_blocks` expects.
+                  tf=None, key: str = "doc_id") -> DataFrame:
+    """Cluster posting rows ``(shard, term, <key>, dl[, tf])`` by
+    (shard, term[, __salt]) in ONE exchange and sort each run by the
+    block key (``docnum`` in a build or compaction, ``doc_id`` in a
+    streaming delta) — the input :func:`pack_blocks` expects.
 
     ``tf`` is the fold's aggregate (occurrence count in the build, sum
     of delta tfs in compaction), or None when the rows are already one
     per (shard, term, doc). The fold groups by the partition keys plus
-    doc_id: hash partitioning on a subset of the grouping keys satisfies
-    the aggregation's clustering, so it reuses the exchange.
+    the key: hash partitioning on a subset of the grouping keys
+    satisfies the aggregation's clustering, so it reuses the exchange.
     ``__salt`` is materialized as a column so the repartition, the fold
     and :func:`pack_blocks`' window all reference the same attribute."""
     grp = ["shard", "term"]
     if salt is not None:
-        rows = rows.withColumn("__salt", salt.column())
+        rows = rows.withColumn("__salt", salt.column(key))
         grp.append("__salt")
     rows = rows.repartition(n_part, *grp)
     if tf is not None:
-        rows = rows.groupBy(*grp, "doc_id").agg(
+        rows = rows.groupBy(*grp, key).agg(
             tf.alias("tf"), F.first("dl").alias("dl"))
-    return rows.select(*grp, "doc_id", "tf", "dl") \
-        .sortWithinPartitions(*grp, "doc_id")
+    return rows.select(*grp, key, "tf", "dl") \
+        .sortWithinPartitions(*grp, key)
 
 
 def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
-                block_size: int, avgdl: float) -> DataFrame:
+                block_size: int, avgdl: float,
+                key: str = "doc_id") -> DataFrame:
     """Pack a folded posting stream (:func:`fold_postings`) into
-    :data:`POSTINGS_SCHEMA` block rows, entirely in the JVM.
+    :data:`POSTINGS_SCHEMA` block rows keyed by ``key``, entirely in
+    the JVM.
 
     A ``row_number`` window (its ordering already satisfied by the
-    fold's sort) buckets each run into ``block_size``-doc blocks; one
-    aggregate per block collects the block-bounded ``(doc_id, tf)``
-    list and computes the block metadata, with the tf-norm expression
-    in the same operation order as the numpy scorer. The group keys
-    extend the partition keys, so the aggregate reuses the clustering:
-    no second exchange. The offsets from ``first_doc`` are one lambda
-    over the extracted ids array; a lambda that indexed into ``ps``
-    itself would re-extract the array per element (quadratic)."""
-    bs = block_size
+    fold's sort), projected once, buckets each run into
+    ``block_size``-doc blocks; one aggregate per block collects the
+    block-bounded ``(key, tf)`` list and computes the block metadata,
+    with the tf-norm expression in the same operation order as the
+    numpy scorer. The group keys extend the partition keys, so the
+    aggregate reuses the clustering: no second exchange. The offsets
+    from ``first_doc`` are one lambda over the extracted keys array; a
+    lambda that indexed into ``ps`` itself would re-extract the array
+    per element (quadratic)."""
     grp = ["shard", "term"] + (["__salt"] if salt is not None else [])
-    rn = F.row_number().over(Window.partitionBy(*grp).orderBy("doc_id"))
+    rn = F.row_number().over(Window.partitionBy(*grp).orderBy(key))
     k1, b = bm25.K1, bm25.B
     t = F.col("tf").cast("double")
     tfnorm = t / (t + F.lit(k1) * (F.lit(1.0 - b)
                                    + F.lit(b) * F.col("dl").cast("double")
                                    / F.lit(avgdl)))
     blocks = folded.select(
-        *grp, "doc_id", "tf", "dl",
-        ((rn - 1) - ((rn - 1) % bs)).alias("__blk0"),
-    ).groupBy(*grp, "__blk0").agg(
+        *grp, key, "tf", "dl", rn.alias("__rn"),
+    ).groupBy(
+        *grp, F.expr(f"(__rn - 1) div {int(block_size)}").alias("__blk"),
+    ).agg(
         F.sort_array(F.collect_list(
-            F.struct("doc_id", F.col("tf").cast("int").alias("tf"))))
+            F.struct(key, F.col("tf").cast("int").alias("tf"))))
         .alias("ps"),
         F.count(F.lit(1)).cast("int").alias("n_docs"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
+        F.min(key).cast("long").alias("first_doc"),
+        F.max(key).cast("long").alias("last_doc"),
         F.max(tfnorm).alias("block_max_tfnorm"),
         F.sum("tf").cast("long").alias("sum_tf"),
     )
@@ -322,9 +355,9 @@ def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
                 if salt is not None else F.lit(0))
     return blocks.select(
         "shard", "term",
-        (salt_off + (F.col("__blk0") / bs).cast("long")).alias("block_id"),
+        (salt_off + F.col("__blk")).cast("long").alias("block_id"),
         "n_docs", "first_doc", "last_doc",
-        F.transform(F.col("ps.doc_id"), lambda x: x - F.col("first_doc"))
+        F.transform(F.col(f"ps.{key}"), lambda x: x - F.col("first_doc"))
         .alias("doc_gaps"),
         F.col("ps.tf").alias("tfs"),
         "block_max_tfnorm", "sum_tf",
@@ -412,12 +445,35 @@ def postings_plan(
                                      block_size, partitions, salt)
 
 
+def number_docs(docs: DataFrame) -> DataFrame:
+    """``docs`` (one row per doc, with ``shard`` and ``doc_id``) plus
+    ``docnum int``: the doc's 0-based rank by doc_id within its shard.
+    A function of each shard's doc set only, so a rebuild or a resumed
+    build numbers the same docs the same way."""
+    w = Window.partitionBy("shard").orderBy("doc_id")
+    return docs.withColumn("docnum", F.row_number().over(w) - 1)
+
+
 def norms_from_tokens(toks: DataFrame, n_shards: int) -> DataFrame:
-    return toks.select(
+    """The norms table, :data:`NORMS_SCHEMA`: the narrow ``(shard,
+    doc_id, doc_len)`` projection of the tokens, numbered."""
+    return number_docs(toks.select(
         F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
         "doc_id",
         F.col("dl").alias("doc_len"),
-    )
+    ))
+
+
+def corpus_stats(toks: DataFrame, n_shards: int) -> tuple[int, float, int]:
+    """``(n_docs, avgdl, largest shard's doc count)`` of a token
+    projection in one aggregate. The last is the docnum span salting
+    splits (:func:`make_salt_spec`)."""
+    shard = F.pmod(F.col("doc_id"), F.lit(n_shards))
+    row = toks.agg(
+        F.count(F.lit(1)), F.avg("dl"),
+        *[F.count_if(shard == s) for s in range(n_shards)],
+    ).collect()[0]
+    return int(row[0]), float(row[1] or 0.0), max(row[2:])
 
 
 def build_index(
@@ -462,28 +518,23 @@ def build_index(
     norms = norms_from_tokens(toks, n_shards)
     # global stats — tiny; computed eagerly (the block bounds need avgdl);
     # this is also what materializes the token cache.
-    stats_row = toks.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"),
-        F.min("doc_id").alias("min_id"), F.max("doc_id").alias("max_id"),
-    ).collect()[0]
-    n_docs_g = int(stats_row["n_docs"])
-    avgdl_g = float(stats_row["avgdl"] or 0.0)
+    n_docs_g, avgdl_g, span = corpus_stats(toks, n_shards)
 
     salt = None
     if salt_ranges:
         hot = (hot_terms_by_df(toks, salt_df_threshold, salt_sample_frac)
                if salt_df_threshold is not None else None)
-        salt = make_salt_spec(int(stats_row["min_id"] or 0),
-                              int(stats_row["max_id"] or 0),
-                              salt_ranges, n_docs_g, block_size, hot)
+        salt = make_salt_spec(0, max(span - 1, 0), salt_ranges, n_docs_g,
+                              block_size, hot)
     elif auto_salt:
-        salt = auto_salt_spec(
-            spark, toks, n_docs_g,
-            int(stats_row["min_id"] or 0), int(stats_row["max_id"] or 0),
-            block_size, salt_sample_frac,
-        )
-    postings = postings_plan_from_tokens(spark, toks, n_shards, avgdl_g,
-                                         block_size, partitions, salt)
+        salt = auto_salt_spec(spark, toks, n_docs_g, 0, max(span - 1, 0),
+                              block_size, salt_sample_frac)
+    # the numbering is a doc-level plan here (nothing is written); a
+    # broadcast while it fits, as the written norms read back in
+    # snapshots.write_index are
+    postings = postings_plan_from_tokens(
+        spark, toks, n_shards, avgdl_g, block_size, partitions, salt,
+        docnums=norms)
     dictionary = dictionary_from_postings(postings)
     stats_df = local_rows(spark, [(n_docs_g, avgdl_g)], STATS_SCHEMA)
     return IndexTables(postings=postings, dictionary=dictionary, norms=norms,

@@ -87,6 +87,8 @@ class QueryEngine:
             self.avgdl = float(row["avgdl"])
         self._norms_cache: dict[int, dict[int, int]] = {}
         self._norms_np_cache: dict[int, tuple] = {}
+        # shard -> docnums aligned with the _norms_np_cache arrays
+        self._docnums: dict = {}
         # hot-term cache: term -> {shard -> TermPostings}; repeat queries
         # and shared head terms skip the Spark scan entirely.
         self._term_cache: dict[str, dict[int, TermPostings]] = {}
@@ -140,7 +142,8 @@ class QueryEngine:
         return self._norms_cache[shard]
 
     def _shard_norms_np(self, shard: int):
-        """(sorted doc_id uint64 array, aligned doc_len array) per shard."""
+        """(sorted doc_id uint64 array, aligned doc_len array) per shard;
+        the aligned docnums go to ``self._docnums``."""
         if shard not in self._norms_np_cache:
             import numpy as np
 
@@ -151,11 +154,10 @@ class QueryEngine:
                 # re-triggering the scan (and from replacing the cached
                 # arrays, which would orphan the TAAT contribution memo)
                 if not getattr(self, "_norms_loaded", False):
-                    self._norms_np_cache.update(self.reader.all_norms())
+                    for s, (ids, dls, nums) in self.reader.all_norms().items():
+                        self._norms_np_cache[s] = (ids, dls)
+                        self._docnums[s] = nums
                     self._norms_loaded = True
-                if shard not in self._norms_np_cache:
-                    self._norms_np_cache[shard] = (
-                        np.empty(0, "uint64"), np.empty(0, "float64"))
             else:
                 # ONE scan fills every shard (mirrors the arrow route):
                 # a WAND/TAAT query touches all shards, and the former
@@ -166,16 +168,17 @@ class QueryEngine:
                 if not getattr(self, "_norms_loaded", False):
                     pdf = (
                         self.tables.norms
-                        .select("shard", "doc_id", "doc_len")
+                        .select("shard", "doc_id", "doc_len", "docnum")
                         .toPandas()
                     )
                     sh = pdf["shard"].to_numpy("int64")
                     ids_all = pdf["doc_id"].to_numpy("int64").astype("uint64")
                     dls_all = pdf["doc_len"].to_numpy("int64") \
                         .astype("float64")
+                    nums_all = pdf["docnum"].to_numpy("int64")
                     order = np.lexsort((ids_all, sh))
-                    sh, ids_all, dls_all = sh[order], ids_all[order], \
-                        dls_all[order]
+                    sh, ids_all, dls_all, nums_all = sh[order], \
+                        ids_all[order], dls_all[order], nums_all[order]
                     bounds = np.flatnonzero(
                         np.concatenate(([True], sh[1:] != sh[:-1])))
                     for b0, b1 in zip(bounds,
@@ -183,11 +186,27 @@ class QueryEngine:
                                                       [sh.size]))):
                         self._norms_np_cache[int(sh[b0])] = (
                             ids_all[b0:b1], dls_all[b0:b1])
+                        self._docnums[int(sh[b0])] = nums_all[b0:b1]
                     self._norms_loaded = True
-                if shard not in self._norms_np_cache:
-                    self._norms_np_cache[shard] = (
-                        np.empty(0, "uint64"), np.empty(0, "float64"))
+            if shard not in self._norms_np_cache:
+                self._norms_np_cache[shard] = (
+                    np.empty(0, "uint64"), np.empty(0, "float64"))
+                self._docnums[shard] = np.empty(0, "int64")
         return self._norms_np_cache[shard]
+
+    def _doc_ids(self, shard: int, keys):
+        """doc_ids (uint64) of one shard's decoded block keys — the
+        driver's decode boundary, ``(shard, docnum)`` → the norms row's
+        doc_id. A built or compacted index numbers each shard's docs
+        0..n-1 in doc_id order, so a key is its row's position; a delta
+        index's docnum is the doc_id itself, found by binary search."""
+        import numpy as np
+
+        ids, _ = self._shard_norms_np(shard)
+        nums = self._docnums[shard]
+        if nums.size and nums[-1] == nums.size - 1:
+            return ids[keys]
+        return ids[np.searchsorted(nums, keys)]
 
     def _fetch_term_postings(self, terms: list[str]) -> dict[int, list[TermPostings]]:
         """Postings for the query terms, grouped by shard.
@@ -197,6 +216,10 @@ class QueryEngine:
         ``block_max_tfnorm`` (builder design: idf is a per-term
         constant); the global df comes from the dictionary, and the
         block-max score bound is reconstructed as ``idf(df) · tfnorm``.
+        Blocks are keyed by docnum: the keys, first_docs and last_docs
+        are mapped to doc_ids through the shard's norms arrays
+        (:meth:`_doc_ids`) before the TermPostings are built, so every
+        kernel runs in doc_id space.
         """
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
@@ -231,12 +254,21 @@ class QueryEngine:
             self._df_cache.update(dfs)
             fetched: dict[str, dict[int, TermPostings]] = {t: {} for t in missing}
             # zero-copy flat views of the block arrays; a (shard, term)
-            # run of block rows owns one contiguous slice of them
-            gaps = cols["doc_gaps"].flatten().to_numpy()
+            # run of block rows owns one contiguous slice of them, and
+            # a shard's rows one contiguous run of (shard, term) runs
+            n_docs = cols["n_docs"]
             tfs = cols["tfs"].flatten().to_numpy()
-            elem = np.concatenate(([0], np.cumsum(cols["n_docs"],
-                                                  dtype=np.int64)))
-            shards = cols["shard"].tolist()
+            elem = np.concatenate(([0], np.cumsum(n_docs, dtype=np.int64)))
+            keys = np.repeat(cols["first_doc"], n_docs) \
+                + cols["doc_gaps"].flatten().to_numpy()
+            ids = np.empty(keys.size, np.uint64)
+            sh = cols["shard"]
+            cut = (np.flatnonzero(sh[1:] != sh[:-1]) + 1).tolist()
+            for a, b in zip([0] + cut, cut + [sh.size]):
+                if a < b:
+                    ids[elem[a]:elem[b]] = self._doc_ids(
+                        int(sh[a]), keys[elem[a]:elem[b]])
+            shards = sh.tolist()
             key = list(zip(shards, cols["term"]))
             cuts = [i for i in range(1, len(key)) if key[i] != key[i - 1]]
             for a, b in zip([0] + cuts, cuts + [len(key)]):
@@ -245,14 +277,19 @@ class QueryEngine:
                 shard, term = key[a]
                 idf = float(bm25.idf(dfs[term], self.n_docs))
                 e0, e1 = elem[a], elem[b]
+                run = ids[e0:e1]
+                first = run[elem[a:b] - e0]
                 fetched[term][int(shard)] = TermPostings(
                     term=term, df=dfs[term],
                     block_ids=cols["block_id"][a:b].tolist(),
-                    n_docs=cols["n_docs"][a:b].tolist(),
-                    first_docs=cols["first_doc"][a:b].tolist(),
-                    last_docs=cols["last_doc"][a:b].tolist(),
-                    doc_gaps=gaps[e0:e1], tfs=tfs[e0:e1],
+                    n_docs=n_docs[a:b].tolist(),
+                    first_docs=first.tolist(),
+                    last_docs=run[elem[a + 1:b + 1] - e0 - 1].tolist(),
+                    doc_gaps=run.view(np.int64)
+                    - np.repeat(first.view(np.int64), n_docs[a:b]),
+                    tfs=tfs[e0:e1],
                     block_max=(idf * cols["block_max_tfnorm"][a:b]).tolist(),
+                    _decoded=(run, tfs[e0:e1].astype(np.int64)),
                 )
             self._term_cache.update(fetched)
         by_shard: dict[int, list[TermPostings]] = {}
@@ -522,7 +559,7 @@ def bm25_topk_from_index(
     for driver-side WAND/TAAT (or when scoring feeds another job):
 
     postings(term IN q)  →  explode(arrays_zip(doc_gaps, tfs)) (JVM)
-      → join norms on (shard, doc_id) for dl
+      → join norms on (shard, docnum) for doc_id and dl
       → broadcast df map → score → groupBy(doc) sum → TakeOrderedAndProject
 
     Only the query's posting blocks are scanned (parquet pushdown); the
@@ -556,6 +593,23 @@ def _resolve_dfs(tables: IndexTables, terms: list,
     return {t: int(dfs[t]) for t in terms if t in dfs}
 
 
+def _decoded_postings(tables: IndexTables, terms: list[str],
+                      dl: bool = False) -> DataFrame:
+    """``(term, doc_id, tf[, dl])`` rows of the terms' posting blocks
+    only (parquet pushdown on ``term``), decoded in the JVM and mapped
+    back to doc_ids by one join with the norms on ``(shard, docnum)`` —
+    the decode boundary of every index-backed Spark route. ``dl`` takes
+    the doc length from the same join."""
+    from deces_dataprep_spark.index.codec import explode_blocks
+
+    norms = tables.norms.select(
+        "shard", "docnum", "doc_id",
+        *([F.col("doc_len").alias("dl")] if dl else []))
+    return explode_blocks(
+        tables.postings.filter(F.col("term").isin(terms)), "shard", "term",
+    ).join(norms, ["shard", "docnum"]).drop("shard", "docnum")
+
+
 def bm25_scores_from_index(
     spark: SparkSession,
     tables: IndexTables,
@@ -570,8 +624,6 @@ def bm25_scores_from_index(
     (which must sum FULL per-field score sets: truncating per field
     before the sum would drop docs ranked just below k in every single
     field but inside the global top-k)."""
-    from deces_dataprep_spark.index.codec import explode_blocks
-
     if n_docs is None or avgdl is None:
         stats = tables.stats.collect()[0]
         n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
@@ -582,12 +634,8 @@ def bm25_scores_from_index(
         x for t, df in dfs.items()
         for x in (F.lit(t), F.lit(float(bm25.idf(df, n_docs))))
     ])
-    blocks = tables.postings.filter(F.col("term").isin(terms))
-    decoded = explode_blocks(blocks, "term").select(
-        "doc_id", idf_map[F.col("term")].alias("idf"), "tf")
-    with_dl = decoded.join(
-        tables.norms.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-    )
+    with_dl = _decoded_postings(tables, terms, dl=True).select(
+        "doc_id", idf_map[F.col("term")].alias("idf"), "tf", "dl")
     norm = F.lit(bm25.K1) * (
         F.lit(1.0 - bm25.B) + F.lit(bm25.B) * F.col("dl").cast("double") / F.lit(avgdl)
     )
@@ -978,17 +1026,6 @@ def _cf_required(operator: str, terms: list[str]) -> int | None:
     raise ValueError(f"unknown operator: {operator!r}")
 
 
-def _postings_tf_rows(tables: IndexTables, terms: list[str]) -> DataFrame:
-    """(term, doc_id, tf) rows decoded from the terms' posting blocks
-    only (parquet pushdown on ``term``) — the term-tagged sibling of
-    the anonymous decode in :func:`bm25_scores_from_index`, for routes
-    that need per-term combine semantics (cross_fields dis_max)."""
-    from deces_dataprep_spark.index.codec import explode_blocks
-
-    return explode_blocks(
-        tables.postings.filter(F.col("term").isin(terms)), "term")
-
-
 def cross_fields_from_index(
     spark: SparkSession,
     field_tables: dict[str, tuple[IndexTables, float]],
@@ -1000,8 +1037,9 @@ def cross_fields_from_index(
 ) -> DataFrame:
     """cross_fields served from one index PER FIELD: per-field df from
     the dictionaries (term-cardinality collects) → blended max df →
-    per-field posting decode tagged with term → norms join for dl →
-    blended-idf scoring → the shared term-level dis_max tail.
+    per-field posting decode tagged with term, with doc_id and dl from
+    one norms join → blended-idf scoring → the shared term-level
+    dis_max tail.
     Rank-identical to :func:`cross_fields_topk_df` (tested)."""
     terms = list(dict.fromkeys(analyze_query(query)))
     if not terms or not field_tables:
@@ -1025,10 +1063,7 @@ def cross_fields_from_index(
     for _f, (tables, boost) in flds:
         st = tables.stats.collect()[0]
         avgdl_f = float(st["avgdl"])
-        rows = _postings_tf_rows(tables, terms)
-        with_dl = rows.join(
-            tables.norms.select("doc_id", F.col("doc_len").alias("dl")),
-            "doc_id")
+        with_dl = _decoded_postings(tables, terms, dl=True)
         norm = F.lit(bm25.K1) * (
             F.lit(1.0 - bm25.B)
             + F.lit(bm25.B) * F.col("dl").cast("double") / F.lit(avgdl_f))
@@ -1275,22 +1310,27 @@ def bm25_topk_broadcast(
 
     t = (
         tables.postings.filter(F.col("term").isin(terms))
-        .select("term", "n_docs", "first_doc", "doc_gaps", "tfs")
+        .select("shard", "term", "n_docs", "first_doc", "doc_gaps", "tfs")
         .toArrow()
     )
-    ids_all, tfs_all = decode_blocks_concat(
+    keys_all, tfs_all = decode_blocks_concat(
         t["doc_gaps"], t["tfs"], t["first_doc"].to_numpy(),
         t["n_docs"].to_numpy())
     block_term = np.asarray(t["term"].to_pylist(), dtype=object)
     post_term = np.repeat(block_term, t["n_docs"].to_numpy())
-    payload = []
+    post_shard = np.repeat(t["shard"].to_numpy(), t["n_docs"].to_numpy())
+    # shard -> [(idf, sorted docnums, tfs)]: the executors match the
+    # postings to their norms rows on (shard, docnum)
+    payload: dict[int, list] = {}
     for term in dict.fromkeys(block_term.tolist()):
-        sel = post_term == term
-        ids, tfs = ids_all[sel], tfs_all[sel]
-        order = np.argsort(ids)
-        payload.append((float(bm25.idf(dfs[term], n_docs)),
-                        ids[order].astype(np.int64),
-                        tfs[order].astype(np.float64)))
+        idf = float(bm25.idf(dfs[term], n_docs))
+        of_term = post_term == term
+        for shard in np.unique(post_shard[of_term]).tolist():
+            sel = of_term & (post_shard == shard)
+            keys, tfs = keys_all[sel].astype(np.int64), tfs_all[sel]
+            order = np.argsort(keys)
+            payload.setdefault(shard, []).append(
+                (idf, keys[order], tfs[order].astype(np.float64)))
     bc = spark.sparkContext.broadcast(payload)
     k1, b, av = float(bm25.K1), float(bm25.B), float(avgdl)
     rd = round_digits
@@ -1302,18 +1342,23 @@ def bm25_topk_broadcast(
         for batch in batches:
             if batch.empty:
                 continue
-            doc = batch["doc_id"].to_numpy(np.int64)
-            dl = batch["doc_len"].to_numpy(np.float64)
-            order = np.argsort(doc)
-            doc_s, dl_s = doc[order], dl[order]
+            sh = batch["shard"].to_numpy(np.int64)
+            num = batch["docnum"].to_numpy(np.int64)
+            order = np.lexsort((num, sh))
+            sh, num = sh[order], num[order]
+            doc_s = batch["doc_id"].to_numpy(np.int64)[order]
+            dl_s = batch["doc_len"].to_numpy(np.float64)[order]
             acc = np.zeros(doc_s.size, np.float64)
-            for idf, t_ids, t_tfs in bc.value:
-                pos = np.searchsorted(doc_s, t_ids)
-                ok = (pos < doc_s.size)
-                ok[ok] = doc_s[pos[ok]] == t_ids[ok]
-                p, tf = pos[ok], t_tfs[ok]
-                denom = tf + k1 * (1.0 - b + b * (dl_s[p] / av))
-                np.add.at(acc, p, idf * (tf / denom))
+            for shard, postings in bc.value.items():
+                lo, hi = np.searchsorted(sh, [shard, shard + 1])
+                num_s = num[lo:hi]
+                for idf, t_nums, t_tfs in postings:
+                    pos = np.searchsorted(num_s, t_nums)
+                    ok = (pos < num_s.size)
+                    ok[ok] = num_s[pos[ok]] == t_nums[ok]
+                    p, tf = lo + pos[ok], t_tfs[ok]
+                    denom = tf + k1 * (1.0 - b + b * (dl_s[p] / av))
+                    np.add.at(acc, p, idf * (tf / denom))
             nz = np.flatnonzero(acc > 0.0)
             if nz.size == 0:
                 continue
@@ -1331,7 +1376,8 @@ def bm25_topk_broadcast(
             sel = nz[acc[nz] >= cut]
             yield pd.DataFrame({"doc_id": doc_s[sel], "score": acc[sel]})
 
-    scored = tables.norms.select("doc_id", "doc_len").mapInPandas(
+    scored = tables.norms.select(
+        "shard", "docnum", "doc_id", "doc_len").mapInPandas(
         score, "doc_id long, score double")
     if round_digits is not None:
         scored = scored.withColumn("score", F.round("score", round_digits))
@@ -2360,11 +2406,7 @@ def _matching_doc_ids_decode(tables: "IndexTables",
     terms' posting blocks only (parquet pushdown on ``term``) — the
     shared scan under the index-backed aggregation routes and the
     query-string atom tagger."""
-    from deces_dataprep_spark.index.codec import explode_blocks
-
-    return explode_blocks(
-        tables.postings.filter(F.col("term").isin(terms)), "term"
-    ).select("term", "doc_id")
+    return _decoded_postings(tables, terms).select("term", "doc_id")
 
 
 def _matching_doc_ids_from_postings(tables: "IndexTables",
@@ -2394,11 +2436,9 @@ def suggest_terms(
     ``levenshtein`` (native, with early-exit threshold) only runs on
     survivors. The dictionary is term-cardinality-sized, not
     corpus-sized — this plan never touches postings or text."""
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import normalize_text
 
-    from deces_dataprep_spark.functions.analyze import normalize_series
-
-    q = normalize_series(pd.Series([term])).iloc[0]
+    q = normalize_text(term)
     d = tables.dictionary
     cand = d.filter(
         (F.length("term") >= len(q) - max_edits)
@@ -2432,11 +2472,9 @@ def suggest_completion(
     ``startswith`` filter + TakeOrderedAndProject — vocabulary-sized,
     never touches postings or text (ES's FST behaves the same way:
     completion is an index-structure lookup, not a search)."""
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import normalize_text
 
-    from deces_dataprep_spark.functions.analyze import normalize_series
-
-    p = normalize_series(pd.Series([prefix])).iloc[0]
+    p = normalize_text(prefix)
     return (
         tables.dictionary.filter(F.col("term").startswith(p))
         .select("term", "df")
@@ -2456,12 +2494,10 @@ def suggest_completion_serve(
     class an autocomplete endpoint needs. Result-identical to the
     Spark route (tested). Falls back to the Spark plan when the engine
     has no arrow reader."""
-    import pandas as pd
-
-    from deces_dataprep_spark.functions.analyze import normalize_series
+    from deces_dataprep_spark.functions.analyze import normalize_text
     from deces_dataprep_spark.index.querystring import _vocab_index
 
-    p = normalize_series(pd.Series([prefix])).iloc[0]
+    p = normalize_text(prefix)
     if engine.reader is None:
         spark = engine.spark or engine.tables.postings.sparkSession
         return [(r["term"], int(r["df"])) for r in
@@ -2481,14 +2517,12 @@ def duckdb_suggest_completion_sql(
 ) -> str:
     """Oracle twin of :func:`suggest_completion` — df from the raw
     corpus (= the dictionary's df by construction)."""
-    import pandas as pd
-
     from deces_dataprep_spark.functions.analyze import (
         duckdb_tokens_sql,
-        normalize_series,
+        normalize_text,
     )
 
-    p = normalize_series(pd.Series([prefix])).iloc[0].replace("'", "''")
+    p = normalize_text(prefix).replace("'", "''")
     toks = duckdb_tokens_sql(text_col)
     return f"""
 WITH vocab AS (
@@ -2751,8 +2785,6 @@ def boolean_topk_from_index(
     ``minimum_should_match`` — same contract as the scan route: ≥ this
     many distinct should terms per doc, enforced in the same per-doc
     aggregate."""
-    from deces_dataprep_spark.index.codec import explode_blocks
-
     must_t = [t for q in must for t in analyze_query(q)]
     should_t = [t for q in (should or []) for t in analyze_query(q)]
     not_t = [t for q in (must_not or []) for t in analyze_query(q)]
@@ -2771,15 +2803,11 @@ def boolean_topk_from_index(
     if any(t not in dfs for t in set(must_t)):
         return spark.createDataFrame([], "doc_id long, score double")
 
-    decoded = explode_blocks(
-        tables.postings.filter(F.col("term").isin(all_terms)), "term")
+    decoded = _decoded_postings(tables, all_terms, dl=True)
     if not_t:
         banned = decoded.filter(F.col("term").isin(not_t)) \
             .select("doc_id").distinct()
-    pos = decoded.filter(F.col("term").isin(scored_terms))
-    with_dl = pos.join(
-        tables.norms.select("doc_id", F.col("doc_len").alias("dl")), "doc_id"
-    )
+    with_dl = decoded.filter(F.col("term").isin(scored_terms))
     df_expr = F.create_map(*[
         x for t in scored_terms for x in (F.lit(t), F.lit(dfs.get(t, 0)))
     ])
@@ -2880,13 +2908,9 @@ def fuzzy_match_from_index(
     costs ≤ 2 plain edits, so OSA ≤ k ⇒ Levenshtein ≤ 2k) plus the OSA
     length window ``|len| ≤ max_edits``, and only that small survivor
     list is refined with the exact OSA predicate driver-side."""
-    import numpy as np
-    import pandas as pd
+    from deces_dataprep_spark.functions.analyze import normalize_text
 
-    from deces_dataprep_spark.functions.analyze import normalize_series
-    from deces_dataprep_spark.index.codec import explode_blocks
-
-    q = normalize_series(pd.Series([query])).iloc[0]
+    q = normalize_text(query)
     if max_edits == "auto":
         from deces_dataprep_spark.operators.es_fields import auto_fuzziness
 
@@ -2914,9 +2938,7 @@ def fuzzy_match_from_index(
         ]
     if not cand:
         return spark.createDataFrame([], "doc_id long")
-    return explode_blocks(
-        tables.postings.filter(F.col("term").isin(cand))
-    ).select("doc_id").distinct()
+    return _decoded_postings(tables, cand).select("doc_id").distinct()
 
 
 def mlt_topk_df(
@@ -3136,7 +3158,7 @@ def duckdb_boolean_topk_sql(
     not_t = [t for q in (must_not or []) for t in analyze_query(q)]
     scored_terms = list(dict.fromkeys(must_t + should_t))
     terms_sql = ", ".join(f"'{t}'" for t in scored_terms)
-    must_sql = ", ".join(f"'{t}'" for t in set(must_t)) or "NULL"
+    must_sql = ", ".join(f"'{t}'" for t in sorted(set(must_t))) or "NULL"
     score = bm25.duckdb_bm25_sql(
         "tf", "df", "dl",
         "(select n_docs from stats)", "(select avgdl from stats)",
@@ -3167,7 +3189,7 @@ GROUP BY doc_id
 HAVING count(DISTINCT CASE WHEN term IN ({must_sql}) THEN term END)
        = {len(set(must_t))}
 AND count(DISTINCT CASE WHEN term IN
-          ({", ".join(f"'{t}'" for t in set(should_t)) or "NULL"})
+          ({", ".join(f"'{t}'" for t in sorted(set(should_t))) or "NULL"})
           THEN term END) >= {int(minimum_should_match)}
 {not_clause}
 {f"AND doc_id IN (SELECT doc_id FROM {table} WHERE {filter_where})"
@@ -4420,9 +4442,7 @@ def suggest_phrase(
     (tested identical)."""
     import math
 
-    import pandas as pd
-
-    from deces_dataprep_spark.functions.analyze import normalize_series
+    from deces_dataprep_spark.functions.analyze import normalize_text
 
     terms = tokenize_text(text)
     if not terms:
@@ -4431,7 +4451,7 @@ def suggest_phrase(
         n_docs = int(engine.n_docs)  # cached — no stats job
     else:
         n_docs = int(tables.stats.collect()[0]["n_docs"])
-    qs = [normalize_series(pd.Series([t])).iloc[0] for t in terms]
+    qs = [normalize_text(t) for t in terms]
 
     if engine is not None and engine.reader is not None:
         # serving tier: the arrow dictionary is already in memory —
@@ -4534,11 +4554,9 @@ def duckdb_suggest_phrase_sql(
     cross-joined and scored with the identical smoothed unigram
     formula. df comes from the raw corpus (= the dictionary's df by
     construction)."""
-    import pandas as pd
-
     from deces_dataprep_spark.functions.analyze import (
         duckdb_tokens_sql,
-        normalize_series,
+        normalize_text,
     )
 
     terms = tokenize_text(text)
@@ -4554,7 +4572,7 @@ def duckdb_suggest_phrase_sql(
 stats AS (SELECT count(*)::BIGINT AS n_docs FROM {table})"""]
     slot_selects = []
     for i, t in enumerate(terms):
-        q = normalize_series(pd.Series([t])).iloc[0].replace("'", "''")
+        q = normalize_text(t).replace("'", "''")
         ctes.append(f"""cand{i} AS (
   SELECT term, dist, df FROM (
     SELECT u.*, CASE WHEN u.dist = 0 THEN -1 ELSE u.dist END AS rank0

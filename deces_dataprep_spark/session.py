@@ -47,6 +47,20 @@ def default_cores() -> int:
     return int(env) if env else usable_cores()
 
 
+def inherit_local_properties(spark: SparkSession):
+    """A decorator for the bodies a thread pool runs: each call runs
+    with the local properties (job group, description, scheduler pool)
+    and tags the CALLER had when the body was decorated, so a pool's
+    Spark jobs stay in the caller's job group. In PySpark's default
+    pinned-thread mode that is ``pyspark.util.inheritable_thread_target``;
+    without it the threads share the caller's properties already and
+    the decorator returns the body unchanged."""
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    return inherit if callable(inherit) else (lambda f: f)
+
+
 def _local_driver_mem() -> str | None:
     """LOCAL_MEM_SHARE of MemTotal (at least 1 GiB), or None when the
     host does not expose /proc/meminfo."""

@@ -447,14 +447,23 @@ def write_index(
     projection by ``pmod(doc_id, n)`` instead of re-running the
     analyzer; the dictionary is derived from the written posting blocks
     (no extra corpus pass).
+
+    The norms pass numbers each shard's docs (``builder.number_docs``);
+    the posting blocks are keyed by those doc numbers, attached by one
+    doc-level join of the cached projection against ``(doc_id,
+    docnum)`` read back from the written norms. A doc's number is its
+    rank within its shard's doc set, so a resumed build numbers every
+    doc as the interrupted one did.
     """
     from pyspark import StorageLevel
     from pyspark.sql import functions as F  # local alias for clarity
 
     from deces_dataprep_spark.index.builder import (
+        NORMS_SCHEMA,
         POSTINGS_SCHEMA,
         STATS_SCHEMA,
         auto_salt_spec,
+        corpus_stats,
         dictionary_from_postings,
         docs_with_tokens,
         hot_terms_by_df,
@@ -463,6 +472,7 @@ def write_index(
         norms_from_tokens,
         postings_plan_from_tokens,
     )
+    from deces_dataprep_spark.session import inherit_local_properties
 
     run_id = run_id or uuid.uuid4().hex[:12]
     ver = pipeline_version()
@@ -483,30 +493,26 @@ def write_index(
 
     # pass 1: norms + global stats — the ONLY tokenize pass; the
     # projection is persisted and reused by every shard batch below.
-    # Nothing downstream READS the written norms table (the stats/salt/
-    # postings chain runs off the cached projection; only the snapshot
-    # commit needs the write durable), so the norms write runs on the
-    # overlap pool UNDER the stats aggregation, the salt df sample and
-    # the postings job itself (guide §2.6) — it is joined before
-    # unpersisting the projection below. The write and the stats agg
+    # The norms write (which numbers the docs) runs on the overlap pool
+    # UNDER the stats aggregation and the salt df sample (guide §2.6);
+    # the postings plan reads its (doc_id, docnum) back, so it is
+    # joined before the first shard batch. The write and the stats agg
     # race to materialize the token cache; per-block cache locks make
     # whoever reaches a partition first compute it and the other read
-    # it, so the corpus is still tokenized exactly once.
+    # it, so the corpus is still tokenized exactly once. Pool jobs keep
+    # the caller's job group and other local properties.
     from concurrent.futures import ThreadPoolExecutor
 
     t0 = time.time()
     toks = docs_with_tokens(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    norms_root = os.path.join(warehouse, "norms")
+    inherit = inherit_local_properties(spark)
     pool = ThreadPoolExecutor(max_workers=3)
-    norms_fut = pool.submit(
+    norms_fut = pool.submit(inherit(
         lambda: norms_from_tokens(toks, n_shards).write.mode("overwrite")
-        .parquet(os.path.join(warehouse, "norms")))
+        .parquet(norms_root)))
     try:
-        stats_row = toks.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"),
-            F.min("doc_id").alias("min_id"), F.max("doc_id").alias("max_id"),
-        ).collect()[0]
-        n_docs_g = int(stats_row["n_docs"])
-        avgdl_g = float(stats_row["avgdl"] or 0.0)
+        n_docs_g, avgdl_g, span = corpus_stats(toks, n_shards)
         metrics.append({"run_id": run_id, "stage": "norms", "partition_id": -1,
                         "tokens": n_docs_g, "postings": 0,
                         "secs": time.time() - t0})
@@ -517,20 +523,18 @@ def write_index(
         # markers follow the batch. shard_batch tunes the recovery granule:
         # 1 = a job per shard (finest resume, most scan passes), n_shards =
         # one job total (fastest). Skipped (resumed) shards never re-run.
+        # salt ranges split the docnum span [0, largest shard's count)
         salt = None
         if salt_ranges:
             hot = (hot_terms_by_df(toks, salt_df_threshold)
                    if salt_df_threshold is not None else None)
-            salt = make_salt_spec(int(stats_row["min_id"] or 0),
-                                  int(stats_row["max_id"] or 0),
-                                  salt_ranges, n_docs_g, hot_terms=hot)
+            salt = make_salt_spec(0, max(span - 1, 0), salt_ranges,
+                                  n_docs_g, hot_terms=hot)
         elif auto_salt:
             # skew defense by default (round-2 finding: opt-in salting
             # protects nothing) — see builder.auto_salt_spec.
-            salt = auto_salt_spec(
-                spark, toks, n_docs_g,
-                int(stats_row["min_id"] or 0), int(stats_row["max_id"] or 0),
-            )
+            salt = auto_salt_spec(spark, toks, n_docs_g, 0,
+                                  max(span - 1, 0))
         shard_batch = shard_batch or n_shards
         todo = []
         for shard in range(n_shards):
@@ -551,17 +555,23 @@ def write_index(
             return spark.read.schema(POSTINGS_SCHEMA) \
                 .option("basePath", post_root).parquet(*paths)
 
+        @inherit
         def _write_dictionary() -> None:
             dictionary_from_postings(read_postings(post_root)) \
                 .write.mode("overwrite").parquet(
                     os.path.join(warehouse, "dictionary"))
 
+        @inherit
         def _write_stats() -> None:
             local_rows(spark, [(n_docs_g, avgdl_g)], STATS_SCHEMA) \
                 .write.mode("overwrite").parquet(
                     os.path.join(warehouse, "stats"))
 
         tail: list = []
+        if todo:
+            norms_fut.result()
+            docnums = spark.read.schema(NORMS_SCHEMA).parquet(norms_root) \
+                .select("doc_id", "docnum")
         for b0 in range(0, len(todo), shard_batch):
             batch = todo[b0:b0 + shard_batch]
             t0 = time.time()
@@ -571,7 +581,7 @@ def write_index(
                 F.pmod(F.col("doc_id"), F.lit(n_shards)).isin(batch)
             )
             part = postings_plan_from_tokens(spark, toks_b, n_shards, avgdl_g,
-                                             salt=salt)
+                                             salt=salt, docnums=docnums)
             write_postings(spark, part, post_root, n_shards, dynamic=True)
             if b0 + shard_batch >= len(todo):
                 tail = [pool.submit(_write_dictionary), pool.submit(_write_stats)]
@@ -684,7 +694,10 @@ def load_index(spark: SparkSession, warehouse: str,
     later appends/commits as long as its files weren't physically
     overwritten. ``basePath`` keeps the ``shard=`` partition column."""
     from deces_dataprep_spark.index.builder import IndexTables
-    from deces_dataprep_spark.index.codec import require_array_layout
+    from deces_dataprep_spark.index.codec import (
+        require_array_layout,
+        require_docnum_norms,
+    )
 
     log = SnapshotLog(warehouse)
     if alias is not None:
@@ -708,10 +721,12 @@ def load_index(spark: SparkSession, warehouse: str,
     if "doc_gaps" in postings.columns:
         require_array_layout(
             postings.schema["doc_gaps"].dataType.simpleString(), warehouse)
+    norms = read("norms")
+    require_docnum_norms(norms.columns, warehouse)
     return IndexTables(
         postings=postings,
         dictionary=read("dictionary"),
-        norms=read("norms"),
+        norms=norms,
         stats=read("stats"),
         positions=read("positions") if "positions" in t else None,
         files={name: t[name]["files"] for name in t if t[name].get("files")},

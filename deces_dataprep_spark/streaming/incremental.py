@@ -17,14 +17,16 @@ equivalent:
 * ``compact_deltas`` — the sort-merge of partial postings: explode the
   deltas' block arrays back to (shard, term, doc_id, tf) JVM-side, join
   them ONCE with the *latest table* (one row per doc: the
-  ``(doc_id, ingest_batch, shard, doc_len)`` of its latest ingest) —
-  that one join both drops the postings of superseded page versions
-  (re-ingest REPLACE semantics) and attaches dl — re-pack through the
-  batch builder's block pack with the *final* global stats, and
-  atomically commit the merged index as a new snapshot. After
-  compaction WAND bounds are valid again. There is no separate
-  append-only branch: a stream that never re-ingests takes the same
-  plan.
+  ``(doc_id, ingest_batch, shard, doc_len, docnum)`` of its latest
+  ingest) — that one join drops the postings of superseded page
+  versions (re-ingest REPLACE semantics) and attaches dl and the doc
+  number — re-pack through the batch builder's block pack, keyed by
+  docnum, with the *final* global stats, and atomically commit the
+  merged index as a new snapshot. After compaction WAND bounds are
+  valid again. There is no separate append-only branch: a stream that
+  never re-ingests takes the same plan. Deltas stay keyed by doc_id;
+  :func:`load_delta_index` exposes ``docnum = doc_id`` in its norms,
+  so reads map every index's blocks back through the norms alike.
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation
   over an event stream (late data handled by the watermark), the
   streaming counterpart of the ``events_hourly`` batch rollup.
@@ -44,6 +46,7 @@ from deces_dataprep_spark.index.builder import (
     STATS_SCHEMA,
     docs_with_tokens,
     dictionary_from_postings,
+    number_docs,
 )
 
 PAGES_SCHEMA = (
@@ -117,14 +120,20 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     A doc_id that occurs more than once in one micro-batch keeps one
     version (:func:`_latest_pages`), on both sides: the latest table
     compaction joins on assumes one norms row and one folded delta
-    posting per (doc_id, ingest_batch)."""
+    posting per (doc_id, ingest_batch).
+
+    Both pool jobs keep the calling thread's job group and other local
+    properties (the stream's own group under ``foreachBatch``)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from deces_dataprep_spark.functions.analyze import token_count_col
     from deces_dataprep_spark.index.builder import postings_plan_from_tokens
+    from deces_dataprep_spark.session import inherit_local_properties
 
     par = spark.sparkContext.defaultParallelism
+    inherit = inherit_local_properties(spark)
 
+    @inherit
     def write_norms() -> None:
         # doc_len is counted before the dedup's exchange, in the input's
         # own tasks; AQE then coalesces the small exchange, so a
@@ -142,6 +151,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
               .partitionBy("ingest_batch")
               .parquet(os.path.join(warehouse, "norms_delta")))
 
+    @inherit
     def write_delta() -> None:
         # 1× the cluster parallelism for the delta's posting stage (not
         # the batch builder's 3×): a micro-batch's fold/sort holds a
@@ -242,14 +252,20 @@ def _read_deltas(spark: SparkSession,
 
 def latest_docs(norms_delta: DataFrame) -> DataFrame:
     """The latest table: one row per doc, ``(doc_id, ingest_batch, shard,
-    doc_len)`` of the doc's latest ingest. Re-ingest semantics are
-    REPLACE: a doc_id re-ingested in a later micro-batch supersedes its
-    earlier rows. ``max`` of a struct led by ``ingest_batch`` picks that
-    row in one aggregate (deterministic: a batch holds one row per doc,
-    and the struct's other fields break any tie)."""
-    return norms_delta.groupBy("doc_id").agg(
-        F.max(F.struct("ingest_batch", "shard", "doc_len")).alias("__l")
-    ).select("doc_id", "__l.ingest_batch", "__l.shard", "__l.doc_len")
+    doc_len, docnum)`` of the doc's latest ingest. Re-ingest semantics
+    are REPLACE: a doc_id re-ingested in a later micro-batch supersedes
+    its earlier rows. ``max`` of a struct led by ``ingest_batch`` picks
+    that row in one aggregate (deterministic: a batch holds one row per
+    doc, and the struct's other field breaks any tie). ``docnum``
+    numbers the latest docs of each shard as a batch build over them
+    would (``builder.number_docs``). The rows are clustered by shard
+    once: the aggregate (a doc lives in one shard) and the numbering
+    window both reuse that one exchange; a plan that never selects
+    ``docnum`` prunes the window away."""
+    return number_docs(
+        norms_delta.repartition("shard").groupBy("shard", "doc_id").agg(
+            F.max(F.struct("ingest_batch", "doc_len")).alias("__l"))
+        .select("doc_id", "__l.ingest_batch", "shard", "__l.doc_len"))
 
 
 def load_delta_index(spark: SparkSession, warehouse: str):
@@ -258,7 +274,8 @@ def load_delta_index(spark: SparkSession, warehouse: str):
     block_max_tfnorm bounds are batch-local → only exact paths (TAAT /
     exhaustive) may be used; QueryEngine.search(..., method='taat').
     Norms/stats come from the latest table (:func:`latest_docs`, one row
-    per doc); posting blocks, however, are served as-is — a doc
+    per doc), with ``docnum = doc_id`` because delta blocks are keyed by
+    doc_id; posting blocks, however, are served as-is — a doc
     re-ingested in 2+ batches still has its OLD postings in older
     deltas, so pre-compaction serving is exact only for append-only
     streams. After a re-ingest, run :func:`compact_deltas` (which
@@ -268,7 +285,8 @@ def load_delta_index(spark: SparkSession, warehouse: str):
 
     norms_delta, deltas = _read_deltas(spark, warehouse)
     postings = deltas.drop("ingest_batch")
-    norms = latest_docs(norms_delta).select("shard", "doc_id", "doc_len")
+    norms = latest_docs(norms_delta).select(
+        "shard", "doc_id", "doc_len", F.col("doc_id").alias("docnum"))
     stats = norms.agg(F.count(F.lit(1)).alias("n_docs"),
                       F.avg("doc_len").alias("avgdl"))
     return IndexTables(postings=postings,
@@ -282,8 +300,8 @@ def compaction_postings(deltas: DataFrame, latest: DataFrame, avgdl: float,
     """The compaction's posting plan: every delta posting, exploded
     JVM-side, joins the latest table ONCE on ``(doc_id, ingest_batch)``.
     That one join drops the postings of superseded page versions and
-    attaches each posting's dl; the fold and the block pack are the
-    batch builder's.
+    attaches each posting's dl and docnum; the fold and the block pack
+    are the batch builder's, keyed by docnum.
 
     Each block decodes on its own (offsets from its stored first_doc),
     so parquet splits and task boundaries cannot shift doc_ids. After
@@ -295,12 +313,13 @@ def compaction_postings(deltas: DataFrame, latest: DataFrame, avgdl: float,
     from deces_dataprep_spark.index.builder import fold_postings, pack_blocks
     from deces_dataprep_spark.index.codec import BLOCK_SIZE, explode_blocks
 
-    rows = explode_blocks(deltas, "ingest_batch", "shard", "term").join(
-        latest.select("doc_id", "ingest_batch",
+    rows = explode_blocks(deltas, "ingest_batch", "shard", "term",
+                          key="doc_id").join(
+        latest.select("doc_id", "ingest_batch", "docnum",
                       F.col("doc_len").alias("dl")),
         ["doc_id", "ingest_batch"])
-    return pack_blocks(fold_postings(rows, salt, n_part), salt, BLOCK_SIZE,
-                       avgdl)
+    return pack_blocks(fold_postings(rows, salt, n_part, key="docnum"),
+                       salt, BLOCK_SIZE, avgdl, key="docnum")
 
 
 def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
@@ -328,7 +347,6 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import StorageLevel
-    from pyspark.util import inheritable_thread_target
 
     from deces_dataprep_spark.index.builder import (
         AUTO_SALT_DF_FRAC,
@@ -337,6 +355,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
         local_rows,
         make_salt_spec,
     )
+    from deces_dataprep_spark.session import inherit_local_properties
     from deces_dataprep_spark.snapshots import SnapshotLog, write_postings
 
     norms_delta, deltas = _read_deltas(spark, warehouse)
@@ -355,17 +374,12 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     # re-encode job has succeeded, and a mid-compaction failure would
     # then leave the four warehouse tables mutually inconsistent where
     # the sequential code left them untouched. The pool's jobs keep the
-    # caller's job group and other local properties (in PySpark's
-    # default pinned-thread mode; without it the wrapper is the session
-    # itself, and there are no per-thread properties to carry).
-    inherit = inheritable_thread_target(spark)
-    if not callable(inherit):
-        def inherit(f):
-            return f
+    # caller's job group and other local properties.
+    inherit = inherit_local_properties(spark)
 
     @inherit
     def _write_norms() -> None:
-        latest.select("shard", "doc_id", "doc_len") \
+        latest.select("shard", "doc_id", "doc_len", "docnum") \
             .write.mode("overwrite").parquet(path("norms"))
 
     @inherit
@@ -378,8 +392,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
         stats_row = latest.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.avg("doc_len").alias("avgdl"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id")).collect()[0]
+            F.max("docnum").alias("max_docnum")).collect()[0]
         n_docs = int(stats_row["n_docs"])
         avgdl = float(stats_row["avgdl"] or 0.0)
         salt = None
@@ -394,8 +407,8 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
             )
             if hot:
                 n_ranges = max(4, min(64, spark.sparkContext.defaultParallelism))
-                salt = make_salt_spec(int(stats_row["min_id"] or 0),
-                                      int(stats_row["max_id"] or 0),
+                # ranges over the docnum span, as in the batch build
+                salt = make_salt_spec(0, int(stats_row["max_docnum"] or 0),
                                       n_ranges, n_docs, hot_terms=hot)
         # 3× parallelism, matching the batch builder's scale-adaptive
         # posting-partition default (see postings_plan_from_tokens).

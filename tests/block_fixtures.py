@@ -43,3 +43,10 @@ def term_postings(term, df, doc_ids, tfs, scores=None,
         doc_gaps=flat(b["doc_gaps"]), tfs=flat(b["tfs"]),
         block_max=b["block_max"],
     )
+
+
+def docnum_map(norms) -> dict:
+    """``{(shard, docnum): doc_id}`` of a norms DataFrame: the mapping a
+    read applies to the block keys ``decode_blocks_concat`` returns."""
+    return {(r["shard"], r["docnum"]): r["doc_id"]
+            for r in norms.select("shard", "docnum", "doc_id").collect()}

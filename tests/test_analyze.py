@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 from deces_dataprep_spark.functions.analyze import (
     duckdb_tokens_sql,
     normalize_series,
+    normalize_text,
     tokenize_series,
     tokenize_text,
 )
@@ -45,6 +46,7 @@ _TRICKY = ["", " ", "\t\n", "İ", "İstanbul", "²", "ﷺ", "⑴", "ß", "ﬁ",
 def test_tokenize_text_equals_pandas_chain(parts):
     text = " ".join(parts)
     assert tokenize_text(text) == tokenize_series(pd.Series([text])).iloc[0]
+    assert normalize_text(text) == normalize_series(pd.Series([text])).iloc[0]
 
 
 def test_tokenize_text_code_point_sweep():
@@ -58,6 +60,10 @@ def test_tokenize_text_code_point_sweep():
     got = [tokenize_text(t) for t in texts]
     bad = [(t, g, w) for t, g, w in zip(texts, got, want) if g != w]
     assert not bad, bad[:5]
+    want = normalize_series(pd.Series(texts)).tolist()
+    got = [normalize_text(t) for t in texts]
+    bad = [(t, g, w) for t, g, w in zip(texts, got, want) if g != w]
+    assert not bad, bad[:5]
 
 
 def test_normalize_keyword():
@@ -66,6 +72,8 @@ def test_normalize_keyword():
     assert out.iloc[0] == "paris 9eme"
     assert out.iloc[1] == "deces"
     assert pd.isna(out.iloc[2])
+    assert normalize_text("  PARIS (9ème)  ") == "paris 9eme"
+    assert normalize_text("DÉCÈS") == "deces"
 
 
 def test_duckdb_tokenizer_matches_pandas_on_ascii():

@@ -36,6 +36,10 @@ def _collect_term(tables, term):
 
 
 def test_postings_match_dataframe_tf(spark, documents, tables):
+    """Decoded block keys, mapped through the norms, are the docs."""
+    from block_fixtures import docnum_map
+
+    doc_of = docnum_map(tables.norms)
     tf = term_frequencies(documents, n_shards=4).cache()
     for term in ["the", "spark", "join"]:
         want = {
@@ -48,7 +52,7 @@ def test_postings_match_dataframe_tf(spark, documents, tables):
                 [r["doc_gaps"] for r in rows], [r["tfs"] for r in rows],
                 [r["first_doc"] for r in rows], [r["n_docs"] for r in rows])
             for d, t in zip(ids.tolist(), tfs.tolist()):
-                got[(shard, int(d))] = int(t)
+                got[(shard, doc_of[(shard, int(d))])] = int(t)
         assert got == want, term
 
 
@@ -226,6 +230,29 @@ def test_boolean_search_routes_rank_identical(spark, documents, tables):
         assert "window" not in toks[d]
 
 
+def test_boolean_oracle_sql_independent_of_hash_seed():
+    """The DuckDB bool oracle renders its must/should ``IN`` lists
+    sorted, so its text is the same in two processes with different
+    ``PYTHONHASHSEED`` values (set iteration order is not)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from deces_dataprep_spark.index.query import "
+        "duckdb_boolean_topk_sql as f\n"
+        "print(f(['table merge sort join window row', 'spark data'],"
+        " ['fast order key value index query', 'page'], ['zzz'],"
+        " minimum_should_match=1))")
+    outs = [subprocess.run(
+        [sys.executable, "-c", code], check=True, capture_output=True,
+        text=True, env={**os.environ, "PYTHONHASHSEED": seed,
+                        "PYTHONPATH": root}).stdout
+        for seed in ("1", "2")]
+    assert outs[0] and outs[0] == outs[1]
+
+
 def test_salt_partition_key_exact_integer_division(spark):
     """Regression (advisor r2): the salted repartition key must use
     exact integer division. doc_id = 10**18 - 1 rounds to 10**18 in
@@ -233,8 +260,16 @@ def test_salt_partition_key_exact_integer_division(spark):
     encoder's uint64 `//` computes 7 — one (shard, term, salt) group
     split across two partitions, duplicated block_ids, blocks out of
     doc order. With `div` both sides agree and the block invariants
-    hold even at extreme 64-bit id magnitudes."""
-    from deces_dataprep_spark.index.builder import make_salt_spec
+    hold even at extreme 64-bit id magnitudes — on a pack keyed by
+    doc_id (as streaming deltas are), and through a salted build, whose
+    blocks are keyed by docnum and map back to the ids."""
+    from block_fixtures import docnum_map
+
+    from deces_dataprep_spark.index.builder import (
+        fold_postings,
+        make_salt_spec,
+        pack_blocks,
+    )
 
     big = 10**18 - 1
     ids = [0, 7, 10**17, 3 * 10**17, 5 * 10**17 + 13, big]
@@ -246,21 +281,32 @@ def test_salt_partition_key_exact_integer_division(spark):
     assert big // spec.width != int(float(big) / float(spec.width)), \
         "fixture must sit on a double-rounding boundary"
 
+    by_id = spark.createDataFrame(
+        [(0, "the", i, 2, 4) for i in ids],
+        "shard int, term string, doc_id long, tf long, dl long")
     salted = build_index(spark, docs, n_shards=1, salt_ranges=8,
                          salt_df_threshold=2, salt_sample_frac=1.0)
-    rows = (salted.postings.filter(F.col("term") == "the")
-            .orderBy("block_id").collect())
-    assert rows, "hot term must be present"
-    assert len({r["block_id"] for r in rows}) == len(rows)
-    for a, b in zip(rows, rows[1:]):
-        assert a["last_doc"] < b["first_doc"], (a["block_id"], b["block_id"])
-    # all six docs survive the round trip, in order
-    got, _ = decode_blocks_concat(
-        [r["doc_gaps"] for r in rows],
-        [r["tfs"] for r in rows],
-        [int(r["first_doc"]) for r in rows],
-        [int(r["n_docs"]) for r in rows])
-    assert [int(x) for x in got] == sorted(ids)
+    doc_of = docnum_map(salted.norms)
+    for rows, key_of in [
+        (pack_blocks(fold_postings(by_id, spec, 4), spec, 128,
+                     4.0).collect(),
+         int),
+        (salted.postings.filter(F.col("term") == "the").collect(),
+         lambda k: doc_of[(0, int(k))]),
+    ]:
+        rows = sorted(rows, key=lambda r: r["block_id"])
+        assert rows, "hot term must be present"
+        assert len({r["block_id"] for r in rows}) == len(rows)
+        for a, b in zip(rows, rows[1:]):
+            assert a["last_doc"] < b["first_doc"], (a["block_id"],
+                                                    b["block_id"])
+        # all six docs survive the round trip, in order
+        got, _ = decode_blocks_concat(
+            [r["doc_gaps"] for r in rows],
+            [r["tfs"] for r in rows],
+            [int(r["first_doc"]) for r in rows],
+            [int(r["n_docs"]) for r in rows])
+        assert [key_of(x) for x in got] == sorted(ids)
 
 
 def test_broadcast_topk_tie_break_on_duplicate_docs(spark):

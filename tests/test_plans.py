@@ -86,16 +86,61 @@ def test_scan_prunes_columns(spark):
     assert "text" not in m.group(1)
 
 
+def _above_generate(plan: str) -> str:
+    """The plan lines printed before its (one) Generate: the operators
+    over the exploded token stream."""
+    lines = plan.splitlines()
+    gen = [i for i, line in enumerate(lines) if "Generate explode" in line]
+    assert len(gen) == 1, plan  # token explode is native, and single
+    return "\n".join(lines[:gen[0]])
+
+
 def test_index_build_single_posting_shuffle(spark, documents):
     """The posting pipeline contains exactly one exchange over the
-    exploded token stream (repartition on shard+term) and no join."""
+    exploded token stream (repartition on shard+term) and no join above
+    the explode: doc numbers are attached by one doc-level join below
+    it."""
     from deces_dataprep_spark.index.builder import build_index
 
     postings = build_index(spark, documents, n_shards=2).postings
     plan = _plan(postings)
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-    assert "Join" not in plan
-    assert "Generate explode" in plan  # token explode is native
+    above = _above_generate(plan)
+    assert len(re.findall(r"Exchange hashpartitioning", above)) == 1, plan
+    assert "Exchange hashpartitioning(shard#" in above, plan
+    assert "Join" not in above, plan
+    assert len(re.findall(r"\w*Join \[", plan)) == 1, plan
+
+
+def test_write_index_postings_plan(spark, documents, tmp_path, monkeypatch):
+    """The plan write_index writes its posting blocks with: the one
+    doc-level join that attaches doc numbers is a broadcast below the
+    explode, the corpus is tokenized once (the cached projection), no
+    Python node, and the block pack runs ONE row_number window."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from deces_dataprep_spark.snapshots import write_index
+
+    plans: list[str] = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if "doc_gaps" in self._df.columns:
+            plans.append(_plan(self._df))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    write_index(spark, documents, str(tmp_path / "wh"), n_shards=2,
+                resume=False)
+    assert len(plans) == 1
+    plan = plans[0]
+    above = _above_generate(plan)
+    assert "Join" not in above, plan
+    joins = re.findall(r"\w*Join \[.*", plan)
+    assert len(joins) == 1 and joins[0].startswith("BroadcastHashJoin"), plan
+    assert plan.count("regexp_extract_all") == 1, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert plan.count("row_number()") == 1, plan
 
 def test_decontam_probe_plan_is_joinless(spark, docs):
     """The default probe path is a pure projection: the benchmark set

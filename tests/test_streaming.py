@@ -363,7 +363,8 @@ def test_duplicate_doc_id_in_one_batch_keeps_one_version(spark, tmp_path):
         == {"apple": (2, 2), "banana": (1, 1), "kiwi": (2, 4),
             "mango": (1, 1)}
     tfs = {(r["term"], r["doc_id"]): r["tf"]
-           for r in explode_blocks(t.postings, "term").collect()}
+           for r in explode_blocks(t.postings, "shard", "term").join(
+               t.norms, ["shard", "docnum"]).collect()}
     assert tfs[("kiwi", 2)] == 3 and tfs[("kiwi", 3)] == 1
     assert tfs[("apple", 2)] == 1
 
