@@ -205,12 +205,13 @@ class SaltSpec:
     blocks_per_salt: int
     hot: frozenset | None  # None = salt every term (narrow use)
 
-    def column(self, key: str = "doc_id"):
-        """The salt of each posting row: its ``key`` range for hot
-        terms, 0 otherwise. Exact integer division (``div``), not float
-        ``/`` + cast: double rounding near a range boundary would split
-        one (shard, term, salt) group across two ranges."""
-        salt = F.expr(f"({key} - {self.min_id}L) div {self.width}L")
+    def column(self):
+        """The salt of each posting row: its block-key (``docnum``)
+        range for hot terms, 0 otherwise. Exact integer division
+        (``div``), not float ``/`` + cast: double rounding near a range
+        boundary would split one (shard, term, salt) group across two
+        ranges."""
+        salt = F.expr(f"(docnum - {self.min_id}L) div {self.width}L")
         if self.hot is None:
             return salt
         return F.when(F.col("term").isin(sorted(self.hot)), salt) \
@@ -248,7 +249,7 @@ def postings_plan_from_tokens(
     ``docnums`` — the ``(doc_id, docnum)`` columns of the index's norms
     (:func:`number_docs`): blocks are keyed by docnum, attached by one
     doc-level join BELOW the explode (module docstring). Without it
-    (streaming deltas) blocks are keyed by doc_id.
+    (streaming deltas) a doc's docnum is its doc_id.
 
     ``salt`` (the df-skew defuser, :class:`SaltSpec`): hot terms are
     additionally partitioned by their block-key salt range, so a
@@ -257,8 +258,7 @@ def postings_plan_from_tokens(
     salted and unsalted indexes identically (tested rank-identical).
     Always restrict to a hot set (``SaltSpec.hot``): salting every term
     fragments (shard, term) groups into tiny runs; its ranges are over
-    the block key (docnums when ``docnums`` is given). Requires
-    non-negative keys.
+    the block key ``docnum``. Requires non-negative keys.
 
     Beware same-plan re-execution when benchmarking: Spark reuses
     completed shuffle map stages of an identical plan, so only
@@ -267,13 +267,13 @@ def postings_plan_from_tokens(
     # implicit size(tokens)>0 pre-filter that Catalyst pushes below the
     # tokens projection, re-evaluating the whole tokenizer expression a
     # second time per row in the scan stage (visible in PLANS.md).
-    key = "doc_id"
     if docnums is not None:
         toks = toks.join(docnums.select("doc_id", "docnum"), "doc_id")
-        key = "docnum"
+    else:
+        toks = toks.withColumn("docnum", F.col("doc_id"))
     exploded = toks.select(
         F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
-        key,
+        "docnum",
         "dl",
         F.explode_outer("tokens").alias("term"),
     ).filter(F.col("term").isNotNull())
@@ -283,47 +283,46 @@ def postings_plan_from_tokens(
     # way classic shuffle sizing prescribes — measured 11.0 s (1× slots)
     # → 8.8 s (3×) for the 400k-doc posting job, flat from 2×-4×.
     n_part = partitions or 3 * spark.sparkContext.defaultParallelism
-    folded = fold_postings(exploded, salt, n_part, F.count(F.lit(1)), key)
-    return pack_blocks(folded, salt, block_size, avgdl, key)
+    folded = fold_postings(exploded, salt, n_part, F.count(F.lit(1)))
+    return pack_blocks(folded, salt, block_size, avgdl)
 
 
 def fold_postings(rows: DataFrame, salt: SaltSpec | None, n_part: int,
-                  tf=None, key: str = "doc_id") -> DataFrame:
-    """Cluster posting rows ``(shard, term, <key>, dl[, tf])`` by
+                  tf=None) -> DataFrame:
+    """Cluster posting rows ``(shard, term, docnum, dl[, tf])`` by
     (shard, term[, __salt]) in ONE exchange and sort each run by the
-    block key (``docnum`` in a build or compaction, ``doc_id`` in a
-    streaming delta) — the input :func:`pack_blocks` expects.
+    block key ``docnum`` (a streaming delta's is its doc_id) — the
+    input :func:`pack_blocks` expects.
 
     ``tf`` is the fold's aggregate (occurrence count in the build, sum
     of delta tfs in compaction), or None when the rows are already one
     per (shard, term, doc). The fold groups by the partition keys plus
-    the key: hash partitioning on a subset of the grouping keys
+    docnum: hash partitioning on a subset of the grouping keys
     satisfies the aggregation's clustering, so it reuses the exchange.
     ``__salt`` is materialized as a column so the repartition, the fold
     and :func:`pack_blocks`' window all reference the same attribute."""
     grp = ["shard", "term"]
     if salt is not None:
-        rows = rows.withColumn("__salt", salt.column(key))
+        rows = rows.withColumn("__salt", salt.column())
         grp.append("__salt")
     rows = rows.repartition(n_part, *grp)
     if tf is not None:
-        rows = rows.groupBy(*grp, key).agg(
+        rows = rows.groupBy(*grp, "docnum").agg(
             tf.alias("tf"), F.first("dl").alias("dl"))
-    return rows.select(*grp, key, "tf", "dl") \
-        .sortWithinPartitions(*grp, key)
+    return rows.select(*grp, "docnum", "tf", "dl") \
+        .sortWithinPartitions(*grp, "docnum")
 
 
 def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
-                block_size: int, avgdl: float,
-                key: str = "doc_id") -> DataFrame:
+                block_size: int, avgdl: float) -> DataFrame:
     """Pack a folded posting stream (:func:`fold_postings`) into
-    :data:`POSTINGS_SCHEMA` block rows keyed by ``key``, entirely in
+    :data:`POSTINGS_SCHEMA` block rows keyed by ``docnum``, entirely in
     the JVM.
 
     A ``row_number`` window (its ordering already satisfied by the
     fold's sort), projected once, buckets each run into
     ``block_size``-doc blocks; one aggregate per block collects the
-    block-bounded ``(key, tf)`` list and computes the block metadata,
+    block-bounded ``(docnum, tf)`` list and computes the block metadata,
     with the tf-norm expression in the same operation order as the
     numpy scorer. The group keys extend the partition keys, so the
     aggregate reuses the clustering: no second exchange. The offsets
@@ -331,23 +330,23 @@ def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
     lambda that indexed into ``ps`` itself would re-extract the array
     per element (quadratic)."""
     grp = ["shard", "term"] + (["__salt"] if salt is not None else [])
-    rn = F.row_number().over(Window.partitionBy(*grp).orderBy(key))
+    rn = F.row_number().over(Window.partitionBy(*grp).orderBy("docnum"))
     k1, b = bm25.K1, bm25.B
     t = F.col("tf").cast("double")
     tfnorm = t / (t + F.lit(k1) * (F.lit(1.0 - b)
                                    + F.lit(b) * F.col("dl").cast("double")
                                    / F.lit(avgdl)))
     blocks = folded.select(
-        *grp, key, "tf", "dl", rn.alias("__rn"),
+        *grp, "docnum", "tf", "dl", rn.alias("__rn"),
     ).groupBy(
         *grp, F.expr(f"(__rn - 1) div {int(block_size)}").alias("__blk"),
     ).agg(
         F.sort_array(F.collect_list(
-            F.struct(key, F.col("tf").cast("int").alias("tf"))))
+            F.struct("docnum", F.col("tf").cast("int").alias("tf"))))
         .alias("ps"),
         F.count(F.lit(1)).cast("int").alias("n_docs"),
-        F.min(key).cast("long").alias("first_doc"),
-        F.max(key).cast("long").alias("last_doc"),
+        F.min("docnum").cast("long").alias("first_doc"),
+        F.max("docnum").cast("long").alias("last_doc"),
         F.max(tfnorm).alias("block_max_tfnorm"),
         F.sum("tf").cast("long").alias("sum_tf"),
     )
@@ -357,7 +356,7 @@ def pack_blocks(folded: DataFrame, salt: SaltSpec | None,
         "shard", "term",
         (salt_off + F.col("__blk")).cast("long").alias("block_id"),
         "n_docs", "first_doc", "last_doc",
-        F.transform(F.col(f"ps.{key}"), lambda x: x - F.col("first_doc"))
+        F.transform(F.col("ps.docnum"), lambda x: x - F.col("first_doc"))
         .alias("doc_gaps"),
         F.col("ps.tf").alias("tfs"),
         "block_max_tfnorm", "sum_tf",
@@ -445,6 +444,24 @@ def postings_plan(
                                      block_size, partitions, salt)
 
 
+#: the most docs one shard may hold: ``docnum`` is an ``int``
+#: (``row_number`` counts in int), so a larger shard would wrap its
+#: numbers and give two docs one block key
+MAX_SHARD_DOCS = 2**31 - 1
+
+
+def check_shard_docs(largest: int, n_shards: int) -> None:
+    """Refuse an index whose largest shard holds more docs than an int
+    ``docnum`` can number — before any posting is written, so a wrapped
+    number never reaches a block key. Spread the docs over more
+    shards."""
+    if largest > MAX_SHARD_DOCS:
+        raise ValueError(
+            f"a shard holds {largest} docs, more than the {MAX_SHARD_DOCS} "
+            f"its int doc numbers can count; raise n_shards (now "
+            f"{n_shards}) so that no shard holds more")
+
+
 def number_docs(docs: DataFrame) -> DataFrame:
     """``docs`` (one row per doc, with ``shard`` and ``doc_id``) plus
     ``docnum int``: the doc's 0-based rank by doc_id within its shard.
@@ -467,13 +484,16 @@ def norms_from_tokens(toks: DataFrame, n_shards: int) -> DataFrame:
 def corpus_stats(toks: DataFrame, n_shards: int) -> tuple[int, float, int]:
     """``(n_docs, avgdl, largest shard's doc count)`` of a token
     projection in one aggregate. The last is the docnum span salting
-    splits (:func:`make_salt_spec`)."""
+    splits (:func:`make_salt_spec`), checked by
+    :func:`check_shard_docs`."""
     shard = F.pmod(F.col("doc_id"), F.lit(n_shards))
     row = toks.agg(
         F.count(F.lit(1)), F.avg("dl"),
         *[F.count_if(shard == s) for s in range(n_shards)],
     ).collect()[0]
-    return int(row[0]), float(row[1] or 0.0), max(row[2:])
+    largest = max(row[2:])
+    check_shard_docs(largest, n_shards)
+    return int(row[0]), float(row[1] or 0.0), largest
 
 
 def build_index(
@@ -518,7 +538,11 @@ def build_index(
     norms = norms_from_tokens(toks, n_shards)
     # global stats — tiny; computed eagerly (the block bounds need avgdl);
     # this is also what materializes the token cache.
-    n_docs_g, avgdl_g, span = corpus_stats(toks, n_shards)
+    try:
+        n_docs_g, avgdl_g, span = corpus_stats(toks, n_shards)
+    except BaseException:
+        toks.unpersist()
+        raise
 
     salt = None
     if salt_ranges:

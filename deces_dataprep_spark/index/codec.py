@@ -104,14 +104,13 @@ def decode_blocks_concat(
     return ids, tfs
 
 
-def explode_blocks(blocks, *keep: str, key: str = "docnum"):
-    """One row per posting, ``(*keep, <key> long, tf long)``, from a
+def explode_blocks(blocks, *keep: str):
+    """One row per posting, ``(*keep, docnum long, tf long)``, from a
     posting-block DataFrame — the JVM decode (a generator over the
     stored arrays plus one add), shared by compaction and every
-    index-backed Spark route. ``key`` names the decoded block key: the
-    doc number of a built or compacted index, which a route joins to
-    the norms on ``(shard, docnum)``, or ``doc_id`` for the streaming
-    deltas compaction reads."""
+    index-backed Spark route. ``docnum`` is the decoded block key,
+    which a route joins to the norms on ``(shard, docnum)`` (a
+    streaming delta's key is its doc_id)."""
     from pyspark.sql import functions as F
 
     return blocks.select(
@@ -119,6 +118,6 @@ def explode_blocks(blocks, *keep: str, key: str = "docnum"):
         F.explode(F.arrays_zip("doc_gaps", "tfs")).alias("__p"),
     ).select(
         *keep,
-        (F.col("first_doc") + F.col("__p.doc_gaps")).alias(key),
+        (F.col("first_doc") + F.col("__p.doc_gaps")).alias("docnum"),
         F.col("__p.tfs").cast("long").alias("tf"),
     )

@@ -197,16 +197,15 @@ class QueryEngine:
     def _doc_ids(self, shard: int, keys):
         """doc_ids (uint64) of one shard's decoded block keys — the
         driver's decode boundary, ``(shard, docnum)`` → the norms row's
-        doc_id. A built or compacted index numbers each shard's docs
-        0..n-1 in doc_id order, so a key is its row's position; a delta
-        index's docnum is the doc_id itself, found by binary search."""
+        doc_id. The shard's docnums are sorted (docnum order is doc_id
+        order, and a delta index's docnum is the doc_id itself), so one
+        binary search finds every key's norms row."""
         import numpy as np
 
         ids, _ = self._shard_norms_np(shard)
-        nums = self._docnums[shard]
-        if nums.size and nums[-1] == nums.size - 1:
-            return ids[keys]
-        return ids[np.searchsorted(nums, keys)]
+        # int64 on both sides: a uint64/int64 search compares in float64
+        return ids[np.searchsorted(self._docnums[shard],
+                                   np.asarray(keys, np.int64))]
 
     def _fetch_term_postings(self, terms: list[str]) -> dict[int, list[TermPostings]]:
         """Postings for the query terms, grouped by shard.

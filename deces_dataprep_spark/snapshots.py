@@ -642,6 +642,7 @@ def write_index(
         # running Spark job on a non-daemon pool thread and masks
         # any norms-write error behind an interpreter-exit hang
         pool.shutdown(wait=True)
+        toks.unpersist()
         raise
     norms_fut.result()  # must land before the projection is dropped
     toks.unpersist()

@@ -250,22 +250,27 @@ def _read_deltas(spark: SparkSession,
             read("postings_delta", POSTINGS_DELTA_SCHEMA))
 
 
+def _latest_versions(norms_delta: DataFrame) -> DataFrame:
+    """One row per doc, ``(doc_id, ingest_batch, shard, doc_len)`` of
+    the doc's latest ingest. Re-ingest semantics are REPLACE: a doc_id
+    re-ingested in a later micro-batch supersedes its earlier rows.
+    ``max`` of a struct led by ``ingest_batch`` picks that row in one
+    aggregate (deterministic: a batch holds one row per doc, and the
+    struct's other field breaks any tie)."""
+    return norms_delta.groupBy("shard", "doc_id").agg(
+        F.max(F.struct("ingest_batch", "doc_len")).alias("__l")) \
+        .select("doc_id", "__l.ingest_batch", "shard", "__l.doc_len")
+
+
 def latest_docs(norms_delta: DataFrame) -> DataFrame:
-    """The latest table: one row per doc, ``(doc_id, ingest_batch, shard,
-    doc_len, docnum)`` of the doc's latest ingest. Re-ingest semantics
-    are REPLACE: a doc_id re-ingested in a later micro-batch supersedes
-    its earlier rows. ``max`` of a struct led by ``ingest_batch`` picks
-    that row in one aggregate (deterministic: a batch holds one row per
-    doc, and the struct's other field breaks any tie). ``docnum``
-    numbers the latest docs of each shard as a batch build over them
-    would (``builder.number_docs``). The rows are clustered by shard
-    once: the aggregate (a doc lives in one shard) and the numbering
-    window both reuse that one exchange; a plan that never selects
-    ``docnum`` prunes the window away."""
-    return number_docs(
-        norms_delta.repartition("shard").groupBy("shard", "doc_id").agg(
-            F.max(F.struct("ingest_batch", "doc_len")).alias("__l"))
-        .select("doc_id", "__l.ingest_batch", "shard", "__l.doc_len"))
+    """The latest table: :func:`_latest_versions` plus ``docnum``,
+    numbered per shard as a batch build over the latest docs would
+    (``builder.number_docs``). The rows are clustered by shard once:
+    the aggregate (a doc lives in one shard) and the numbering window
+    both reuse that one exchange, so both run in at most n_shards
+    tasks; a plan that never selects ``docnum`` prunes the window
+    away."""
+    return number_docs(_latest_versions(norms_delta.repartition("shard")))
 
 
 def load_delta_index(spark: SparkSession, warehouse: str):
@@ -273,19 +278,21 @@ def load_delta_index(spark: SparkSession, warehouse: str):
 
     block_max_tfnorm bounds are batch-local → only exact paths (TAAT /
     exhaustive) may be used; QueryEngine.search(..., method='taat').
-    Norms/stats come from the latest table (:func:`latest_docs`, one row
-    per doc), with ``docnum = doc_id`` because delta blocks are keyed by
-    doc_id; posting blocks, however, are served as-is — a doc
-    re-ingested in 2+ batches still has its OLD postings in older
-    deltas, so pre-compaction serving is exact only for append-only
-    streams. After a re-ingest, run :func:`compact_deltas` (which
-    applies replace semantics) before trusting scores.
+    Norms/stats come from the latest version of each doc
+    (:func:`_latest_versions`, one row per doc, aggregated without the
+    shard clustering the numbering needs), with ``docnum = doc_id``
+    because delta blocks are keyed by doc_id; posting blocks, however,
+    are served as-is — a doc re-ingested in 2+ batches still has its
+    OLD postings in older deltas, so pre-compaction serving is exact
+    only for append-only streams. After a re-ingest, run
+    :func:`compact_deltas` (which applies replace semantics) before
+    trusting scores.
     """
     from deces_dataprep_spark.index.builder import IndexTables
 
     norms_delta, deltas = _read_deltas(spark, warehouse)
     postings = deltas.drop("ingest_batch")
-    norms = latest_docs(norms_delta).select(
+    norms = _latest_versions(norms_delta).select(
         "shard", "doc_id", "doc_len", F.col("doc_id").alias("docnum"))
     stats = norms.agg(F.count(F.lit(1)).alias("n_docs"),
                       F.avg("doc_len").alias("avgdl"))
@@ -313,13 +320,14 @@ def compaction_postings(deltas: DataFrame, latest: DataFrame, avgdl: float,
     from deces_dataprep_spark.index.builder import fold_postings, pack_blocks
     from deces_dataprep_spark.index.codec import BLOCK_SIZE, explode_blocks
 
-    rows = explode_blocks(deltas, "ingest_batch", "shard", "term",
-                          key="doc_id").join(
-        latest.select("doc_id", "ingest_batch", "docnum",
-                      F.col("doc_len").alias("dl")),
-        ["doc_id", "ingest_batch"])
-    return pack_blocks(fold_postings(rows, salt, n_part, key="docnum"),
-                       salt, BLOCK_SIZE, avgdl, key="docnum")
+    # a delta's block key is the doc_id
+    rows = explode_blocks(deltas, "ingest_batch", "shard", "term") \
+        .withColumnRenamed("docnum", "doc_id").join(
+            latest.select("doc_id", "ingest_batch", "docnum",
+                          F.col("doc_len").alias("dl")),
+            ["doc_id", "ingest_batch"])
+    return pack_blocks(fold_postings(rows, salt, n_part),
+                       salt, BLOCK_SIZE, avgdl)
 
 
 def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
@@ -352,6 +360,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
         AUTO_SALT_DF_FRAC,
         AUTO_SALT_MIN_DOCS,
         IndexTables,
+        check_shard_docs,
         local_rows,
         make_salt_spec,
     )
@@ -390,11 +399,15 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
     pool = ThreadPoolExecutor(max_workers=2)
     try:
         stats_row = latest.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("doc_len").alias("avgdl"),
-            F.max("docnum").alias("max_docnum")).collect()[0]
-        n_docs = int(stats_row["n_docs"])
-        avgdl = float(stats_row["avgdl"] or 0.0)
+            F.count(F.lit(1)), F.avg("doc_len"),
+            *[F.count_if(F.col("shard") == s) for s in range(n_shards)],
+        ).collect()[0]
+        n_docs = int(stats_row[0])
+        avgdl = float(stats_row[1] or 0.0)
+        # the largest shard's doc count: the docnum span, checked
+        # before any posting is written
+        span = max(stats_row[2:])
+        check_shard_docs(span, n_shards)
         salt = None
         if auto_salt and n_docs >= AUTO_SALT_MIN_DOCS:
             # df estimate per term from block metadata — a cheap agg over
@@ -408,7 +421,7 @@ def compact_deltas(spark: SparkSession, warehouse: str, n_shards: int = 4,
             if hot:
                 n_ranges = max(4, min(64, spark.sparkContext.defaultParallelism))
                 # ranges over the docnum span, as in the batch build
-                salt = make_salt_spec(0, int(stats_row["max_docnum"] or 0),
+                salt = make_salt_spec(0, max(span - 1, 0),
                                       n_ranges, n_docs, hot_terms=hot)
         # 3× parallelism, matching the batch builder's scale-adaptive
         # posting-partition default (see postings_plan_from_tokens).

@@ -171,6 +171,48 @@ def test_doc_id_keyed_warehouse_requires_rebuild(spark, tmp_path):
         ArrowIndexReader(files)
 
 
+def test_check_shard_docs_refuses_shards_past_int_docnums():
+    """A shard numbers at most 2^31 - 1 docs (docnum is an int from
+    row_number); one more is refused with the remedy, not wrapped."""
+    from deces_dataprep_spark.index.builder import (
+        MAX_SHARD_DOCS,
+        check_shard_docs,
+    )
+
+    assert MAX_SHARD_DOCS == 2**31 - 1
+    check_shard_docs(MAX_SHARD_DOCS, 4)
+    with pytest.raises(ValueError, match="raise n_shards"):
+        check_shard_docs(MAX_SHARD_DOCS + 1, 4)
+
+
+def test_oversized_shard_refused_before_postings(spark, documents, tmp_path,
+                                                 monkeypatch):
+    """write_index, build_index and compact_deltas check the largest
+    shard's doc count before any posting is written (the limit is
+    lowered so a small corpus trips it)."""
+    from stream_fixtures import pages_df, recrawl_slices
+
+    from deces_dataprep_spark.index import builder
+    from deces_dataprep_spark.streaming.incremental import (
+        _append_batch,
+        compact_deltas,
+    )
+
+    st = str(tmp_path / "st")
+    _append_batch(spark, pages_df(spark, recrawl_slices()[0]), 0, st, 2)
+    monkeypatch.setattr(builder, "MAX_SHARD_DOCS", 3)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(ValueError, match="raise n_shards"):
+        write_index(spark, documents, wh, n_shards=2, resume=False)
+    assert not any(fs for _, _, fs in os.walk(os.path.join(wh, "postings")))
+    assert SnapshotLog(wh).latest() is None
+    with pytest.raises(ValueError, match="raise n_shards"):
+        builder.build_index(spark, documents, n_shards=2)
+    with pytest.raises(ValueError, match="raise n_shards"):
+        compact_deltas(spark, st, n_shards=2)
+    assert not os.path.exists(os.path.join(st, "postings"))
+
+
 def _jobs_between(spark, run) -> tuple[set, set]:
     """(ids of every job ``run`` launched, ids of those in its caller's
     job group). Job ids are sequential, so a marker job before and

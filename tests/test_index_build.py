@@ -283,7 +283,7 @@ def test_salt_partition_key_exact_integer_division(spark):
 
     by_id = spark.createDataFrame(
         [(0, "the", i, 2, 4) for i in ids],
-        "shard int, term string, doc_id long, tf long, dl long")
+        "shard int, term string, docnum long, tf long, dl long")
     salted = build_index(spark, docs, n_shards=1, salt_ranges=8,
                          salt_df_threshold=2, salt_sample_frac=1.0)
     doc_of = docnum_map(salted.norms)
@@ -505,7 +505,7 @@ def test_pack_block_properties(spark, postings, block_size):
             for d, tf in p.items()]
     avgdl = float(np.mean([dl(d) for _, _, d, _, _ in rows]))
     df = spark.createDataFrame(
-        rows, "shard int, term string, doc_id long, tf long, dl long")
+        rows, "shard int, term string, docnum long, tf long, dl long")
     packed = pack_blocks(fold_postings(df, None, 4), None, block_size,
                          avgdl).collect()
     for term, p in postings.items():
