@@ -40,7 +40,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deces_dataprep_spark.functions.analyze import tokens_col
+from deces_dataprep_spark.index.query import (
+    _IndexSource,
+    _matching_rows,
+    _ScanSource,
+    analyze_query,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -254,23 +259,6 @@ def _metric_agg_col(m: MetricSpec, round_digits: int | None) -> F.Column:
     return agg.alias(m.out)
 
 
-def _filtered(docs: DataFrame, query: str, text_col: str) -> DataFrame:
-    """Filter-context doc set: conjunction of all analyzed query terms
-    as a per-row ``array_contains`` expression — prunes in the scan
-    stage, no explode, no shuffle (identical shape to the one-level
-    aggs in query.py)."""
-    from deces_dataprep_spark.index.query import analyze_query
-
-    terms = analyze_query(query)
-    if not terms:
-        return docs.limit(0)
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return docs.filter(cond)
-
-
 def _agg_tail(
     filtered: DataFrame,
     buckets: list[BucketSpec],
@@ -349,10 +337,8 @@ def nested_agg_df(
     ordering to the LEAF rows — top-N buckets by doc count desc (tie →
     keys asc), turning the final sort into a
     ``TakeOrderedAndProject``; requires a ``count`` metric."""
-    if not buckets:
-        raise ValueError("nested_agg needs at least one bucket level")
-    return _agg_tail(_filtered(docs, query, text_col), buckets, metrics,
-                     round_digits, top_hits, id_col, size)
+    return _nested_agg(_ScanSource(spark, docs, id_col, text_col), query,
+                       buckets, metrics, round_digits, top_hits, size)
 
 
 def nested_agg_from_index(
@@ -372,21 +358,16 @@ def nested_agg_from_index(
     semi-join the doc-metadata table → the shared groupBy tail.
     Bucket-identical to :func:`nested_agg_df` (tested); corpus cost is
     the matched postings + a metadata semi-join, never a text scan."""
-    from deces_dataprep_spark.index.query import (
-        _matching_doc_ids_from_postings,
-        analyze_query,
-    )
+    return _nested_agg(_IndexSource(spark, tables, meta_docs, id_col), query,
+                       buckets, metrics, round_digits, top_hits, size)
 
-    terms = list(dict.fromkeys(analyze_query(query)))
-    if not terms:
-        return _agg_tail(meta_docs.limit(0), buckets, metrics,
-                         round_digits, top_hits, id_col, size)
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    filtered = meta_docs.join(matching, meta_docs[id_col] == matching["doc_id"],
-                              "left_semi") if id_col != "doc_id" else \
-        meta_docs.join(matching, "doc_id", "left_semi")
-    return _agg_tail(filtered, buckets, metrics, round_digits, top_hits,
-                     id_col, size)
+
+def _nested_agg(src, query, buckets, metrics, round_digits, top_hits,
+                size) -> DataFrame:
+    if not buckets:
+        raise ValueError("nested_agg needs at least one bucket level")
+    return _agg_tail(src.matching_docs(analyze_query(query)), buckets,
+                     metrics, round_digits, top_hits, src.id_col, size)
 
 
 # ---------------------------------------------------------------------------
@@ -591,19 +572,9 @@ def geo_distance_agg_df(
     conditional count per ring in ONE map-side-combinable aggregate,
     unpivoted to ``(key, n_docs)`` driver-side — ring cardinality
     reaches the driver, never the corpus."""
-    from deces_dataprep_spark.index.query import analyze_query
     from deces_dataprep_spark.operators.es_fields import geo_distance_km
 
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     dist = geo_distance_km(F.col(lat_col), F.col(lon_col),
                            F.lit(float(center_lat)),
                            F.lit(float(center_lon)))
@@ -640,7 +611,6 @@ def duckdb_geo_distance_agg_sql(
     haversine (2·R·asin(√…), R=6371 km, matching
     ``es_fields.geo_distance_km``) and conditional ring counts."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
-    from deces_dataprep_spark.index.query import analyze_query
 
     terms = analyze_query(query)
     toks = duckdb_tokens_sql(text_col)
@@ -699,18 +669,7 @@ def geotile_grid_agg_df(
     mercator domain ±85.05112878. All pure native columns (codegen'd);
     one combinable groupBy + TakeOrderedAndProject — bucket cardinality
     is capped at 4^z and only k rows reach the driver."""
-    from deces_dataprep_spark.index.query import analyze_query
-
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     z = int(precision)
     n = float(1 << z)
     lat = F.least(F.greatest(F.col(lat_col).cast("double"),
@@ -755,7 +714,7 @@ def auto_date_histogram_df(
     count-distinct planning pass chooses the rung (the decision is a
     driver-side scalar, like ES's coordinating-node rounding choice);
     the chosen unit is reported in ``interval_unit``."""
-    filtered = _filtered(docs, query, text_col)
+    filtered = _matching_rows(docs, analyze_query(query), text_col)
     ts = F.col(field).cast("timestamp")
     row = filtered.agg(*[
         F.count_distinct(F.date_trunc(u, ts)).alias(u)
@@ -780,7 +739,6 @@ def duckdb_auto_date_histogram_sql(
     finest-fitting-rung rule, chosen with a CASE over the per-rung
     distinct counts (DuckDB's ``date_trunc`` accepts a dynamic part)."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
-    from deces_dataprep_spark.index.query import analyze_query
 
     terms = analyze_query(query)
     toks = duckdb_tokens_sql(text_col)
@@ -819,7 +777,6 @@ def duckdb_geotile_grid_sql(
     """Oracle twin of :func:`geotile_grid_agg_df` — identical tile
     formula (asinh∘tan form, same clamps)."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
-    from deces_dataprep_spark.index.query import analyze_query
 
     terms = analyze_query(query)
     toks = duckdb_tokens_sql(text_col)
@@ -926,7 +883,6 @@ def duckdb_nested_agg_sql(
     row_number window + ordered ``string_agg``; ``size`` mirrors the
     terms-agg count-desc ordering."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
-    from deces_dataprep_spark.index.query import analyze_query
 
     terms = analyze_query(query)
     toks = duckdb_tokens_sql(text_col)

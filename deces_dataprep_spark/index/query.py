@@ -4,19 +4,33 @@ Mirrors the reference's ES search path (its index spec is the contract:
 query text goes through the same ``norm`` analyzer as indexing, terms
 are looked up in the inverted index, BM25-scored, top-k returned).
 
-Two implementations, required to be rank-identical (the engine's
-rank-identity contract):
+An ES feature has up to four routes, required to agree on rank and
+score (the engine's rank-identity contract):
 
-* :meth:`QueryEngine.search` — block-max WAND over our compressed
-  postings. Postings for the query's terms are fetched with predicate
-  pushdown (``term IN (...)`` reaches the Parquet scan), WAND runs per
-  shard, shard top-k merge is exact because df/N/avgdl are global.
-* :func:`bm25_topk_df` — the exhaustive Spark-SQL oracle: tokenize →
-  explode → join → aggregate → ``ORDER BY score DESC, doc_id LIMIT k``,
-  fully Catalyst-planned (``TakeOrderedAndProject``).
+* scan (``*_df``) — one Spark plan over the raw docs: tokenize → match
+  or score → aggregate, fully Catalyst-planned (e.g.
+  :func:`bm25_topk_df`, ``ORDER BY score DESC, doc_id LIMIT k`` as a
+  ``TakeOrderedAndProject``).
+* index plan (``*_from_index``) — one Spark plan over the built index:
+  only the query terms' posting blocks are read (``term IN (...)``
+  reaches the Parquet scan) and decoded in the JVM.
+* driver serve (:class:`QueryEngine`, ``*_serve``) — block-max WAND or
+  TAAT over the fetched postings on the driver, arrow reader or Spark
+  fetch; shard top-k merge is exact because df/N/avgdl are global.
+* DuckDB oracle (``duckdb_*_sql``) — an independent SQL text of the
+  same answer; its text is fingerprinted and must stay byte-stable.
+
+The scan and index plans of a feature share one body. It is written
+against a *source* (:class:`_ScanSource` over ``docs``,
+:class:`_IndexSource` over the index tables and a doc-metadata table),
+which supplies the three things the routes differ by: the BM25 score
+set, the ids of matching docs, and the matching doc rows.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +38,12 @@ from pyspark.sql import functions as F
 from deces_dataprep_spark.functions.analyze import tokenize_text, tokens_col
 from deces_dataprep_spark.index import bm25
 from deces_dataprep_spark.index.builder import IndexTables, term_frequencies
-from deces_dataprep_spark.index.wand import TermPostings, taat_topk, wand_topk
+from deces_dataprep_spark.index.wand import (
+    TermPostings,
+    taat_topk,
+    topk_rounded,
+    wand_topk,
+)
 
 
 def analyze_query(q: str) -> list[str]:
@@ -100,6 +119,12 @@ class QueryEngine:
         # (loaded once on first use — see _dict_dfs); False = probed
         # and found over DICT_MEMO_MAX_TERMS, don't retry
         self._full_dfs: dict[str, int] | bool | None = None
+
+    @property
+    def session(self) -> SparkSession:
+        """The Spark session the engine's Spark routes plan on: the one
+        it was given, else the one its tables were loaded with."""
+        return self.spark or self.tables.postings.sparkSession
 
     #: upper bound on the term→df memo (≈60 MB of dict at web-text term
     #: lengths). A dictionary is VOCABULARY-sized, not corpus-sized —
@@ -305,9 +330,8 @@ class QueryEngine:
         a cursor taken from one page filters the next page consistently
         (unrounded page-1 scores vs a rounded cursor comparison could
         silently drop or duplicate boundary hits)."""
-        spark = self.spark or self.tables.postings.sparkSession
         rows = bm25_topk_from_index(
-            spark, self.tables, query, k,
+            self.session, self.tables, query, k,
             n_docs=self.n_docs, avgdl=self.avgdl,  # cached — one job saved
             round_digits=6,
             dfs=self._dict_dfs(),  # memoized — no dictionary job/query
@@ -327,9 +351,8 @@ class QueryEngine:
         queries and TAAT past TAAT_THRESHOLD candidate postings. All
         are exact and rank-identical (tested)."""
         if method == "broadcast":
-            spark = self.spark or self.tables.postings.sparkSession
             df = bm25_topk_broadcast(
-                spark, self.tables, query, k,
+                self.session, self.tables, query, k,
                 n_docs=self.n_docs, avgdl=self.avgdl,
                 dfs=self._dict_dfs(),  # memoized — no dictionary job
             )
@@ -433,9 +456,8 @@ class QueryEngine:
                 phrase_match_from_index,
             )
 
-            spark = self.spark or self.tables.positions.sparkSession
             rows = phrase_match_from_index(
-                spark, self.tables.positions, phrase).collect()
+                self.session, self.tables.positions, phrase).collect()
             return sorted(int(r["doc_id"]) for r in rows)
         if self.reader is not None:
             by_doc = self.reader.term_positions(list(set(terms)))
@@ -485,9 +507,8 @@ class QueryEngine:
             # (numpy) and plan-route (Spark) float sums can differ in the
             # last ulps, and the tie arm of the cursor predicate needs
             # score equality to be stable across routes.
-            spark = self.spark or self.tables.postings.sparkSession
             rows = bm25_topk_from_index(
-                spark, self.tables, query, k,
+                self.session, self.tables, query, k,
                 n_docs=self.n_docs, avgdl=self.avgdl, round_digits=6,
                 after_score=round(a_score, 6), after_doc_id=a_doc,
                 dfs=self._dict_dfs(),  # memoized — no dictionary job
@@ -779,12 +800,8 @@ def multi_match_serve(
         raise ValueError(f"unknown multi_match type: {match_type!r}")
     if any(eng.n_docs > QueryEngine.DISTRIBUTED_CORPUS_THRESHOLD
            for eng, _ in field_engines.values()):
-        spark = next(
-            (e.spark for e, _ in field_engines.values() if e.spark is not None),
-            None,
-        ) or next(iter(field_engines.values()))[0].tables.postings.sparkSession
         df = multi_match_from_index(
-            spark,
+            next(iter(field_engines.values()))[0].session,
             {f: (eng.tables, boost)
              for f, (eng, boost) in field_engines.items()},
             query, k, round_digits,
@@ -821,27 +838,7 @@ def multi_match_serve(
         # disjoint doc sets — so the segment max IS the best field
         best = np.maximum.reduceat(sc, starts)
         sums = best + float(tie_breaker) * (sums - best)
-    if round_digits is not None:
-        # round BEFORE ordering, like every other serving route (the
-        # scan/index twins round then order — raw-ulp ordering here
-        # could flip a rounded tie at the k boundary across routes)
-        sums = np.round(sums, round_digits)
-    k_eff = min(k, uids.size)
-    top = np.argpartition(-sums, k_eff - 1)[:k_eff] if uids.size > k_eff \
-        else np.arange(uids.size)
-    order = np.lexsort((uids[top], -sums[top]))
-    top = top[order]
-    # argpartition may split a k-boundary tie group arbitrarily — same
-    # re-check as taat_topk: resolve ties by doc_id across the full set
-    if uids.size > k_eff:
-        kth = sums[top[-1]]
-        tied = np.flatnonzero(sums == kth)
-        if tied.size > int(np.count_nonzero(sums[top] == kth)):
-            keep = [i for i in top if sums[i] > kth]
-            tied_sorted = tied[np.argsort(uids[tied])]
-            keep.extend(tied_sorted[: k_eff - len(keep)].tolist())
-            top = np.array(keep, dtype=np.int64)
-    return [(int(uids[i]), float(sums[i])) for i in top]
+    return topk_rounded(uids, sums, k, round_digits)
 
 
 def duckdb_multi_match_sql(
@@ -1040,7 +1037,7 @@ def cross_fields_from_index(
     one norms join → blended-idf scoring → the shared term-level
     dis_max tail.
     Rank-identical to :func:`cross_fields_topk_df` (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms or not field_tables:
         return spark.createDataFrame([], "doc_id long, score double")
     flds = list(field_tables.items())
@@ -1076,33 +1073,6 @@ def cross_fields_from_index(
                               _cf_required(operator, terms))
 
 
-def _serve_topk_rounded(uids, sums, k: int, round_digits: int | None):
-    """Driver-side (score desc, doc_id asc) top-k over aligned numpy
-    (doc_id, score) arrays with the repo-wide round-before-order
-    contract and exact k-boundary tie resolution — shared by the
-    multi-field serving routes."""
-    import numpy as np
-
-    if round_digits is not None:
-        sums = np.round(sums, round_digits)
-    if uids.size == 0:
-        return []
-    k_eff = min(k, uids.size)
-    top = np.argpartition(-sums, k_eff - 1)[:k_eff] if uids.size > k_eff \
-        else np.arange(uids.size)
-    order = np.lexsort((uids[top], -sums[top]))
-    top = top[order]
-    if uids.size > k_eff:
-        kth = sums[top[-1]]
-        tied = np.flatnonzero(sums == kth)
-        if tied.size > int(np.count_nonzero(sums[top] == kth)):
-            keep = [i for i in top if sums[i] > kth]
-            tied_sorted = tied[np.argsort(uids[tied])]
-            keep.extend(tied_sorted[: k_eff - len(keep)].tolist())
-            top = np.array(keep, dtype=np.int64)
-    return [(int(uids[i]), float(sums[i])) for i in top]
-
-
 def cross_fields_serve(
     field_engines: dict[str, tuple["QueryEngine", float]],
     query: str,
@@ -1122,18 +1092,13 @@ def cross_fields_serve(
 
     from deces_dataprep_spark.index.wand import decode_term_arrays
 
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms or not field_engines:
         return []
     if any(eng.n_docs > QueryEngine.DISTRIBUTED_CORPUS_THRESHOLD
            for eng, _ in field_engines.values()):
-        spark = next(
-            (e.spark for e, _ in field_engines.values()
-             if e.spark is not None),
-            None,
-        ) or next(iter(field_engines.values()))[0].tables.postings.sparkSession
         df = cross_fields_from_index(
-            spark,
+            next(iter(field_engines.values()))[0].session,
             {f: (eng.tables, boost)
              for f, (eng, boost) in field_engines.items()},
             query, k, round_digits, tie_breaker=tie_breaker,
@@ -1197,7 +1162,7 @@ def cross_fields_serve(
         nts = np.add.reduceat(np.ones(docs.size, np.int64), starts)
         keep = nts == n_req
         uids, sums = uids[keep], sums[keep]
-    return _serve_topk_rounded(uids, sums, k, round_digits)
+    return topk_rounded(uids, sums, k, round_digits)
 
 
 def duckdb_cross_fields_sql(
@@ -1440,7 +1405,20 @@ def _bm25_scores_df(docs, terms, id_col="doc_id", text_col="text",
     — it just scans checkpointed rows instead of re-tokenizing
     (measured 5.5 → ~3.4 s for the full oracle query on the bench
     corpus). The checkpoint is per-invocation derived data (nothing
-    persists across runs), sized n_docs × (2 longs + matched terms)."""
+    persists across runs), sized n_docs × (2 longs + matched terms).
+
+    This is the scan route's score source (:class:`_ScanSource`), and
+    the checkpoint has two consequences a caller inherits:
+
+    * Its blocks live in the executors' block managers until the
+      returned DataFrame (and every plan built on it) is garbage-
+      collected on the driver and Spark's ContextCleaner drops them —
+      not when the query finishes. A long-lived handle to the result
+      pins n_docs-sized blocks.
+    * It truncates lineage: losing an executor that holds some of its
+      blocks fails the query (missing checkpoint block) instead of
+      recomputing the lost partitions. Re-run the call to rebuild it.
+    """
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         (tokenizer or tokens_col)(text_col).alias("tokens"),
@@ -1517,6 +1495,108 @@ def bm25_search_after_df(
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+# ---------------------------------------------------------------------------
+# match-and-score sources: the scan (``*_df``) and index (``*_from_index``)
+# routes of a feature share one body, written against one of these
+# ---------------------------------------------------------------------------
+
+
+def _terms_condition(toks: "F.Column", terms: list[str],
+                     how: str = "all") -> "F.Column":
+    """Per-row membership of the terms in a token array: every term
+    (``all`` — filter context, false for an empty term set) or any term
+    (``any``). A native conjunction, so the scan stage prunes before any
+    shuffle; the one place this condition is built."""
+    conj = how == "all"
+    return functools.reduce(
+        operator.and_ if conj else operator.or_,
+        [F.array_contains(toks, t) for t in terms],
+        F.lit(conj and bool(terms)))
+
+
+def _matching_rows(docs: DataFrame, terms: list[str],
+                   text_col: str = "text") -> DataFrame:
+    """The docs containing ALL terms (none for an empty term set)."""
+    if not terms:
+        return docs.limit(0)
+    return docs.filter(_terms_condition(tokens_col(text_col), terms))
+
+
+class _Source:
+    """What a feature's body takes from its route. Each source gives
+
+    * ``scores(terms, round_digits)`` — all (doc_id, score) BM25 rows of
+      the term set, rounded when asked;
+    * ``match_ids(terms, how)`` — (doc_id) of the docs containing all
+      (``how="all"``) or any (``"any"``) of the terms;
+    * ``matching_docs(terms)`` — the rows of ``docs`` containing ALL
+      terms (none for an empty term set);
+    * ``doc_values(*cols)`` — a (doc_id, *cols) projection of ``docs``.
+    """
+
+    def __init__(self, spark: SparkSession, docs: DataFrame | None,
+                 id_col: str = "doc_id"):
+        self.spark, self.docs, self.id_col = spark, docs, id_col
+
+    def doc_values(self, *cols: "F.Column") -> DataFrame:
+        return self.docs.select(F.col(self.id_col).alias("doc_id"), *cols)
+
+
+class _ScanSource(_Source):
+    """The sets computed from the raw docs — the scan route. Issues
+    exactly the DataFrame calls the scan routes always made, so their
+    plans do not depend on going through a source."""
+
+    def __init__(self, spark: SparkSession, docs: DataFrame,
+                 id_col: str = "doc_id", text_col: str = "text"):
+        super().__init__(spark, docs, id_col)
+        self.text_col = text_col
+
+    def scores(self, terms, round_digits=None):
+        return _bm25_scores_df(self.docs, terms, self.id_col, self.text_col,
+                               round_digits=round_digits)
+
+    def match_ids(self, terms, how="all"):
+        return self.docs.filter(
+            _terms_condition(tokens_col(self.text_col), terms, how)
+        ).select(F.col(self.id_col).alias("doc_id"))
+
+    def matching_docs(self, terms):
+        return _matching_rows(self.docs, terms, self.text_col)
+
+
+class _IndexSource(_Source):
+    """The same sets served from the index: scores and match sets come
+    from the query terms' posting blocks only (parquet pushdown); doc
+    rows and values from ``docs``, a doc-metadata table keyed by
+    ``id_col`` that needs no text column."""
+
+    def __init__(self, spark: SparkSession, tables: IndexTables,
+                 docs: DataFrame | None = None, id_col: str = "doc_id"):
+        super().__init__(spark, docs, id_col)
+        self.tables = tables
+
+    def scores(self, terms, round_digits=None):
+        out = bm25_scores_from_index(self.spark, self.tables, terms)
+        if round_digits is not None:
+            out = out.withColumn("score", F.round("score", round_digits))
+        return out
+
+    def match_ids(self, terms, how="all"):
+        if how == "all":
+            return _matching_doc_ids_from_postings(self.tables, terms)
+        return _matching_doc_ids_decode(self.tables, terms) \
+            .select("doc_id").distinct()
+
+    def matching_docs(self, terms):
+        if not terms:
+            return self.docs.limit(0)
+        ids = self.match_ids(terms)
+        if self.id_col != "doc_id":
+            ids = ids.withColumnRenamed("doc_id", self.id_col)
+        return self.docs.join(ids, self.id_col, "left_semi")
+
+
 def rescore_topk_df(
     spark: SparkSession,
     docs: DataFrame,
@@ -1543,32 +1623,9 @@ def rescore_topk_df(
     difference, deterministic either way here). Scores are rounded
     before both ranking cuts so window membership and the final order
     are engine-stable (the repo-wide oracle convention)."""
-    base_terms = analyze_query(query)
-    if not base_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, base_terms, id_col, text_col,
-                           round_digits=round_digits)
-    window = base.orderBy(F.desc("score"), F.asc("doc_id")) \
-        .limit(window_size)
-    re_terms = analyze_query(rescore_query)
-    if re_terms:
-        sec = _bm25_scores_df(docs, re_terms, id_col, text_col,
-                              round_digits=round_digits) \
-            .withColumnRenamed("score", "sec_score")
-        window = window.join(sec, "doc_id", "left")
-    else:
-        window = window.withColumn("sec_score", F.lit(None).cast("double"))
-    combined = (
-        F.lit(float(query_weight)) * F.col("score")
-        + F.lit(float(rescore_query_weight))
-        * F.coalesce(F.col("sec_score"), F.lit(0.0))
-    )
-    return (
-        window.select(
-            "doc_id", F.round(combined, round_digits).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _rescore(_ScanSource(spark, docs, id_col, text_col), query,
+                    rescore_query, k, window_size, query_weight,
+                    rescore_query_weight, round_digits)
 
 
 def rescore_topk_from_index(
@@ -1586,13 +1643,22 @@ def rescore_topk_from_index(
     distributed top-k plan (posting pushdown), secondary scores from
     the rescore terms' postings only, combined on the ≤window_size
     rows. Rank-identical to :func:`rescore_topk_df` (tested)."""
-    window = bm25_topk_from_index(spark, tables, query, k=window_size,
-                                  round_digits=round_digits)
-    re_terms = list(dict.fromkeys(analyze_query(rescore_query)))
+    return _rescore(_IndexSource(spark, tables), query, rescore_query, k,
+                    window_size, query_weight, rescore_query_weight,
+                    round_digits)
+
+
+def _rescore(src, query, rescore_query, k, window_size, query_weight,
+             rescore_query_weight, round_digits) -> DataFrame:
+    base_terms = analyze_query(query)
+    if not base_terms:
+        return src.spark.createDataFrame([], "doc_id long, score double")
+    window = src.scores(base_terms, round_digits) \
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(window_size)
+    re_terms = analyze_query(rescore_query)
     if re_terms:
-        sec = bm25_scores_from_index(spark, tables, re_terms) \
-            .select("doc_id", F.round("score", round_digits)
-                    .alias("sec_score"))
+        sec = src.scores(re_terms, round_digits) \
+            .withColumnRenamed("score", "sec_score")
         window = window.join(sec, "doc_id", "left")
     else:
         window = window.withColumn("sec_score", F.lit(None).cast("double"))
@@ -1709,14 +1775,9 @@ def function_score_topk_df(
     runs over the index route (:func:`function_score_from_index`,
     rank-identical, tested). One final rounding, (score desc, doc_id
     asc) top-k — the repo-wide serving contract."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=None)
-    fvals = docs.select(F.col(id_col).alias("doc_id"), F.col(field))
-    return _function_score_tail(base, fvals, field, factor, modifier,
-                                missing, boost_mode, k, round_digits)
+    return _function_score(_ScanSource(spark, docs, id_col, text_col),
+                           query, field, factor, modifier, missing,
+                           boost_mode, k, round_digits)
 
 
 def function_score_from_index(
@@ -1739,23 +1800,21 @@ def function_score_from_index(
     docs projection — ES keeps the same field in doc values; a columnar
     store IS Spark's parquet column. Rank-identical to the scan plan
     (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    return _function_score(_IndexSource(spark, tables, docs, id_col),
+                           query, field, factor, modifier, missing,
+                           boost_mode, k, round_digits)
+
+
+def _function_score(src, query, field, factor, modifier, missing,
+                    boost_mode, k, round_digits) -> DataFrame:
+    terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = bm25_scores_from_index(spark, tables, terms)
-    fvals = docs.select(F.col(id_col).alias("doc_id"), F.col(field))
-    return _function_score_tail(base, fvals, field, factor, modifier,
-                                missing, boost_mode, k, round_digits)
-
-
-def _function_score_tail(base: DataFrame, fvals: DataFrame, field: str,
-                         factor: float, modifier: str, missing: float,
-                         boost_mode: str, k: int,
-                         round_digits: int) -> DataFrame:
+        return src.spark.createDataFrame([], "doc_id long, score double")
+    joined = src.scores(terms).join(src.doc_values(F.col(field)),
+                                    "doc_id", "left")
     if boost_mode not in ("multiply", "sum"):
         raise ValueError(f"unknown boost_mode: {boost_mode!r}")
     fn = _fvf_col(F.col(field), factor, modifier, missing)
-    joined = base.join(fvals, "doc_id", "left")
     combined = (F.col("score") * fn if boost_mode == "multiply"
                 else F.col("score") + fn)
     return (
@@ -1827,25 +1886,14 @@ def facet_stats_df(
     ``array_contains`` conjunction (no explode, prunes in the scan
     stage) → ONE map-side-combinable global aggregate — a single row
     reaches the driver at any corpus size."""
-    terms = analyze_query(query)
     c = F.col(num_col).cast("double")
-    agg_exprs = [
+    out = _matching_rows(docs, analyze_query(query), text_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.min(c).alias("min_v"),
         F.max(c).alias("max_v"),
         F.sum(c).alias("sum_v"),
         F.avg(c).alias("avg_v"),
-    ]
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    out = base.agg(*agg_exprs)
+    )
     if round_digits is not None:
         for col in ("min_v", "max_v", "sum_v", "avg_v"):
             out = out.withColumn(col, F.round(col, round_digits))
@@ -1867,19 +1915,8 @@ def facet_counts_df(
     conjunctive ``array_contains`` filter (no explode — the filter is a
     per-row expression, so the scan stage prunes before any shuffle) →
     groupBy(facet) with map-side partial agg → TakeOrderedAndProject."""
-    terms = analyze_query(query)
-    if not terms:
-        # derive the schema from docs so the facet column's type matches
-        # the non-empty branch (a hardcoded string would diverge for
-        # numeric facet columns)
-        return docs.limit(0).groupBy(F.col(facet_col).alias(facet_col)).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
     return (
-        docs.filter(cond)
+        _matching_rows(docs, analyze_query(query), text_col)
         .groupBy(F.col(facet_col).alias(facet_col))
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy(F.desc("n_docs"), F.asc(facet_col))
@@ -1907,31 +1944,8 @@ def percentiles_df(
     Plan mirrors :func:`facet_stats_df`: per-row ``array_contains``
     conjunction, no explode, ONE global aggregate row that is then
     unpacked driver-cheap (len(percents) rows total)."""
-    terms = analyze_query(query)
-    pcts = [float(p) for p in percents]
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    vals = base.agg(
-        F.percentile(F.col(num_col).cast("double"),
-                     F.array(*[F.lit(p / 100.0) for p in pcts]))
-        .alias("vals"))
-    out = vals.select(
-        F.posexplode("vals").alias("i", "value"),
-    ).select(
-        F.element_at(F.array(*[F.lit(p) for p in pcts]),
-                     F.col("i") + 1).alias("percent"),
-        "value",
-    )
-    if round_digits is not None:
-        out = out.withColumn("value", F.round("value", round_digits))
-    return out.orderBy("percent")
+    return _percentiles(_ScanSource(spark, docs, id_col, text_col), query,
+                        num_col, percents, round_digits)
 
 
 def duckdb_percentiles_sql(
@@ -1983,25 +1997,8 @@ def top_hits_df(
     group key, never corpus-wide, and each partition's window is
     bounded by its match count. Scores rounded BEFORE ranking (the
     repo-wide contract, so the oracle ranks the identical quantity)."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame(
-            [], f"group string, rank int, doc_id long, score double")
-    from pyspark.sql import Window
-
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=round_digits)
-    groups = docs.select(F.col(id_col).alias("doc_id"),
-                         F.col(group_col).cast("string").alias("group"))
-    w = Window.partitionBy("group").orderBy(F.desc("score"),
-                                            F.asc("doc_id"))
-    return (
-        base.join(groups, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= hits_per_bucket)
-        .select("group", "rank", "doc_id", "score")
-        .orderBy("group", "rank")
-    )
+    return _top_hits(_ScanSource(spark, docs, id_col, text_col), query,
+                     group_col, hits_per_bucket, round_digits)
 
 
 def duckdb_top_hits_sql(
@@ -2065,22 +2062,8 @@ def date_histogram_df(
     :func:`facet_counts_df`: per-row conjunction filter (prunes in the
     scan stage, no explode) → ONE map-side-combinable groupBy — bucket
     cardinality, not corpus size, reaches the driver."""
-    terms = analyze_query(query)
-    bucket = F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
-        .cast("date").alias("bucket")
-    if not terms:
-        return docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(_ScanSource(spark, docs, id_col, text_col), query,
+                          _date_bucket(date_col, interval))
 
 
 def date_histogram_from_index(
@@ -2097,19 +2080,8 @@ def date_histogram_from_index(
     ``doc_id``) → one bucket aggregate. Bucket-identical to
     :func:`date_histogram_df` (tested); corpus cost is the matched
     postings + a metadata semi-join, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    bucket = F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
-        .cast("date").alias("bucket")
-    if not terms:
-        return meta_docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    return (
-        meta_docs.join(matching, "doc_id", "left_semi")
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(_IndexSource(spark, tables, meta_docs), query,
+                          _date_bucket(date_col, interval))
 
 
 def histogram_df(
@@ -2129,22 +2101,8 @@ def histogram_df(
     :func:`date_histogram_df`: per-row conjunction filter → ONE
     map-side-combinable groupBy — bucket cardinality, not corpus size,
     reaches the driver."""
-    terms = analyze_query(query)
-    bucket = (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
-              * interval).cast("long").alias("bucket")
-    if not terms:
-        return docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(_ScanSource(spark, docs, id_col, text_col), query,
+                          _num_bucket(num_col, interval))
 
 
 def cardinality_df(
@@ -2164,19 +2122,8 @@ def cardinality_df(
     ``exact=False`` is Spark's own HLL++ ``approx_count_distinct``
     (shuffle-free partial aggregation, the 100-TB shape, but
     engine-specific counts so no DuckDB oracle)."""
-    terms = analyze_query(query)
-    agg = (F.count_distinct(F.col(card_col)) if exact
-           else F.approx_count_distinct(F.col(card_col)))
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    return base.agg(agg.alias("cardinality"))
+    return _cardinality(_ScanSource(spark, docs, id_col, text_col), query,
+                        card_col, exact)
 
 
 def histogram_from_index(
@@ -2191,19 +2138,8 @@ def histogram_from_index(
     match set → metadata semi-join → the same bucket aggregate.
     Bucket-identical to the scan route (tested); corpus cost is the
     matched postings, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    bucket = (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
-              * interval).cast("long").alias("bucket")
-    if not terms:
-        return meta_docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    return (
-        meta_docs.join(matching, "doc_id", "left_semi")
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(_IndexSource(spark, tables, meta_docs), query,
+                          _num_bucket(num_col, interval))
 
 
 def cardinality_from_index(
@@ -2216,13 +2152,35 @@ def cardinality_from_index(
 ) -> DataFrame:
     """:func:`cardinality_df` served FROM THE INDEX (same match-set
     semi-join shape; value-identical to the scan route, tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    return _cardinality(_IndexSource(spark, tables, meta_docs), query,
+                        card_col, exact)
+
+
+def _date_bucket(date_col: str, interval: str) -> "F.Column":
+    return F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
+        .cast("date").alias("bucket")
+
+
+def _num_bucket(num_col: str, interval: int) -> "F.Column":
+    return (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
+            * interval).cast("long").alias("bucket")
+
+
+def _bucket_counts(src, query, bucket: "F.Column") -> DataFrame:
+    """(bucket, n_docs) per non-empty bucket of the matching docs, in
+    bucket order — the (date_)histogram body."""
+    return (
+        src.matching_docs(analyze_query(query))
+        .groupBy(bucket)
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .orderBy("bucket")
+    )
+
+
+def _cardinality(src, query, card_col, exact) -> DataFrame:
     agg = (F.count_distinct(F.col(card_col)) if exact
            else F.approx_count_distinct(F.col(card_col)))
-    if not terms:
-        return meta_docs.limit(0).agg(agg.alias("cardinality"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    return meta_docs.join(matching, "doc_id", "left_semi").agg(
+    return src.matching_docs(analyze_query(query)).agg(
         agg.alias("cardinality"))
 
 
@@ -2240,18 +2198,19 @@ def percentiles_from_index(
     ``percentile`` aggregate (value-identical to the scan route,
     tested). Corpus cost is the matched postings plus one narrow
     metadata column, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    return _percentiles(_IndexSource(spark, tables, meta_docs), query,
+                        num_col, percents, round_digits)
+
+
+def _percentiles(src, query, num_col, percents, round_digits) -> DataFrame:
     pcts = [float(p) for p in percents]
-    if not terms:
-        base = meta_docs.limit(0)
-    else:
-        matching = _matching_doc_ids_from_postings(tables, terms)
-        base = meta_docs.join(matching, "doc_id", "left_semi")
-    vals = base.agg(
+    vals = src.matching_docs(analyze_query(query)).agg(
         F.percentile(F.col(num_col).cast("double"),
                      F.array(*[F.lit(p / 100.0) for p in pcts]))
         .alias("vals"))
-    out = vals.select(F.posexplode("vals").alias("i", "value")).select(
+    out = vals.select(
+        F.posexplode("vals").alias("i", "value"),
+    ).select(
         F.element_at(F.array(*[F.lit(p) for p in pcts]),
                      F.col("i") + 1).alias("percent"),
         "value",
@@ -2276,16 +2235,20 @@ def top_hits_from_index(
     the group projection joins on doc_id and the same group-key
     window cuts each bucket. Rank-identical to the scan route
     (tested) — scores round BEFORE ranking, the repo-wide contract."""
+    return _top_hits(_IndexSource(spark, tables, meta_docs), query,
+                     group_col, hits_per_bucket, round_digits)
+
+
+def _top_hits(src, query, group_col, hits_per_bucket,
+              round_digits) -> DataFrame:
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame(
+        return src.spark.createDataFrame(
             [], "group string, rank int, doc_id long, score double")
     from pyspark.sql import Window
 
-    base = bm25_scores_from_index(spark, tables, terms).withColumn(
-        "score", F.round("score", round_digits))
-    groups = meta_docs.select(
-        "doc_id", F.col(group_col).cast("string").alias("group"))
+    base = src.scores(terms, round_digits)
+    groups = src.doc_values(F.col(group_col).cast("string").alias("group"))
     w = Window.partitionBy("group").orderBy(F.desc("score"),
                                             F.asc("doc_id"))
     return (
@@ -2322,9 +2285,7 @@ def significant_terms_df(
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, jlh double")
     toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
+    cond = _terms_condition(toks, terms)
     base = docs.select(F.array_distinct(toks).alias("__t"),
                        cond.alias("__fg"))
     ex = base.select(F.explode("__t").alias("term"),
@@ -2366,7 +2327,7 @@ def significant_terms_from_index(
     foreground docs — by construction a small slice — are re-analyzed
     for their distinct terms. Row-identical to
     :func:`significant_terms_df` (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, jlh double")
@@ -2498,9 +2459,9 @@ def suggest_completion_serve(
 
     p = normalize_text(prefix)
     if engine.reader is None:
-        spark = engine.spark or engine.tables.postings.sparkSession
         return [(r["term"], int(r["df"])) for r in
-                suggest_completion(spark, engine.tables, p, k).collect()]
+                suggest_completion(engine.session, engine.tables, p,
+                                   k).collect()]
     terms = _vocab_index(engine).prefix(p)
     dfs = engine.reader.term_dfs(terms)
     ranked = sorted(((t, int(dfs.get(t, 0))) for t in terms),
@@ -2557,7 +2518,7 @@ def explain_score_df(
     query's terms); the target doc's tf rows come from ONE pushed-down
     ``id_col = doc_id`` filter. Output is |terms| rows — driver-safe at
     any corpus size."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return spark.createDataFrame(
             [], "term string, tf long, df long, dl long, idf double,"
@@ -2604,7 +2565,7 @@ def explain_score_serve(
 
     from deces_dataprep_spark.index.wand import decode_term_arrays
 
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return []
     by_shard = engine._fetch_term_postings(terms)
@@ -2644,8 +2605,7 @@ def duckdb_explain_score_sql(
     """Oracle twin of :func:`explain_score_df`."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
 
-    terms = ", ".join(f"'{t}'" for t in
-                      dict.fromkeys(analyze_query(query))) or "NULL"
+    terms = ", ".join(f"'{t}'" for t in analyze_query(query)) or "NULL"
     toks = duckdb_tokens_sql(text_col)
     score = bm25.duckdb_bm25_sql(
         "tf", "df", "dl", "(select n_docs from stats)",
@@ -2731,30 +2691,11 @@ def boolean_topk_df(
         bm25.bm25_score_col(F.col("tf"), F.col("df"), F.col("dl"),
                             n_docs, avgdl),
     )
-    is_must = F.col("term").isin(must_t) if must_t else F.lit(False)
-    is_should = F.col("term").isin(should_t) if should_t else F.lit(False)
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("contrib").alias("score"),
-        F.count_distinct(F.when(is_must, F.col("term"))).alias("n_must"),
-        F.count_distinct(F.when(is_should, F.col("term"))).alias("n_should"),
-    ).filter(
-        (F.col("n_must") == len(set(must_t)))
-        & (F.col("n_should") >= int(minimum_should_match))
-    ).drop("n_must", "n_should")
-    if not_t:
-        banned = (
-            ex.filter(F.col("term").isin(not_t)).select("doc_id").distinct()
-        )
-        agg = agg.join(F.broadcast(banned), "doc_id", "left_anti")
-    if filters:
-        keep = docs
-        for cond in filters:
-            keep = keep.filter(cond)
-        agg = agg.join(keep.select(F.col(id_col).alias("doc_id")),
-                       "doc_id", "left_semi")
-    if round_digits is not None:
-        agg = agg.withColumn("score", F.round("score", round_digits))
-    return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    banned = F.broadcast(
+        ex.filter(F.col("term").isin(not_t)).select("doc_id").distinct()
+    ) if not_t else None
+    return _bool_tail(scored, must_t, should_t, minimum_should_match,
+                      banned, docs, filters, id_col, k, round_digits)
 
 
 def boolean_topk_from_index(
@@ -2803,18 +2744,31 @@ def boolean_topk_from_index(
         return spark.createDataFrame([], "doc_id long, score double")
 
     decoded = _decoded_postings(tables, all_terms, dl=True)
-    if not_t:
-        banned = decoded.filter(F.col("term").isin(not_t)) \
-            .select("doc_id").distinct()
-    with_dl = decoded.filter(F.col("term").isin(scored_terms))
+    banned = decoded.filter(F.col("term").isin(not_t)) \
+        .select("doc_id").distinct() if not_t else None
     df_expr = F.create_map(*[
         x for t in scored_terms for x in (F.lit(t), F.lit(dfs.get(t, 0)))
     ])
-    scored = with_dl.withColumn(
+    scored = decoded.filter(F.col("term").isin(scored_terms)).withColumn(
         "contrib",
         bm25.bm25_score_col(F.col("tf"), df_expr[F.col("term")],
                             F.col("dl"), n_docs, avgdl),
     )
+    return _bool_tail(scored, must_t, should_t, minimum_should_match,
+                      banned, filter_docs, filters, "doc_id", k,
+                      round_digits)
+
+
+def _bool_tail(scored: DataFrame, must_t: list[str], should_t: list[str],
+               minimum_should_match: int, banned: DataFrame | None,
+               filter_docs: DataFrame | None,
+               filters: list["F.Column"] | None, id_col: str, k: int,
+               round_digits: int | None) -> DataFrame:
+    """Shared bool tail over (doc_id, term, contrib) rows: per-doc sum
+    with must-coverage and minimum_should_match in ONE aggregate →
+    anti-join the ``banned`` (must_not) ids → semi-join the filter
+    context (``filters`` over ``filter_docs``, keyed by ``id_col``) →
+    round → (score desc, doc_id asc) top-k."""
     is_must = F.col("term").isin(must_t) if must_t else F.lit(False)
     is_should = F.col("term").isin(should_t) if should_t else F.lit(False)
     agg = scored.groupBy("doc_id").agg(
@@ -2825,7 +2779,7 @@ def boolean_topk_from_index(
         (F.col("n_must") == len(set(must_t)))
         & (F.col("n_should") >= int(minimum_should_match))
     ).drop("n_must", "n_should")
-    if not_t:
+    if banned is not None:
         agg = agg.join(banned, "doc_id", "left_anti")
     if filters:
         if filter_docs is None:
@@ -2833,7 +2787,8 @@ def boolean_topk_from_index(
         keep = filter_docs
         for cond in filters:
             keep = keep.filter(cond)
-        agg = agg.join(keep.select("doc_id"), "doc_id", "left_semi")
+        agg = agg.join(keep.select(F.col(id_col).alias("doc_id")),
+                       "doc_id", "left_semi")
     if round_digits is not None:
         agg = agg.withColumn("score", F.round("score", round_digits))
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -3271,32 +3226,8 @@ def boosting_topk_df(
     any-term predicate. No broadcast hint: the negative set is
     corpus-proportional in the worst case (a stopword negative), so the
     join strategy is left to AQE."""
-    pos_t = analyze_query(positive)
-    neg_t = analyze_query(negative)
-    if not pos_t:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scores = _bm25_scores_df(docs, pos_t, id_col, text_col,
-                             round_digits=None)
-    if neg_t:
-        toks = tokens_col(text_col)
-        cond = F.lit(False)
-        for t in neg_t:
-            cond = cond | F.array_contains(toks, t)
-        neg = docs.filter(cond).select(
-            F.col(id_col).alias("doc_id"), F.lit(True).alias("_neg"))
-        scores = (
-            scores.join(neg, "doc_id", "left")
-            .withColumn(
-                "score",
-                F.when(F.col("_neg"),
-                       F.col("score") * F.lit(float(negative_boost)))
-                .otherwise(F.col("score")))
-            .drop("_neg")
-        )
-    if round_digits is not None:
-        scores = scores.withColumn("score",
-                                   F.round("score", round_digits))
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _boosting(_ScanSource(spark, docs, id_col, text_col), positive,
+                     negative, negative_boost, k, round_digits)
 
 
 def boosting_topk_from_index(
@@ -3313,14 +3244,19 @@ def boosting_topk_from_index(
     left join against the union of the negative terms' posting doc
     sets (df-bounded, decoded executor-side — no full-text scan
     anywhere). Rank-identical to the scan route (tested)."""
-    pos_t = list(dict.fromkeys(analyze_query(positive)))
-    neg_t = list(dict.fromkeys(analyze_query(negative)))
+    return _boosting(_IndexSource(spark, tables), positive, negative,
+                     negative_boost, k, round_digits)
+
+
+def _boosting(src, positive, negative, negative_boost, k,
+              round_digits) -> DataFrame:
+    pos_t = analyze_query(positive)
+    neg_t = analyze_query(negative)
     if not pos_t:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scores = bm25_scores_from_index(spark, tables, pos_t)
+        return src.spark.createDataFrame([], "doc_id long, score double")
+    scores = src.scores(pos_t)
     if neg_t:
-        neg = _matching_doc_ids_decode(tables, neg_t).select(
-            "doc_id").distinct().withColumn("_neg", F.lit(True))
+        neg = src.match_ids(neg_t, "any").withColumn("_neg", F.lit(True))
         scores = (
             scores.join(neg, "doc_id", "left")
             .withColumn(
@@ -3398,20 +3334,8 @@ def constant_score_df(
     project + ``TakeOrderedAndProject`` on the deterministic doc_id
     tie-break (ES leaves equal-score order to shard internals; doc_id
     asc makes it reproducible cross-engine)."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .select(F.col(id_col).alias("doc_id"),
-                F.lit(float(boost)).alias("score"))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-    )
+    return _constant_score(_ScanSource(spark, docs, id_col, text_col),
+                           query, boost, k)
 
 
 def constant_score_from_index(
@@ -3425,11 +3349,15 @@ def constant_score_from_index(
     filter-context ALL-terms doc set straight from the terms' posting
     blocks — no text scan, no scoring decode (tf bytes never leave the
     codec). Result-identical to the scan route (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    return _constant_score(_IndexSource(spark, tables), query, boost, k)
+
+
+def _constant_score(src, query, boost, k) -> DataFrame:
+    terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return src.spark.createDataFrame([], "doc_id long, score double")
     return (
-        _matching_doc_ids_from_postings(tables, terms)
+        src.match_ids(terms)
         .select("doc_id", F.lit(float(boost)).alias("score"))
         .orderBy(F.asc("doc_id"))
         .limit(k)
@@ -3476,16 +3404,7 @@ def range_agg_df(
     unpivoted to ``(key, n_docs)`` rows in the declared bucket order.
     ``None`` bounds are open ends; keys follow ES's ``from-to`` form
     with ``*`` for open ends."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     val = F.col(num_col).cast("double")
     aggs, buckets = [], []
     for i, (lo, hi) in enumerate(ranges):
@@ -3556,23 +3475,11 @@ def filters_agg_df(
     outer query. Buckets may overlap and every named bucket is always
     emitted — same single-reduce-row conditional-count shape as
     :func:`range_agg_df`, unpivoted to ``(key, n_docs)``."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     toks = tokens_col(text_col)
     aggs, names = [], []
     for i, (name, sub) in enumerate(named_terms.items()):
-        sub_t = analyze_query(sub)
-        cond = F.lit(bool(sub_t))
-        for t in sub_t:
-            cond = cond & F.array_contains(toks, t)
+        cond = _terms_condition(toks, analyze_query(sub))
         aggs.append(
             F.sum(F.when(cond, 1).otherwise(0)).cast("long")
             .alias(f"__c{i}"))
@@ -3636,33 +3543,8 @@ def composite_agg_df(
     (same shape as search_after) → orderBy(key asc) + limit(size) —
     Catalyst turns the tail into TakeOrderedAndProject, so only
     ``size`` buckets ever reach the driver."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    agg = base.groupBy(*[F.col(s) for s in sources]).agg(
-        F.count(F.lit(1)).alias("n_docs"))
-    if after is not None:
-        if len(after) != len(sources):
-            raise ValueError(
-                f"after cursor has {len(after)} values for "
-                f"{len(sources)} sources")
-        # lexicographic strictly-after: (k1 > a1) OR (k1 = a1 AND
-        # (k2 > a2)) OR ...
-        cursor = F.lit(False)
-        for i in range(len(sources) - 1, -1, -1):
-            tie = F.col(sources[i]) > F.lit(after[i])
-            for j in range(i):
-                tie = (F.col(sources[j]) == F.lit(after[j])) & tie
-            cursor = cursor | tie
-        agg = agg.filter(cursor)
-    return agg.orderBy(*[F.asc(s) for s in sources]).limit(size)
+    return _composite_agg(_ScanSource(spark, docs, id_col, text_col), query,
+                          sources, size, after)
 
 
 def composite_agg_from_index(
@@ -3677,15 +3559,20 @@ def composite_agg_from_index(
     """:func:`composite_agg_df` served FROM THE INDEX: posting-pushdown
     match set → metadata semi-join → the same paged bucket plan.
     Bucket-identical to the scan route (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    if not terms:
-        return composite_agg_df(spark, meta_docs.limit(0), "", sources,
-                                size, after)
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    matched = meta_docs.join(matching, "doc_id", "left_semi")
-    agg = matched.groupBy(*[F.col(s) for s in sources]).agg(
-        F.count(F.lit(1)).alias("n_docs"))
+    return _composite_agg(_IndexSource(spark, tables, meta_docs), query,
+                          sources, size, after)
+
+
+def _composite_agg(src, query, sources, size, after) -> DataFrame:
+    agg = src.matching_docs(analyze_query(query)).groupBy(
+        *[F.col(s) for s in sources]).agg(F.count(F.lit(1)).alias("n_docs"))
     if after is not None:
+        if len(after) != len(sources):
+            raise ValueError(
+                f"after cursor has {len(after)} values for "
+                f"{len(sources)} sources")
+        # lexicographic strictly-after: (k1 > a1) OR (k1 = a1 AND
+        # (k2 > a2)) OR ...
         cursor = F.lit(False)
         for i in range(len(sources) - 1, -1, -1):
             tie = F.col(sources[i]) > F.lit(after[i])
@@ -3790,16 +3677,9 @@ def rank_feature_topk_df(
     corpus statistic — non-deterministic across refreshes; we keep the
     contract reproducible). Same narrow-projection join plan as
     function_score."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=None)
-    fvals = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(feature_col))
-    contrib = _rank_feature_col(F.col(feature_col), function, pivot,
-                                boost, exp, scaling)
-    return _feature_score_tail(base, fvals, contrib, k, round_digits)
+    return _rank_feature(_ScanSource(spark, docs, id_col, text_col), query,
+                         feature_col, function, pivot, boost, exp, scaling,
+                         k, round_digits)
 
 
 def rank_feature_from_index(
@@ -3820,15 +3700,21 @@ def rank_feature_from_index(
     """:func:`rank_feature_topk_df` with the base score set from the
     terms' posting blocks (rank-identical to the scan route, tested);
     the feature column is a two-column doc-values projection."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    return _rank_feature(_IndexSource(spark, tables, docs, id_col), query,
+                         feature_col, function, pivot, boost, exp, scaling,
+                         k, round_digits)
+
+
+def _rank_feature(src, query, feature_col, function, pivot, boost, exp,
+                  scaling, k, round_digits) -> DataFrame:
+    terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = bm25_scores_from_index(spark, tables, terms)
-    fvals = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(feature_col))
+        return src.spark.createDataFrame([], "doc_id long, score double")
     contrib = _rank_feature_col(F.col(feature_col), function, pivot,
                                 boost, exp, scaling)
-    return _feature_score_tail(base, fvals, contrib, k, round_digits)
+    return _feature_score_tail(src.scores(terms),
+                               src.doc_values(F.col(feature_col)),
+                               contrib, k, round_digits)
 
 
 def duckdb_rank_feature_sql(
@@ -4146,16 +4032,7 @@ def missing_agg_df(
     matching the query have NO indexed value for ``field`` — NULL and
     '' both count as missing, mirroring :func:`es_fields.exists_filter`
     (ES's exists/missing duality). One conditional-count reduce row."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     fc = F.col(field)
     is_missing = fc.isNull() | (fc.cast("string") == F.lit(""))
     return base.agg(
@@ -4326,25 +4203,11 @@ def adjacency_matrix_df(
     :func:`filters_agg_df` (N + N·(N−1)/2 counts in ONE combinable
     aggregate); ES emits only non-empty buckets here (unlike
     ``filters``), so the unpivot filters n_docs > 0."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    base = _matching_rows(docs, analyze_query(query), text_col)
     toks = tokens_col(text_col)
     names = list(named_terms)
-    conds = {}
-    for name in names:
-        sub_t = analyze_query(named_terms[name])
-        c = F.lit(bool(sub_t))
-        for t in sub_t:
-            c = c & F.array_contains(toks, t)
-        conds[name] = c
+    conds = {name: _terms_condition(toks, analyze_query(named_terms[name]))
+             for name in names}
     cells = [(n, conds[n]) for n in names]
     for i, a in enumerate(names):
         for b in names[i + 1:]:

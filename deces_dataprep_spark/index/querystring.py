@@ -844,9 +844,8 @@ def query_string_serve(
     if tree is None:
         return []
     if engine.n_docs > engine.DISTRIBUTED_CORPUS_THRESHOLD:
-        spark = engine.spark or engine.tables.postings.sparkSession
         rows = query_string_topk_from_index(
-            spark, engine.tables, query, k,
+            engine.session, engine.tables, query, k,
             default_operator=default_operator,
             minimum_should_match=minimum_should_match).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
@@ -920,8 +919,6 @@ def query_string_serve(
                         "query contains a sloppy phrase atom but the "
                         "index has no positional table — "
                         "write_index(with_positions=True)")
-                spark = engine.spark \
-                    or engine.tables.positions.sparkSession
                 sets[key] = np.unique(np.asarray(
                     [int(r["doc_id"]) for r in phrase_terms_from_index(
                         engine.tables.positions, node.terms,

@@ -310,26 +310,40 @@ def taat_topk(
     if acc is None:
         return []
     nz = np.flatnonzero(acc > 0.0)
-    if nz.size == 0:
+    return topk_rounded(norm_ids[nz], acc[nz], k)
+
+
+def topk_rounded(
+    uids: np.ndarray,
+    sums: np.ndarray,
+    k: int,
+    round_digits: int | None = None,
+) -> list[tuple[int, float]]:
+    """Exact driver-side (score desc, doc_id asc) top-k over aligned
+    (doc_id, score) arrays — the one selection every driver route ends
+    in (TAAT, the multi-field serves, kNN). Scores are rounded BEFORE
+    ordering (the repo-wide contract: a raw-ulp order could flip a
+    rounded tie at the k boundary across routes)."""
+    if round_digits is not None:
+        sums = np.round(sums, round_digits)
+    if uids.size == 0:
         return []
-    k_eff = min(k, nz.size)
-    top = nz[np.argpartition(-acc[nz], k_eff - 1)[:k_eff]]
-    # exact tie-break (score desc, doc_id asc); norm_ids[top] ascending per
-    # position so sorting the small top-k slice is enough
-    order = np.lexsort((norm_ids[top].astype(np.int64), -acc[top]))
-    top = top[order]
+    k_eff = min(k, uids.size)
+    top = np.argpartition(-sums, k_eff - 1)[:k_eff] if uids.size > k_eff \
+        else np.arange(uids.size)
+    top = top[np.lexsort((uids[top], -sums[top]))]
     # argpartition may split a tie group at the k boundary arbitrarily —
     # re-check: if the k-th score ties with excluded candidates, resolve
     # by doc_id among the tied set.
-    if nz.size > k_eff:
-        kth = acc[top[-1]]
-        tied = nz[acc[nz] == kth]
-        if tied.size > np.count_nonzero(acc[top] == kth):
-            keep = [i for i in top if acc[i] > kth]
-            tied_sorted = tied[np.argsort(norm_ids[tied])]
+    if uids.size > k_eff:
+        kth = sums[top[-1]]
+        tied = np.flatnonzero(sums == kth)
+        if tied.size > int(np.count_nonzero(sums[top] == kth)):
+            keep = [i for i in top if sums[i] > kth]
+            tied_sorted = tied[np.argsort(uids[tied])]
             keep.extend(tied_sorted[: k_eff - len(keep)].tolist())
             top = np.array(keep, dtype=np.int64)
-    return [(int(norm_ids[i]), float(acc[i])) for i in top]
+    return [(int(uids[i]), float(sums[i])) for i in top]
 
 
 def exhaustive_topk(

@@ -246,17 +246,13 @@ def sort_hits(
     values in a separate _last bucket; Spark and SQL engines disagree
     on NULL placement, so the portable contract is 'sorted hits have
     the field')."""
-    from deces_dataprep_spark.index.query import analyze_query
+    from deces_dataprep_spark.index.query import _terms_condition, analyze_query
 
     terms = analyze_query(query)
     if not terms:
         return docs.select(F.col(id_col).alias("doc_id"),
                            F.col(sort_col).alias(sort_col)).limit(0)
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    out = docs.filter(cond).select(
+    out = docs.filter(_terms_condition(tokens_col(text_col), terms)).select(
         F.col(id_col).alias("doc_id"), F.col(sort_col).alias(sort_col)
     ).filter(F.col(sort_col).isNotNull())
     if after is not None:

@@ -295,7 +295,7 @@ class AnnServer:
         top-k)."""
         import numpy as np
 
-        from deces_dataprep_spark.index.query import _serve_topk_rounded
+        from deces_dataprep_spark.index.wand import topk_rounded
 
         q = np.asarray(query_vec, dtype="float64")
         qn = np.linalg.norm(q)
@@ -312,4 +312,4 @@ class AnnServer:
             mask &= self.ids != int(exclude_id)
         ids = self.ids[mask]
         cos = self.mat[mask] @ q
-        return _serve_topk_rounded(ids, cos, k, round_digits)
+        return topk_rounded(ids, cos, k, round_digits)
