@@ -1,30 +1,42 @@
-"""Serving-tier index reader: pyarrow, no Spark job per query.
+"""Serving-tier index readers: where the driver's index data comes from.
 
-Spark is the build/refresh tier; at serve time a query needs a handful
-of posting blocks, and launching a Spark job (scheduler + task launch +
-whole-stage codegen) per lookup costs seconds where the actual IO is
-milliseconds. A serving node instead reads the committed snapshot's
-parquet files directly — exactly how an ES data node reads its local
-segments — with the same pruning the Spark path gets:
+:class:`~deces_dataprep_spark.index.query.QueryEngine` reads stats,
+dictionary, postings, norms and positions through one interface
+(``stats``, ``dictionary``, ``term_dfs``, ``postings``, ``all_norms``,
+``term_positions``), and :func:`open_reader` picks the class:
 
-* ``term IN (...)`` is evaluated against parquet row-group statistics
-  (the build writes postings sorted by (shard, term, block_id) within
-  each file, in row groups of ``builder.POSTINGS_ROW_GROUP_BYTES``, so
-  a term touches ~1 row group per file);
-* the hive ``shard=`` path component is parsed into a column for free;
-* each postings file's matching row groups are read in ONE call, only
-  the block columns, and the files are read in parallel on one
-  process-wide thread pool sized to the usable cores (pyarrow releases
-  the GIL while it reads and filters). A shard split into several files
-  by ``snapshots.optimize_postings`` is read by several threads at once.
+* :class:`ArrowIndexReader` — pyarrow over a committed snapshot's
+  parquet files, no Spark job per query. Spark is the build/refresh
+  tier; at serve time a query needs a handful of posting blocks, and
+  launching a Spark job (scheduler + task launch + whole-stage codegen)
+  per lookup costs seconds where the actual IO is milliseconds. A
+  serving node instead reads the committed snapshot's parquet files
+  directly — exactly how an ES data node reads its local segments —
+  with the same pruning the Spark path gets:
 
-The reader is handed the snapshot manifest's FILE LIST (not the live
-directory), so serving stays pinned to a snapshot while later commits
-append — the same time-travel guarantee the Spark reader has.
+  * ``term IN (...)`` is evaluated against parquet row-group statistics
+    (the build writes postings sorted by (shard, term, block_id) within
+    each file, in row groups of ``builder.POSTINGS_ROW_GROUP_BYTES``,
+    so a term touches ~1 row group per file);
+  * the hive ``shard=`` path component is parsed into a column for free;
+  * each postings file's matching row groups are read in ONE call, only
+    the block columns, and the files are read in parallel on one
+    process-wide thread pool sized to the usable cores (pyarrow releases
+    the GIL while it reads and filters). A shard split into several
+    files by ``snapshots.optimize_postings`` is read by several threads
+    at once.
+
+  The reader is handed the snapshot manifest's FILE LIST (not the live
+  directory), so serving stays pinned to a snapshot while later commits
+  append — the same time-travel guarantee the Spark reader has.
+* :class:`SparkIndexReader` — the same methods over an
+  :class:`~deces_dataprep_spark.index.builder.IndexTables`' DataFrames
+  (an in-memory ``build_index`` result, or ``io='spark'``): each
+  uncached call is one Spark job.
 
 Blocks come back keyed by doc number (``codec`` module docstring);
-:meth:`ArrowIndexReader.all_norms` returns each shard's docnums next to
-its doc_ids, which is what the engine maps them through.
+``all_norms`` returns each shard's docnums next to its doc_ids, which is
+what the engine maps them through.
 """
 
 from __future__ import annotations
@@ -33,6 +45,7 @@ import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from deces_dataprep_spark.session import usable_cores
 
@@ -40,6 +53,15 @@ from deces_dataprep_spark.session import usable_cores
 #: comes from the path); a fetch reads no other column
 BLOCK_COLUMNS = ["term", "block_id", "n_docs", "first_doc", "last_doc",
                  "doc_gaps", "tfs", "block_max_tfnorm"]
+
+#: the norms columns :func:`split_norms` reads
+NORMS_COLUMNS = ["shard", "doc_id", "doc_len", "docnum"]
+
+#: the values of ``QueryEngine(io=...)`` (:func:`open_reader`)
+IO_MODES = ("auto", "arrow", "spark")
+
+_NO_POSITIONS = ("index has no positions table "
+                 "(write_index(with_positions=True))")
 
 _pool: ThreadPoolExecutor | None = None
 _pool_lock = threading.Lock()
@@ -82,6 +104,54 @@ def block_columns(t) -> dict:
     }
 
 
+def split_norms(t) -> dict[int, tuple[np.ndarray, np.ndarray,
+                                       np.ndarray]]:
+    """A norms table (pyarrow, :data:`NORMS_COLUMNS`) split per shard:
+    ``{shard: (sorted doc_id uint64, aligned doc_len float64, aligned
+    docnum int64)}`` — the arrays the WAND/TAAT kernels binary-search.
+    One lexsort does the split; docnum order is doc_id order, so the
+    docnums come out sorted too."""
+    def col(name, dtype):
+        return t[name].to_numpy(zero_copy_only=False).astype(dtype)
+
+    sh, ids = col("shard", "int64"), col("doc_id", "uint64")
+    dls, nums = col("doc_len", "float64"), col("docnum", "int64")
+    order = np.lexsort((ids, sh))
+    sh, ids, dls, nums = sh[order], ids[order], dls[order], nums[order]
+    uniq, starts = np.unique(sh, return_index=True)
+    bounds = list(starts) + [sh.size]
+    return {int(s): (ids[a:b], dls[a:b], nums[a:b])
+            for s, a, b in zip(uniq, bounds, bounds[1:])}
+
+
+def _positions_by_doc(t) -> dict[int, dict[str, np.ndarray]]:
+    """(term, doc_id, positions) rows as {doc_id: {term: positions}}."""
+    out: dict[int, dict[str, np.ndarray]] = {}
+    for term, doc, pos in zip(t["term"].to_pylist(), t["doc_id"].to_pylist(),
+                              t["positions"].to_pylist()):
+        out.setdefault(int(doc), {})[term] = np.asarray(pos, np.int64)
+    return out
+
+
+def open_reader(tables, io: str = "auto", cache_postings: bool = False):
+    """The reader ``QueryEngine(tables, io=...)`` serves through.
+    ``io='arrow'`` (or ``'auto'`` when ``tables.files`` lists every table
+    it reads, i.e. an index from ``snapshots.load_index``) gives an
+    :class:`ArrowIndexReader`; ``'spark'`` (or ``'auto'`` without file
+    lists) a :class:`SparkIndexReader`, which ``cache_postings`` pins in
+    Spark's cache."""
+    if io not in IO_MODES:
+        raise ValueError(f"io must be one of {IO_MODES}, got {io!r}")
+    files = tables.files or {}
+    if io != "spark" and {"postings", "dictionary", "norms",
+                          "stats"} <= files.keys():
+        return ArrowIndexReader(files)
+    if io == "arrow":
+        raise ValueError("io='arrow' needs manifest file lists "
+                         "(IndexTables.files from snapshots.load_index)")
+    return SparkIndexReader(tables, cache_postings)
+
+
 class ArrowIndexReader:
     """Driver/serving-node reader over a committed snapshot's files."""
 
@@ -110,42 +180,16 @@ class ArrowIndexReader:
         self._pos = (ds.dataset(files["positions"], format="parquet")
                      if files.get("positions") else None)
 
-    @classmethod
-    def maybe(cls, files: dict[str, list[str]] | None):
-        """An ArrowIndexReader when the manifest file lists are known
-        (local paths), else None (fall back to the Spark reader)."""
-        if not files:
-            return None
-        needed = {"postings", "dictionary", "norms", "stats"}
-        if not needed.issubset(files):
-            return None
-        try:
-            import pyarrow.dataset  # noqa: F401
-        except ImportError:
-            # pyarrow is an optional pyspark extra — 'auto' callers fall
-            # back to the Spark route instead of failing construction
-            return None
-        keep = needed | ({"positions"} if files.get("positions") else set())
-        return cls({k: files[k] for k in keep})
-
-    def term_positions(self, terms: list[str]) -> dict[int, dict[str, np.ndarray]]:
+    def term_positions(self, terms: list[str]
+                       ) -> dict[int, dict[str, np.ndarray]]:
         """{doc_id: {term: sorted position array}} for the given terms,
         from the positional table (phrase serving). Raises if the index
         was built without positions."""
         if self._pos is None:
-            raise ValueError("index has no positions table "
-                             "(write_index(with_positions=True))")
-        t = self._pos.to_table(
+            raise ValueError(_NO_POSITIONS)
+        return _positions_by_doc(self._pos.to_table(
             columns=["term", "doc_id", "positions"],
-            filter=self._ds.field("term").isin(terms),
-        )
-        out: dict[int, dict[str, np.ndarray]] = {}
-        term_l = t["term"].to_pylist()
-        doc_l = t["doc_id"].to_pylist()
-        pos_l = t["positions"].to_pylist()
-        for term, doc, pos in zip(term_l, doc_l, pos_l):
-            out.setdefault(int(doc), {})[term] = np.asarray(pos, np.int64)
-        return out
+            filter=self._ds.field("term").isin(terms)))
 
     def stats(self) -> tuple[int, float]:
         t = self._stats.to_table()
@@ -155,10 +199,11 @@ class ArrowIndexReader:
         """df per term — served from the fully-loaded dictionary (the ES
         analogue keeps the per-shard terms dict in memory; ours is
         term+df+cf, a few bytes per distinct term)."""
-        d = self._dictionary()
+        d = self.dictionary()
         return {t: d[t] for t in terms if t in d}
 
-    def _dictionary(self) -> dict[str, int]:
+    def dictionary(self) -> dict[str, int]:
+        """term → df of the whole dictionary, loaded on first use."""
         if not hasattr(self, "_dict_cache"):
             t = self._dict.to_table(columns=["term", "df"])
             self._dict_cache = dict(
@@ -232,29 +277,87 @@ class ArrowIndexReader:
 
     def all_norms(self) -> dict[int, tuple[np.ndarray, np.ndarray,
                                              np.ndarray]]:
-        """Norms for EVERY shard from one scan of the norms table:
-        ``{shard: (sorted doc_id uint64, aligned doc_len float64,
-        aligned docnum int64)}``.
+        """Norms for EVERY shard from one scan of the norms table, split
+        by :func:`split_norms`. A per-shard filter scan re-reads the
+        whole table once per shard (norms aren't partitioned by shard on
+        disk) — measured 8× the IO of this single pass at n_shards=8."""
+        return split_norms(self._norms.to_table(columns=NORMS_COLUMNS))
 
-        A per-shard filter scan re-reads the whole table once per shard
-        (norms aren't partitioned by shard on disk) — measured 8× the
-        IO of this single pass at n_shards=8. One lexsort splits the
-        read into the per-shard arrays the WAND/TAAT kernels
-        binary-search; docnum order is doc_id order, so the docnums come
-        out sorted too."""
-        t = self._norms.to_table(
-            columns=["shard", "doc_id", "doc_len", "docnum"])
-        sh = t["shard"].to_numpy(zero_copy_only=False).astype("int64")
-        ids = t["doc_id"].to_numpy(zero_copy_only=False).astype("uint64")
-        dls = t["doc_len"].to_numpy(zero_copy_only=False).astype("float64")
-        nums = t["docnum"].to_numpy(zero_copy_only=False).astype("int64")
-        order = np.lexsort((ids, sh))
-        sh, ids, dls, nums = sh[order], ids[order], dls[order], nums[order]
-        out: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        uniq, starts = np.unique(sh, return_index=True)
-        bounds = list(starts) + [sh.size]
-        for i, s in enumerate(uniq):
-            a, b = bounds[i], bounds[i + 1]
-            out[int(s)] = (ids[a:b].copy(), dls[a:b].copy(),
-                           nums[a:b].copy())
-        return out
+
+class SparkIndexReader:
+    """The reader over an :class:`~deces_dataprep_spark.index.builder.
+    IndexTables`' DataFrames: the same methods and outputs as
+    :class:`ArrowIndexReader`, each uncached call one Spark job."""
+
+    #: upper bound on the in-memory dictionary (≈60 MB of dict at
+    #: web-text term lengths). A dictionary is VOCABULARY-sized, not
+    #: corpus-sized — the same in-memory terms dict an ES data node keeps
+    #: per shard and the arrow reader loads — but Heaps' law at extreme
+    #: corpus sizes can push it past what a driver should pin, so past
+    #: this bound :meth:`dictionary` is None and callers use the
+    #: per-query pushdown collect.
+    DICT_MEMO_MAX_TERMS = 2_000_000
+
+    def __init__(self, tables, cache_postings: bool = False):
+        if cache_postings:
+            # pin the postings/dictionary tables in Spark's in-memory
+            # columnar cache — term fetches become memory scans (the ES
+            # analogue: segments in page cache)
+            tables.postings = tables.postings.cache()
+            tables.dictionary = tables.dictionary.cache()
+        self.tables = tables
+        # None = not loaded; False = probed and over DICT_MEMO_MAX_TERMS
+        self._dict: dict[str, int] | bool | None = None
+
+    def stats(self) -> tuple[int, float]:
+        row = self.tables.stats.collect()[0]
+        return int(row["n_docs"]), float(row["avgdl"])
+
+    def dictionary(self) -> dict[str, int] | None:
+        """term → df of the whole dictionary, loaded once — or None when
+        the vocabulary exceeds DICT_MEMO_MAX_TERMS. The probe is a
+        ``limit(MAX+1)`` collect, so an over-bound dictionary costs one
+        capped job, never a full materialization."""
+        if self._dict is None:
+            rows = (self.tables.dictionary.select("term", "df")
+                    .limit(self.DICT_MEMO_MAX_TERMS + 1).collect())
+            self._dict = (False if len(rows) > self.DICT_MEMO_MAX_TERMS
+                          else {r["term"]: int(r["df"]) for r in rows})
+        return self._dict if self._dict is not False else None
+
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """df per term: from the dictionary when it is loaded, else one
+        pushdown filter+collect of the terms' rows."""
+        if self._dict:
+            return {t: self._dict[t] for t in terms if t in self._dict}
+        return {r["term"]: int(r["df"]) for r in self.tables.dictionary
+                .filter(F.col("term").isin(terms))
+                .select("term", "df").collect()}
+
+    def postings(self, terms: list[str]) -> dict:
+        """Block rows for the terms as :func:`block_columns`, in ONE
+        Spark job: ``term IN (...)`` reaches the Parquet scan, and the
+        (shard, term, block_id) order is applied driver-side over the
+        few hundred collected rows (a Spark orderBy plans a
+        range-partitioned sort whose boundary-sampling pass is a second
+        job). The rows arrive as Arrow, so the block arrays are never
+        boxed."""
+        return block_columns(
+            self.tables.postings.filter(F.col("term").isin(terms)).toArrow())
+
+    def all_norms(self) -> dict[int, tuple[np.ndarray, np.ndarray,
+                                             np.ndarray]]:
+        """Norms for every shard from ONE Spark job (a per-shard filter
+        job scans the norms table n_shards times), split by
+        :func:`split_norms`."""
+        return split_norms(
+            self.tables.norms.select(*NORMS_COLUMNS).toArrow())
+
+    def term_positions(self, terms: list[str]
+                       ) -> dict[int, dict[str, np.ndarray]]:
+        """As :meth:`ArrowIndexReader.term_positions`, in one Spark job."""
+        if self.tables.positions is None:
+            raise ValueError(_NO_POSITIONS)
+        return _positions_by_doc(
+            self.tables.positions.filter(F.col("term").isin(terms))
+            .select("term", "doc_id", "positions").toArrow())

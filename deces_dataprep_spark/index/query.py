@@ -15,8 +15,8 @@ score (the engine's rank-identity contract):
   only the query terms' posting blocks are read (``term IN (...)``
   reaches the Parquet scan) and decoded in the JVM.
 * driver serve (:class:`QueryEngine`, ``*_serve``) — block-max WAND or
-  TAAT over the fetched postings on the driver, arrow reader or Spark
-  fetch; shard top-k merge is exact because df/N/avgdl are global.
+  TAAT over postings fetched through the engine's reader (arrow or
+  Spark); shard top-k merge is exact because df/N/avgdl are global.
 * DuckDB oracle (``duckdb_*_sql``) — an independent SQL text of the
   same answer; its text is fingerprinted and must stay byte-stable.
 
@@ -32,6 +32,7 @@ from __future__ import annotations
 import functools
 import operator
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +45,11 @@ from deces_dataprep_spark.index.wand import (
     topk_rounded,
     wand_topk,
 )
+
+
+#: a shard without norms rows (QueryEngine._shard_norms_np)
+_NO_NORMS = (np.empty(0, np.uint64), np.empty(0, np.float64),
+             np.empty(0, np.int64))
 
 
 def analyze_query(q: str) -> list[str]:
@@ -76,49 +82,32 @@ class QueryEngine:
 
     def __init__(self, tables: IndexTables, cache_postings: bool = False,
                  spark: SparkSession | None = None, io: str = "auto"):
-        """``io``: 'arrow' serves postings/norms/dictionary straight from
-        the snapshot's parquet files via pyarrow (no Spark job per query
-        — the ES-data-node analogue; requires manifest file lists, i.e.
-        an index from ``snapshots.load_index``); 'spark' always goes
-        through Spark scans; 'auto' picks arrow when available."""
+        """``io`` picks the reader every driver route reads through
+        (:func:`~deces_dataprep_spark.index.arrow_serve.open_reader`):
+        'arrow' serves postings/norms/dictionary straight from the
+        snapshot's parquet files via pyarrow (no Spark job per query —
+        the ES-data-node analogue; requires manifest file lists, i.e. an
+        index from ``snapshots.load_index``); 'spark' reads the tables'
+        DataFrames (pinned in Spark's cache with ``cache_postings``);
+        'auto' picks arrow when the file lists are known."""
+        from deces_dataprep_spark.index.arrow_serve import open_reader
+
         self.spark = spark
         self.tables = tables
-        self.reader = None
-        if io in ("auto", "arrow"):
-            from deces_dataprep_spark.index.arrow_serve import ArrowIndexReader
-
-            self.reader = ArrowIndexReader.maybe(tables.files)
-            if self.reader is None and io == "arrow":
-                raise ValueError(
-                    "io='arrow' needs manifest file lists "
-                    "(IndexTables.files from snapshots.load_index)")
-        if cache_postings and self.reader is None:
-            # Spark serving mode: pin the postings/dictionary tables in
-            # Spark's in-memory columnar cache — term fetches become
-            # memory scans (the ES analogue: segments in page cache).
-            self.tables.postings = tables.postings.cache()
-            self.tables.dictionary = tables.dictionary.cache()
-        if self.reader is not None:
-            self.n_docs, self.avgdl = self.reader.stats()
-        else:
-            row = tables.stats.collect()[0]
-            self.n_docs = int(row["n_docs"])
-            self.avgdl = float(row["avgdl"])
-        self._norms_cache: dict[int, dict[int, int]] = {}
-        self._norms_np_cache: dict[int, tuple] = {}
-        # shard -> docnums aligned with the _norms_np_cache arrays
-        self._docnums: dict = {}
+        self.reader = open_reader(tables, io, cache_postings)
+        self.n_docs, self.avgdl = self.reader.stats()
+        # reader.all_norms(), loaded on first use: one read fills every
+        # shard (_all_norms)
+        self._norms: dict[int, tuple] | None = None
+        # shard -> {doc_id: doc_len}, built from _norms per shard
+        self._doc_lens: dict[int, dict[int, float]] = {}
         # hot-term cache: term -> {shard -> TermPostings}; repeat queries
-        # and shared head terms skip the Spark scan entirely.
+        # and shared head terms skip the fetch entirely.
         self._term_cache: dict[str, dict[int, TermPostings]] = {}
         # term -> df memo (filled by postings fetches AND phrase
         # routing): repeat phrase() calls must not re-pay a dictionary
-        # collect just to decide their route.
+        # read just to decide their route.
         self._df_cache: dict[str, int] = {}
-        # full-dictionary df memo for the distributed/broadcast routes
-        # (loaded once on first use — see _dict_dfs); False = probed
-        # and found over DICT_MEMO_MAX_TERMS, don't retry
-        self._full_dfs: dict[str, int] | bool | None = None
 
     @property
     def session(self) -> SparkSession:
@@ -126,98 +115,25 @@ class QueryEngine:
         it was given, else the one its tables were loaded with."""
         return self.spark or self.tables.postings.sparkSession
 
-    #: upper bound on the term→df memo (≈60 MB of dict at web-text term
-    #: lengths). A dictionary is VOCABULARY-sized, not corpus-sized —
-    #: the same in-memory terms dict an ES data node keeps per shard and
-    #: our arrow tier already loads — but Heaps' law at extreme corpus
-    #: sizes can push it past what a driver should pin, so past this
-    #: bound the engine falls back to the per-query pushdown collect.
-    DICT_MEMO_MAX_TERMS = 2_000_000
+    def _shard_norms(self, shard: int) -> dict[int, float]:
+        """doc_id -> doc_len of one shard (WAND's per-doc lookup)."""
+        if shard not in self._doc_lens:
+            ids, dls, _ = self._shard_norms_np(shard)
+            self._doc_lens[shard] = dict(zip(ids.tolist(), dls.tolist()))
+        return self._doc_lens[shard]
 
-    def _dict_dfs(self) -> dict[str, int] | None:
-        """term → df for the whole dictionary, loaded once per engine —
-        or None when the vocabulary exceeds DICT_MEMO_MAX_TERMS.
-
-        The distributed/broadcast routes used to pay a dictionary
-        filter+collect Spark job PER QUERY just to fetch a handful of
-        df values; one bounded load serves every later query with zero
-        dictionary jobs. Values identical: same table, same rows. The
-        probe is a ``limit(MAX+1)`` collect, so an over-bound
-        dictionary costs one capped job, never a full materialization."""
-        if self._full_dfs is None:
-            if self.reader is not None:
-                # arrow tier: the reader keeps the dict in memory anyway
-                self._full_dfs = self.reader._dictionary()
-            else:
-                rows = (self.tables.dictionary.select("term", "df")
-                        .limit(self.DICT_MEMO_MAX_TERMS + 1).collect())
-                if len(rows) > self.DICT_MEMO_MAX_TERMS:
-                    self._full_dfs = False  # too big — don't memoize
-                else:
-                    self._full_dfs = {r["term"]: int(r["df"])
-                                      for r in rows}
-        return self._full_dfs if self._full_dfs is not False else None
-
-    def _shard_norms(self, shard: int) -> dict[int, int]:
-        if shard not in self._norms_cache:
-            ids, dls = self._shard_norms_np(shard)
-            self._norms_cache[shard] = dict(
-                zip(ids.tolist(), dls.tolist())
-            )
-        return self._norms_cache[shard]
+    def _all_norms(self) -> dict[int, tuple]:
+        """shard -> (doc_ids, doc_lens, docnums) of every shard."""
+        if self._norms is None:
+            self._norms = self.reader.all_norms()
+        return self._norms
 
     def _shard_norms_np(self, shard: int):
-        """(sorted doc_id uint64 array, aligned doc_len array) per shard;
-        the aligned docnums go to ``self._docnums``."""
-        if shard not in self._norms_np_cache:
-            import numpy as np
-
-            if self.reader is not None:
-                # ONE scan fills every shard (per-shard filter scans
-                # re-read the table n_shards times — see all_norms); the
-                # _norms_loaded flag stops a norms-less shard from
-                # re-triggering the scan (and from replacing the cached
-                # arrays, which would orphan the TAAT contribution memo)
-                if not getattr(self, "_norms_loaded", False):
-                    for s, (ids, dls, nums) in self.reader.all_norms().items():
-                        self._norms_np_cache[s] = (ids, dls)
-                        self._docnums[s] = nums
-                    self._norms_loaded = True
-            else:
-                # ONE scan fills every shard (mirrors the arrow route):
-                # a WAND/TAAT query touches all shards, and the former
-                # per-shard filter+toPandas ran n_shards separate Spark
-                # jobs each scanning the norms table — ~8× the cold-path
-                # norms cost (same _norms_loaded guard as above so a
-                # norms-less shard cannot re-trigger the scan).
-                if not getattr(self, "_norms_loaded", False):
-                    pdf = (
-                        self.tables.norms
-                        .select("shard", "doc_id", "doc_len", "docnum")
-                        .toPandas()
-                    )
-                    sh = pdf["shard"].to_numpy("int64")
-                    ids_all = pdf["doc_id"].to_numpy("int64").astype("uint64")
-                    dls_all = pdf["doc_len"].to_numpy("int64") \
-                        .astype("float64")
-                    nums_all = pdf["docnum"].to_numpy("int64")
-                    order = np.lexsort((ids_all, sh))
-                    sh, ids_all, dls_all, nums_all = sh[order], \
-                        ids_all[order], dls_all[order], nums_all[order]
-                    bounds = np.flatnonzero(
-                        np.concatenate(([True], sh[1:] != sh[:-1])))
-                    for b0, b1 in zip(bounds,
-                                      np.concatenate((bounds[1:],
-                                                      [sh.size]))):
-                        self._norms_np_cache[int(sh[b0])] = (
-                            ids_all[b0:b1], dls_all[b0:b1])
-                        self._docnums[int(sh[b0])] = nums_all[b0:b1]
-                    self._norms_loaded = True
-            if shard not in self._norms_np_cache:
-                self._norms_np_cache[shard] = (
-                    np.empty(0, "uint64"), np.empty(0, "float64"))
-                self._docnums[shard] = np.empty(0, "int64")
-        return self._norms_np_cache[shard]
+        """(sorted doc_id uint64, aligned doc_len float64, aligned docnum
+        int64) arrays of one shard; empty arrays for a shard without
+        norms (the same objects every call: the TAAT memo keys on
+        them)."""
+        return self._all_norms().get(shard, _NO_NORMS)
 
     def _doc_ids(self, shard: int, keys):
         """doc_ids (uint64) of one shard's decoded block keys — the
@@ -225,21 +141,19 @@ class QueryEngine:
         doc_id. The shard's docnums are sorted (docnum order is doc_id
         order, and a delta index's docnum is the doc_id itself), so one
         binary search finds every key's norms row."""
-        import numpy as np
-
-        ids, _ = self._shard_norms_np(shard)
+        ids, _, nums = self._shard_norms_np(shard)
         # int64 on both sides: a uint64/int64 search compares in float64
-        return ids[np.searchsorted(self._docnums[shard],
+        return ids[np.searchsorted(nums,
                                    np.asarray(keys, np.int64))]
 
     def _fetch_term_postings(self, terms: list[str]) -> dict[int, list[TermPostings]]:
         """Postings for the query terms, grouped by shard.
 
-        ``term IN (...)`` is pushed down to the Parquet scan when the
-        postings table is file-backed. Blocks store the idf-free
-        ``block_max_tfnorm`` (builder design: idf is a per-term
-        constant); the global df comes from the dictionary, and the
-        block-max score bound is reconstructed as ``idf(df) · tfnorm``.
+        The reader reads only the terms' blocks. Blocks store the
+        idf-free ``block_max_tfnorm`` (builder design: idf is a per-term
+        constant); the global df is the sum of the term's block
+        ``n_docs``, and the block-max score bound is reconstructed as
+        ``idf(df) · tfnorm``.
         Blocks are keyed by docnum: the keys, first_docs and last_docs
         are mapped to doc_ids through the shard's norms arrays
         (:meth:`_doc_ids`) before the TermPostings are built, so every
@@ -247,34 +161,13 @@ class QueryEngine:
         """
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
-            import numpy as np
-
-            from deces_dataprep_spark.index.arrow_serve import block_columns
-
-            if self.reader is not None:
-                dfs = self.reader.term_dfs(missing)
-                cols = self.reader.postings(missing)
-            else:
-                # ONE Spark job per fetch: df(term) is BY CONSTRUCTION
-                # the sum of the term's block n_docs across shards
-                # (dictionary_from_postings is exactly that aggregation
-                # — a doc lives in one shard), so the separate
-                # dictionary filter+collect job the cold path used to
-                # pay per query is derived from the posting rows
-                # instead (halves cold-query job count; values
-                # identical). The (shard, term, block_id) order the
-                # TermPostings construction needs is applied DRIVER-SIDE
-                # over the few hundred collected block rows — a Spark
-                # orderBy here planned a range-partitioned sort whose
-                # boundary-sampling pass is a SECOND job per cold query
-                # (measured ~2× the cold fetch cost). The rows arrive
-                # as Arrow, so the block arrays are never boxed.
-                cols = block_columns(
-                    self.tables.postings.filter(F.col("term").isin(missing))
-                    .toArrow())
-                dfs = {}
-                for t, n in zip(cols["term"], cols["n_docs"].tolist()):
-                    dfs[t] = dfs.get(t, 0) + n
+            # df(term) is BY CONSTRUCTION the sum of the term's block
+            # n_docs across shards (every dictionary is
+            # dictionary_from_postings — a doc lives in one shard)
+            cols = self.reader.postings(missing)
+            dfs = {}
+            for t, n in zip(cols["term"], cols["n_docs"].tolist()):
+                dfs[t] = dfs.get(t, 0) + n
             self._df_cache.update(dfs)
             fetched: dict[str, dict[int, TermPostings]] = {t: {} for t in missing}
             # zero-copy flat views of the block arrays; a (shard, term)
@@ -334,7 +227,7 @@ class QueryEngine:
             self.session, self.tables, query, k,
             n_docs=self.n_docs, avgdl=self.avgdl,  # cached — one job saved
             round_digits=6,
-            dfs=self._dict_dfs(),  # memoized — no dictionary job/query
+            dfs=self.reader.dictionary(),  # no dictionary job per query
         ).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
@@ -354,7 +247,7 @@ class QueryEngine:
             df = bm25_topk_broadcast(
                 self.session, self.tables, query, k,
                 n_docs=self.n_docs, avgdl=self.avgdl,
-                dfs=self._dict_dfs(),  # memoized — no dictionary job
+                dfs=self.reader.dictionary(),  # no dictionary job
             )
             rows = df.collect()
             bc = getattr(df, "_dds_broadcast", None)
@@ -384,7 +277,7 @@ class QueryEngine:
                 m = "taat" if (n_postings > self.TAAT_THRESHOLD
                                or not self.tables.trusted_bounds) else "wand"
             if m == "taat":
-                ids, dls = self._shard_norms_np(shard)
+                ids, dls, _ = self._shard_norms_np(shard)
                 merged.extend(
                     taat_topk(tps, self.n_docs, self.avgdl, ids, dls, k)
                 )
@@ -406,10 +299,10 @@ class QueryEngine:
         """ES ``match_phrase`` through the serving tier. Two routes,
         rank/set-identical (tested):
 
-        * driver fold — fetch the phrase terms' position rows (arrow
-          reader when available, Spark positional-index path otherwise)
-          and run the adjacency fold in numpy. Right for SELECTIVE
-          phrases: positions are a few KB per matching doc.
+        * driver fold — fetch the phrase terms' position rows through
+          the engine's reader and run the adjacency fold in numpy.
+          Right for SELECTIVE phrases: positions are a few KB per
+          matching doc.
         * distributed (:func:`positions.phrase_match_from_index`) —
           pushdown-fetch + per-doc join + adjacency fold as one Spark
           plan; only matching doc_ids reach the driver. ``auto`` takes
@@ -420,8 +313,6 @@ class QueryEngine:
           exact failure mode ``search()``'s routing already avoids).
 
         Returns sorted matching doc_ids."""
-        import numpy as np
-
         terms = tokenize_text(phrase)
         if not terms:
             return []
@@ -433,15 +324,7 @@ class QueryEngine:
                 need = sorted(set(terms))
                 miss = [t for t in need if t not in self._df_cache]
                 if miss:
-                    if self.reader is not None:
-                        self._df_cache.update(self.reader.term_dfs(miss))
-                    else:
-                        self._df_cache.update({
-                            r["term"]: int(r["df"])
-                            for r in self.tables.dictionary.filter(
-                                F.col("term").isin(miss)
-                            ).select("term", "df").collect()
-                        })
+                    self._df_cache.update(self.reader.term_dfs(miss))
                     # absent terms have df 0 — memoize the absence too
                     for t in miss:
                         self._df_cache.setdefault(t, 0)
@@ -459,19 +342,7 @@ class QueryEngine:
             rows = phrase_match_from_index(
                 self.session, self.tables.positions, phrase).collect()
             return sorted(int(r["doc_id"]) for r in rows)
-        if self.reader is not None:
-            by_doc = self.reader.term_positions(list(set(terms)))
-        else:
-            if self.tables.positions is None:
-                raise ValueError("index has no positions table "
-                                 "(write_index(with_positions=True))")
-            rows = self.tables.positions.filter(
-                F.col("term").isin(list(set(terms)))
-            ).select("term", "doc_id", "positions").collect()
-            by_doc = {}
-            for r in rows:
-                by_doc.setdefault(int(r["doc_id"]), {})[r["term"]] = \
-                    np.asarray(r["positions"], np.int64)
+        by_doc = self.reader.term_positions(list(set(terms)))
         out = []
         for doc, pos_map in by_doc.items():
             if any(t not in pos_map for t in terms):
@@ -511,7 +382,7 @@ class QueryEngine:
                 self.session, self.tables, query, k,
                 n_docs=self.n_docs, avgdl=self.avgdl, round_digits=6,
                 after_score=round(a_score, 6), after_doc_id=a_doc,
-                dfs=self._dict_dfs(),  # memoized — no dictionary job
+                dfs=self.reader.dictionary(),  # no dictionary job
             ).collect()
             return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
@@ -550,7 +421,7 @@ class QueryEngine:
                      ) -> list[tuple[int, float]]:
         """ES ``simple_query_string`` through the serving tier — the
         search-box endpoint. Driver-side set algebra + numpy BM25 over
-        the arrow reader's postings below
+        the reader's postings below
         ``DISTRIBUTED_CORPUS_THRESHOLD``; the distributed index plan
         (:func:`querystring.query_string_topk_from_index`) above it.
         Rank-identical to the scan compile (tested)."""
@@ -600,10 +471,10 @@ def bm25_topk_from_index(
 
 def _resolve_dfs(tables: IndexTables, terms: list,
                  dfs: dict | None) -> dict:
-    """df per query term: restrict a caller-supplied full-dictionary
-    memo (QueryEngine._dict_dfs) to the query's terms, or fall back to
-    the per-query pushdown filter+collect — identical values either
-    way; the memo path just costs zero Spark jobs."""
+    """df per query term: restrict a caller-supplied full dictionary
+    (``QueryEngine.reader.dictionary()``) to the query's terms, or fall
+    back to the per-query pushdown filter+collect — identical values
+    either way; the in-memory path just costs zero Spark jobs."""
     if dfs is None:
         return {
             r["term"]: int(r["df"])
@@ -812,7 +683,7 @@ def multi_match_serve(
     for _fld, (eng, boost) in field_engines.items():
         by_shard = eng._fetch_term_postings(terms)
         for shard, tps in by_shard.items():
-            ids, dls = eng._shard_norms_np(shard)
+            ids, dls, _ = eng._shard_norms_np(shard)
             if ids.size == 0:
                 continue
             from deces_dataprep_spark.index.wand import taat_scores
@@ -1121,7 +992,7 @@ def cross_fields_serve(
     tks, dks, cks = [], [], []
     for eng, boost, by_shard in fetched:
         for shard, tps in by_shard.items():
-            norm_ids, norm_dls = eng._shard_norms_np(shard)
+            norm_ids, norm_dls, _ = eng._shard_norms_np(shard)
             if norm_ids.size == 0:
                 continue
             for tp in tps:
@@ -1576,8 +1447,15 @@ class _IndexSource(_Source):
         super().__init__(spark, docs, id_col)
         self.tables = tables
 
+    @functools.cached_property
+    def _stats(self) -> tuple[int, float]:
+        # (n_docs, avgdl), read once: a body may score several term sets
+        row = self.tables.stats.collect()[0]
+        return int(row["n_docs"]), float(row["avgdl"])
+
     def scores(self, terms, round_digits=None):
-        out = bm25_scores_from_index(self.spark, self.tables, terms)
+        out = bm25_scores_from_index(self.spark, self.tables, terms,
+                                     *self._stats)
         if round_digits is not None:
             out = out.withColumn("score", F.round("score", round_digits))
         return out
@@ -2450,18 +2328,13 @@ def suggest_completion_serve(
 ) -> list[tuple[str, int]]:
     """The serving twin of :func:`suggest_completion`: ONE searchsorted
     prefix window on the engine's sorted vocab index (O(log V)), df
-    lookups from the arrow dictionary — zero Spark jobs, the latency
-    class an autocomplete endpoint needs. Result-identical to the
-    Spark route (tested). Falls back to the Spark plan when the engine
-    has no arrow reader."""
+    lookups from the reader's in-memory dictionary — zero Spark jobs
+    once it is loaded, the latency class an autocomplete endpoint
+    needs. Result-identical to the Spark route (tested)."""
     from deces_dataprep_spark.functions.analyze import normalize_text
     from deces_dataprep_spark.index.querystring import _vocab_index
 
     p = normalize_text(prefix)
-    if engine.reader is None:
-        return [(r["term"], int(r["df"])) for r in
-                suggest_completion(engine.session, engine.tables, p,
-                                   k).collect()]
     terms = _vocab_index(engine).prefix(p)
     dfs = engine.reader.term_dfs(terms)
     ranked = sorted(((t, int(dfs.get(t, 0))) for t in terms),
@@ -2572,7 +2445,7 @@ def explain_score_serve(
     out = []
     target = np.uint64(doc_id)
     for shard, tps in by_shard.items():
-        norm_ids, norm_dls = engine._shard_norms_np(shard)
+        norm_ids, norm_dls, _ = engine._shard_norms_np(shard)
         if norm_ids.size == 0:
             continue
         pos = int(np.searchsorted(norm_ids, target))
@@ -2705,7 +2578,7 @@ def boolean_topk_from_index(
     should: list[str] | None = None,
     must_not: list[str] | None = None,
     k: int = 10,
-    round_digits: int | None = None,
+    round_digits: int | None = 6,
     filter_docs: DataFrame | None = None,
     filters: list["F.Column"] | None = None,
     minimum_should_match: int = 0,
@@ -4299,9 +4172,9 @@ def suggest_phrase(
     per slot — N sequential jobs per suggestion call), then a
     driver-side product bounded by ``candidates_per_term ** n_terms``
     — both knobs are small by contract (ES's own gram_size/candidate
-    caps). Pass ``engine=`` (with an arrow reader) to serve entirely
-    from the in-memory dictionary: zero Spark jobs, same result
-    (tested identical)."""
+    caps). Pass ``engine=`` to serve from its reader's in-memory
+    dictionary: zero Spark jobs once it is loaded, same result (tested
+    identical)."""
     import math
 
     from deces_dataprep_spark.functions.analyze import normalize_text
@@ -4315,17 +4188,17 @@ def suggest_phrase(
         n_docs = int(tables.stats.collect()[0]["n_docs"])
     qs = [normalize_text(t) for t in terms]
 
-    if engine is not None and engine.reader is not None:
-        # serving tier: the arrow dictionary is already in memory —
-        # expand every slot from the sorted vocab index (length
-        # buckets + early-exit distance), ZERO Spark jobs
+    dfs_all = engine.reader.dictionary() if engine is not None else None
+    if dfs_all is not None:
+        # serving tier: the dictionary is in memory — expand every slot
+        # from the sorted vocab index (length buckets + early-exit
+        # distance), ZERO Spark jobs
         from deces_dataprep_spark.index.querystring import (
             _lev_dist,
             _vocab_index,
         )
 
         vi = _vocab_index(engine)
-        dfs_all = engine.reader._dictionary()
         slot_cands = []
         for q in qs:
             cands = [t for t in vi.fuzzy(q, max_edits) if t != q]

@@ -667,13 +667,15 @@ def _lev_within(a: str, b: str, k: int,
 
 
 def _vocab_terms(engine) -> list[str]:
-    """The index vocabulary, driver-side: free from the arrow reader's
-    in-memory dictionary, one term-column collect otherwise
-    (vocabulary-sized, never corpus-sized)."""
-    if engine.reader is not None:
-        return list(engine.reader._dictionary())
-    return [r["term"]
-            for r in engine.tables.dictionary.select("term").collect()]
+    """The index vocabulary, driver-side: the engine reader's in-memory
+    dictionary (vocabulary-sized, never corpus-sized)."""
+    d = engine.reader.dictionary()
+    if d is None:
+        raise ValueError(
+            "the dictionary exceeds SparkIndexReader.DICT_MEMO_MAX_TERMS: "
+            "expand vocabulary terms on the arrow reader "
+            "(snapshots.load_index) or with the *_from_index plans")
+    return list(d)
 
 
 def _lev_dist(a: str, b: str, k: int,
@@ -818,7 +820,7 @@ def query_string_serve(
 ) -> list[tuple[int, float]]:
     """simple_query_string through the SERVING tier (the ES search-box
     endpoint): everything happens driver-side in numpy/sets over the
-    arrow reader's (or Spark-collected) postings — no Spark job for
+    postings the engine's reader fetches — no Spark job for
     selective queries on a served snapshot. Rank-identical to the scan
     and distributed-index routes (tested).
 
@@ -831,7 +833,7 @@ def query_string_serve(
     driver fold is adjacency-only by design.
 
     Cost on the driver route: dictionary membership for prefix/fuzzy
-    expansion (vocabulary-sized, in-memory with the arrow reader),
+    expansion (vocabulary-sized, the reader's in-memory dictionary),
     one postings fetch per distinct term (engine term cache applies),
     set algebra for the tree, and the standard numpy BM25 fold.
     """
@@ -936,16 +938,9 @@ def query_string_serve(
         cached = getattr(engine, "_qs_universe", None)
         if cached is not None:
             return cached
-        if engine.reader is not None:
-            engine._shard_norms_np(0)  # one scan fills every shard
-            universe = np.unique(np.concatenate(
-                [ids.astype(np.int64)
-                 for ids, _dls in engine._norms_np_cache.values()]))
-        else:
-            universe = np.unique(np.asarray(
-                [int(r["doc_id"]) for r in
-                 engine.tables.norms.select("doc_id").collect()],
-                dtype=np.int64))
+        universe = np.unique(np.concatenate(
+            [np.empty(0, np.int64)] + [ids.astype(np.int64) for ids, _, _
+                                       in engine._all_norms().values()]))
         engine._qs_universe = universe
         return universe
 
@@ -995,7 +990,7 @@ def query_string_serve(
             parts_i, parts_c = [], []
             for shard, tp in engine._term_cache.get(t, {}).items():
                 ids, tfs = decode_term_arrays(tp)
-                norm_ids, dls = engine._shard_norms_np(shard)
+                norm_ids, dls, _ = engine._shard_norms_np(shard)
                 pos = np.searchsorted(norm_ids, ids.astype(np.uint64))
                 parts_i.append(ids.astype(np.int64))
                 parts_c.append(bm25.bm25_score(

@@ -1,6 +1,9 @@
-"""The serving reader (index.arrow_serve): its parallel per-file fetch
-returns exactly the block rows of a plain whole-file read, on every
-postings layout, and shares one bounded thread pool across engines."""
+"""The serving readers (index.arrow_serve): the arrow reader's parallel
+per-file fetch returns exactly the block rows of a plain whole-file
+read, on every postings layout, and shares one bounded thread pool
+across engines; the arrow and Spark readers give equal outputs for
+every method of the reader interface; and the Spark jobs a driver
+route launches are pinned per reader."""
 
 import re
 import threading
@@ -13,6 +16,7 @@ import pytest
 
 from deces_dataprep_spark.index.arrow_serve import (
     ArrowIndexReader,
+    SparkIndexReader,
     block_columns,
 )
 from deces_dataprep_spark.session import usable_cores
@@ -158,3 +162,144 @@ def test_concurrent_fetches_share_one_reader(layouts):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors[0]
+
+
+@pytest.fixture(scope="module")
+def served(spark, documents, tmp_path_factory):
+    """load_index tables of two snapshots of the sf0.001 corpus, 2
+    shards, with positions: the write_index build, and the same build
+    after optimize_postings (several files and row groups per shard)."""
+    from deces_dataprep_spark.snapshots import (
+        load_index,
+        optimize_postings,
+        write_index,
+    )
+
+    wh = str(tmp_path_factory.mktemp("served") / "wh")
+    write_index(spark, documents, wh, n_shards=2, with_positions=True)
+    out = {"write_index": load_index(spark, wh)}
+    optimize_postings(spark, wh, files_per_shard=3,
+                      row_group_bytes=16 << 10)
+    out["optimize_postings"] = load_index(spark, wh)
+    assert len(out["optimize_postings"].files["postings"]) > 2
+    return out
+
+
+def _same(got, want) -> None:
+    """Equal reader outputs: numpy arrays by dtype and value, Arrow list
+    arrays by element type and value (a Spark collect marks list
+    elements nullable, a Parquet read of the same column does not),
+    containers element by element."""
+    if isinstance(want, dict):
+        assert got.keys() == want.keys()
+        for key in want:
+            _same(got[key], want[key])
+    elif isinstance(want, tuple):
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            _same(g, w)
+    elif isinstance(want, np.ndarray):
+        assert got.dtype == want.dtype
+        np.testing.assert_array_equal(got, want)
+    elif isinstance(want, pa.Array):
+        assert got.type.value_type == want.type.value_type
+        assert got.to_pylist() == want.to_pylist()
+    else:
+        assert got == want
+
+
+READER_CALLS = {
+    "stats": lambda r: r.stats(),
+    "dictionary": lambda r: r.dictionary(),
+    "term_dfs": lambda r: r.term_dfs(["table", "merge", "zz-not-a-term"]),
+    "postings": lambda r: r.postings(["the", "table", "merge", "sort"]),
+    "postings_absent_term": lambda r: r.postings(["zz-not-a-term"]),
+    "all_norms": lambda r: r.all_norms(),
+    "term_positions": lambda r: r.term_positions(["merge", "sort",
+                                                  "zz-not-a-term"]),
+}
+
+
+@pytest.mark.parametrize("call", sorted(READER_CALLS))
+@pytest.mark.parametrize("layout", ["write_index", "optimize_postings"])
+def test_readers_give_equal_outputs(served, layout, call):
+    tables = served[layout]
+    arrow = ArrowIndexReader(tables.files)
+    spark_reader = SparkIndexReader(tables)
+    want = READER_CALLS[call](arrow)
+    _same(READER_CALLS[call](spark_reader), want)
+    if call.startswith("postings"):
+        assert bool(len(want["term"])) == (call == "postings")
+    else:
+        assert want
+
+
+def test_io_value_is_checked(served):
+    from deces_dataprep_spark.index.query import QueryEngine
+
+    with pytest.raises(ValueError, match="io must be one of"):
+        QueryEngine(served["write_index"], io="arow")
+
+
+def _jobs(spark, group: str, run) -> int:
+    """Spark jobs ``run`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("io,reader,want", [
+    ("spark", SparkIndexReader, [1, 2, 1, 0, 1]),
+    ("arrow", ArrowIndexReader, [0, 0, 0, 0, 0]),
+])
+def test_driver_route_job_counts(spark, served, io, reader, want):
+    """Spark jobs per engine step: construction (stats), a first search
+    (postings fetch, then the norms of every shard), a search with new
+    terms (fetch), a repeated search (term cache) and a phrase whose
+    terms were searched (positions). The arrow reader launches none."""
+    from deces_dataprep_spark.index.query import QueryEngine
+
+    tables = served["write_index"]
+    box = {}
+
+    def construct():
+        box["engine"] = QueryEngine(tables, io=io, spark=spark)
+
+    steps = [
+        construct,
+        lambda: box["engine"].search("table row scan", k=10),
+        lambda: box["engine"].search("merge sort", k=10),
+        lambda: box["engine"].search("merge sort", k=10),
+        lambda: box["engine"].phrase("merge sort"),
+    ]
+    got = [_jobs(spark, f"pin-{io}-{i}", step)
+           for i, step in enumerate(steps)]
+    assert isinstance(box["engine"].reader, reader)
+    assert got == want
+
+
+def test_spark_dictionary_past_its_bound_is_not_loaded(spark, served,
+                                                       monkeypatch):
+    """Past DICT_MEMO_MAX_TERMS the Spark reader loads no dictionary:
+    df lookups and the distributed route collect only the query's rows,
+    and a driver-side vocabulary expansion refuses."""
+    from deces_dataprep_spark.index.query import QueryEngine
+    from deces_dataprep_spark.index.querystring import _vocab_terms
+
+    tables = served["write_index"]
+    arrow = QueryEngine(tables, io="arrow", spark=spark)
+    monkeypatch.setattr(SparkIndexReader, "DICT_MEMO_MAX_TERMS", 3)
+    eng = QueryEngine(tables, io="spark", spark=spark)
+    assert eng.reader.dictionary() is None
+    terms = ["table", "merge", "zz-not-a-term"]
+    assert eng.reader.term_dfs(terms) == arrow.reader.term_dfs(terms)
+    assert (eng.search("table row", k=5, method="distributed")
+            == arrow.search("table row", k=5, method="distributed"))
+    with pytest.raises(ValueError, match="DICT_MEMO_MAX_TERMS"):
+        _vocab_terms(eng)

@@ -4,6 +4,10 @@ and DuckDB-oracle agreement."""
 import duckdb
 import pytest
 
+from deces_dataprep_spark.index.arrow_serve import (
+    ArrowIndexReader,
+    SparkIndexReader,
+)
 from deces_dataprep_spark.index.querystring import (
     duckdb_query_string_sql,
     parse_query_string,
@@ -247,7 +251,8 @@ def test_serve_route_rank_identity(spark, documents, qs_index):
     from deces_dataprep_spark.index.query import QueryEngine
 
     eng = QueryEngine(qs_index, spark=spark)
-    assert eng.reader is not None  # snapshot manifest → arrow serving
+    # snapshot manifest → arrow serving
+    assert isinstance(eng.reader, ArrowIndexReader)
     queries = [
         ('data +(spark | index) -"slow scan" quer*', 1),
         ("data spark", 1),
@@ -267,7 +272,7 @@ def test_serve_route_rank_identity(spark, documents, qs_index):
 
 
 def test_serve_route_spark_io(spark, documents, qs_index):
-    """The same serving contract holds with io='spark' (no arrow
+    """The same serving contract holds with io='spark' (the Spark
     reader — postings/dictionary/norms via Spark collects)."""
     from dataclasses import replace
 
@@ -275,7 +280,7 @@ def test_serve_route_spark_io(spark, documents, qs_index):
 
     eng = QueryEngine(replace(qs_index, files=None), spark=spark,
                       io="spark")
-    assert eng.reader is None
+    assert isinstance(eng.reader, SparkIndexReader)
     q = "data +spark quer*"
     want = [(r["doc_id"], r["score"]) for r in query_string_topk_df(
         spark, documents, q, k=10, round_digits=6).collect()]

@@ -5,6 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from deces_dataprep_spark.functions.text import repetition_features
+from deces_dataprep_spark.index.arrow_serve import (
+    ArrowIndexReader,
+    SparkIndexReader,
+)
 from deces_dataprep_spark.index.highlight import highlight_df
 from deces_dataprep_spark.index.query import (
     QueryEngine,
@@ -253,7 +257,8 @@ def test_arrow_engine_rank_identical_to_spark_engine(spark, arrow_warehouse):
     eng_arrow = QueryEngine(tables, io="arrow", spark=spark)
     eng_spark = QueryEngine(load_index(spark, arrow_warehouse), io="spark",
                             spark=spark)
-    assert eng_arrow.reader is not None and eng_spark.reader is None
+    assert isinstance(eng_arrow.reader, ArrowIndexReader)
+    assert isinstance(eng_spark.reader, SparkIndexReader)
     assert eng_arrow.n_docs == eng_spark.n_docs
     assert eng_arrow.avgdl == pytest.approx(eng_spark.avgdl)
     for q in ("table row scan", "stream batch", "nosuchterm", "a the value"):

@@ -9,6 +9,10 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from deces_dataprep_spark.index.arrow_serve import (
+    ArrowIndexReader,
+    SparkIndexReader,
+)
 from deces_dataprep_spark.index.builder import build_index
 from deces_dataprep_spark.index.query import (
     QueryEngine,
@@ -38,7 +42,7 @@ def arrow_engine(spark, documents, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("r5_wh") / "wh")
     write_index(spark, documents, wh, n_shards=2, resume=False)
     eng = QueryEngine(load_index(spark, wh), spark=spark)
-    assert eng.reader is not None
+    assert isinstance(eng.reader, ArrowIndexReader)
     return eng
 
 
@@ -130,7 +134,7 @@ def test_suggest_completion_serve_identical(spark, arrow_engine):
 
 def test_suggest_completion_serve_spark_fallback(spark, tables):
     eng = QueryEngine(tables, spark=spark, io="spark")
-    assert eng.reader is None
+    assert isinstance(eng.reader, SparkIndexReader)
     want = [(r["term"], int(r["df"])) for r in suggest_completion(
         spark, tables, "ta", k=5).collect()]
     assert suggest_completion_serve(eng, "ta", k=5) == want

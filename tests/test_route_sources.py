@@ -104,3 +104,35 @@ def test_composite_cursor_length_checked_on_both_routes(spark, dated_docs,
     with pytest.raises(ValueError, match="after cursor"):
         Q.composite_agg_from_index(spark, tables, dated_docs, "table row",
                                    sources, after=after)
+
+
+def test_boolean_default_output_same_on_both_routes(spark, dated_docs,
+                                                    tables):
+    """Both bool routes round to 6 digits by default, so their default
+    outputs are equal row for row."""
+    scan_fn, index_fn = PAIRS["boolean"]
+    rows = [tuple(r) for r in
+            scan_fn(spark, dated_docs, tables, "table row").collect()]
+    assert rows
+    assert rows == [tuple(r) for r in
+                    index_fn(spark, dated_docs, tables, "table row").collect()]
+
+
+def test_index_source_reads_stats_once(spark, documents, tmp_path):
+    """Planning rescore_topk_from_index on a loaded index reads the
+    one-row stats table once for both scored term sets: 3 Spark jobs
+    (stats, and each term set's dictionary rows)."""
+    from deces_dataprep_spark.snapshots import load_index, write_index
+
+    wh = str(tmp_path / "wh")
+    write_index(spark, documents, wh, n_shards=2)
+    loaded = load_index(spark, wh)
+    sc = spark.sparkContext
+    sc.setJobGroup("rescore-plan", "rescore_topk_from_index planning")
+    try:
+        Q.rescore_topk_from_index(spark, loaded, "table row", "merge")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("rescore-plan")) == 3
